@@ -1,58 +1,30 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** SPARK_GRAFT_BOARD=smoke: the per-family smoke board — one or two
+    * headline queries per §2 family (~20 queries, ~60 s) so a round can
+    * gate on a fast signal without running the full 250+-query board
+    * (which keeps growing with every added query). The full board stays
+    * the committed artifact; the smoke board is the iteration loop. */
+  val smokeBoard: Set[String] = Set(
+    "agg1", "join2", "win1", "srt1", "pvt1",              // relational core
+    "ddp_minhash", "ddp_ngram", "sim1_ivf", "ddp_exact",  // dedup / ANN
+    "ivf_pq",                                             // composed IVFADC
+    "txt_quality", "bpe_train", "tfidf1",                 // text / tokenizer
+    "funnel", "ivl_merge", "cdc_apply", "rate_audit",     // events
+    "drift_ks", "auc_roc", "corr_matrix",                 // stats / eval
+    "graph_triangles", "skyline", "ewma",                 // analytics
+    "ingest_csv", "snap_read", "mm2_decode")              // io / snapshot / mm
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Partitioning strategy: AQE owns the post-shuffle partition count —
-    // start from an over-partitioned initial number (4× cores here; on a
-    // real cluster a few× total executor cores) and let
-    // coalescePartitions shrink it per-stage from runtime statistics.
-    // Pinning spark.sql.shuffle.partitions itself is the wrong knob to
-    // carry to a 1000-executor cluster.
-    val spark = SparkSession.builder()
-      // Same extension registration as TestSpark: GraftStrategy must be
-      // present to plan the seq_spine custom leaf (and graft_* SQL names).
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toInt * 4)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", cpus.toInt * 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // STATIC conf, default 100: the whole-stage-codegen class cache.
-      // A 140+-query board generates ~1000 distinct codegen classes, so
-      // at the default size every best-of-2 rerun has been fully evicted
-      // and pays Janino compilation again — which is why a rerun inside
-      // the board stayed at its first-sample time while the same query's
-      // second iteration in a fresh 1-query JVM dropped 2x. Long-running
-      // drivers serving many distinct queries want the same bump at
-      // cluster scale.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // Full-plan action: the noop sink consumes every output row, so Catalyst
     // cannot prune projections or drop final sorts the way it can under
     // count() — timings reflect the plan a real sink would pay for.
     val failed = scala.collection.mutable.ListBuffer[String]()
     // Optional comma-separated query-name filter for focused local iteration.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    // SPARK_GRAFT_BOARD=smoke: the per-family smoke board — one or two
-    // headline queries per §2 family (~20 queries, ~60 s) so a round can
-    // gate on a fast signal without running the full 250+-query board
-    // (which keeps growing with every added query). The full board stays
-    // the committed artifact; the smoke board is the iteration loop.
-    val smokeBoard: Set[String] = Set(
-      "agg1", "join2", "win1", "srt1", "pvt1",              // relational core
-      "ddp_minhash", "ddp_ngram", "sim1_ivf", "ddp_exact",  // dedup / ANN
-      "ivf_pq",                                             // composed IVFADC
-      "txt_quality", "bpe_train", "tfidf1",                 // text / tokenizer
-      "funnel", "ivl_merge", "cdc_apply", "rate_audit",     // events
-      "drift_ks", "auc_roc", "corr_matrix",                 // stats / eval
-      "graph_triangles", "skyline", "ewma",                 // analytics
-      "ingest_csv", "snap_read", "mm2_decode")              // io / snapshot / mm
     val board = sys.env.get("SPARK_GRAFT_BOARD") match {
       case Some("smoke") => Some(smokeBoard)
       case _             => None
@@ -98,10 +70,7 @@ object Bench {
     val fullBoard = only.isEmpty && board.isEmpty
     val builds = scala.collection.mutable.LinkedHashMap[String, Double]()
     if (fullBoard || sys.env.contains("SPARK_GRAFT_PREBUILD")) {
-      val all = graft.queries.Relational.prebuilds ++
-        graft.queries.Events.prebuilds ++ graft.queries.Ingestion.prebuilds ++
-        graft.queries.Pruning.prebuilds ++ graft.queries.LlmOps.prebuilds
-      all.foreach { case (name, force) =>
+      SparkEntry.prebuilds.foreach { case (name, force) =>
         val t0 = System.nanoTime()
         try {
           force(spark, sfDir)
@@ -114,9 +83,7 @@ object Bench {
       }
       // Same epilogue as a measurement: whatever the builds cached or
       // checkpointed must not ride into the first timed query.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      GraftSession.release(spark)
       System.gc()
     }
     // Machine-regime SENTINEL (r12 verdict task 4): one tiny FIXED-SHAPE
@@ -150,9 +117,7 @@ object Bench {
           System.err.println(s"[bench] sentinel probe FAILED: ${t.getMessage}")
           -1.0
         }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      GraftSession.release(spark)
       System.gc()
       e
     }
@@ -191,20 +156,10 @@ object Bench {
       // Timing stops BEFORE cache cleanup so unpersisting one query's
       // intermediates is never billed to it (or its successor).
       val elapsed = (System.nanoTime() - t0) / 1e9
-      // Queries may persist() intermediates (e.g. minhash band tables);
-      // drop them so measurements stay independent across queries.
-      spark.catalog.clearCache()
-      // clearCache() does NOT reach localCheckpoint blocks (they are not
-      // catalog entries). They ARE registered persistent RDDs, so drop
-      // them synchronously — blocking unpersist frees the block-manager
-      // memory NOW, unlike the previous System.gc() approach, which only
-      // enqueued cleanup for the ASYNC ContextCleaner and left late-board
-      // queries to run against however many predecessors' checkpoint
-      // blocks the cleaner hadn't reached yet (measured: resample 13.3 s
-      // late in the board vs 5.9 s steady in a fresh JVM; mid-board
-      // heavies still ran up to 2x steady with gc alone).
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      // Drop what the query cached or checkpointed so measurements stay
+      // independent (without the blocking drop: resample 13.3 s late in the
+      // board vs 5.9 s steady in a fresh JVM).
+      GraftSession.release(spark)
       // GC still helps: codegen classes and broadcast refs go through
       // weak/soft reference queues the block drop above does not touch.
       System.gc()

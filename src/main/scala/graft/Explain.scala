@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: print the formatted physical plan of one or more queries —
   * `runMain graft.Explain <sfDir> <query> [query ...]`. Used to audit
@@ -13,20 +12,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val wantFinal = sys.env.get("SPARK_GRAFT_FINAL").contains("1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      // Same extension registration as TestSpark: GraftStrategy must be
-      // present to plan the seq_spine custom leaf (and graft_* SQL names).
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toInt * 4)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", cpus.toInt * 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     args.tail.foreach { name =>
       println(s"========== $name ==========")
       val df = SparkEntry.queries(name)(spark, sfDir)

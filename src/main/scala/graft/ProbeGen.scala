@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-probe corpus generator (dev tool, not part of the driver contract,
@@ -58,19 +58,7 @@ object ProbeGen {
     // failing fast like the len-target check above (ADVICE r12).
     require(factor > 0 && factor <= Int.MaxValue,
       s"fan factor must be in [1, ${Int.MaxValue}] (got $factor)")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      // Same extension registration as TestSpark: GraftStrategy must be
-      // present to plan the seq_spine custom leaf (and graft_* SQL names).
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toInt * 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // Offset far beyond any base key so replica key ranges never collide.
     val off = 1000000000L
     // Repartition before write: the sf sources are single parquet files,

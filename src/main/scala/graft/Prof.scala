@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Steady-state query timer (dev tool, not part of the driver contract):
   * `SPARK_GRAFT_PROF=q1,q2 sbt "runMain graft.Prof"` runs each named
   * query 3x with a noop write in one session, so codegen/AQE warmup is
@@ -9,28 +7,12 @@ import org.apache.spark.sql.SparkSession
 object Prof {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // SPARK_GRAFT_CONF="k=v;k2=v2": extra session confs for A/B plan
     // experiments (e.g. toggling AQE coalescing) without editing code.
     val extra = sys.env.get("SPARK_GRAFT_CONF").toSeq
       .flatMap(_.split(";")).map(_.trim).filter(_.nonEmpty)
       .map { kv => val Array(k, v) = kv.split("=", 2); (k, v) }
-    val builder = SparkSession.builder()
-      // Same extension registration as TestSpark: GraftStrategy must be
-      // present to plan the seq_spine custom leaf (and graft_* SQL names).
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toInt * 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Match Bench: codegen class cache sized for a many-query session
-      // (static conf, default 100 entries).
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    val spark = extra.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(extra = extra)
     val names = sys.env.get("SPARK_GRAFT_PROF").map(_.split(",").toSeq)
       .getOrElse(args.toSeq)
     // SPARK_GRAFT_COUNT=1: also report the output row count once per query
@@ -91,11 +73,9 @@ object Prof {
         System.err.println(f"[prof] $name #$i $wall%8.2f s" + (
           if (wantJobs) f" jobs=${jobCount.get()}%3d jobTime=${jobNanos.get() / 1e9}%6.2f gap=${wall - jobNanos.get() / 1e9}%6.2f"
           else ""))
-        spark.catalog.clearCache()
-        // Same untimed cleanup as Bench: synchronously drop localCheckpoint
-        // blocks so iterations measure the query, not predecessors' leftovers.
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
+        // Same untimed cleanup as Bench, so iterations measure the query,
+        // not predecessors' leftovers.
+        GraftSession.release(spark)
       }
       if (wantCount) {
         System.err.println(s"[prof] $name rows=${SparkEntry.queries(name)(spark, sfDir).count()}")

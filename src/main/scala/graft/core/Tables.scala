@@ -126,6 +126,20 @@ object Tables {
   def ordered(df: DataFrame): DataFrame =
     df.orderBy(df.columns.map(c => col(c).asc_nulls_first).toIndexedSeq: _*)
 
+  /** Hash-repartition by `key, more*` at an explicit 2× defaultParallelism
+    * (which scales with executors on a cluster). Two uses:
+    *   - spread a narrow scan across cores before an expensive per-row
+    *     projection: the documents table is one parquet split at test
+    *     scale, so shingling/hashing otherwise runs at scan parallelism 1;
+    *   - keep an exchange wide that AQE would coalesce to its tiny INPUT
+    *     byte size when the downstream join or window fans out (the
+    *     §4.4.3 narrow-probe trap); AQE respects a user-specified count.
+    * At real corpus scale the scan has thousands of splits and this
+    * exchange is a no-op cost relative to the pipeline. */
+  def spread(df: DataFrame, key: String, more: String*): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism * 2,
+      (key +: more).map(col): _*)
+
   /** Eager local checkpoint at SERIALIZED storage — the canonical way every
     * query materializes a multiply-read intermediate (posting tables,
     * signature tables, iteration state).

@@ -11,8 +11,7 @@ import graft.core.Tables._
   * engine formulation is the known scalable rewrite, oracle-certified
   * against the naive form run by DuckDB at test SF.
   */
-object Analytics {
-  type Q = (SparkSession, String) => DataFrame
+object Analytics extends QueryModule {
 
   val all: Map[String, Q] = Map(
     // ---- GRPH-2: triangle census of the part co-purchase graph (nodes =
@@ -76,7 +75,7 @@ object Analytics {
         // 41M-row wedge generation runs near-serial. Hash-partitioning
         // both (identical) sides by the join key here also makes the
         // wedge self-join exchange-free at full width.
-        .repartition(s.sparkContext.defaultParallelism * 2, col("src"))
+        .transform(spread(_, "src"))
         .pinned // feeds both wedge sides + the closure broadcast
       val wedges = or.as("e1").join(or.as("e2"),
           col("e1.src") === col("e2.src") && col("e1.rdst") < col("e2.rdst"))
@@ -321,7 +320,7 @@ object Analytics {
         // blocks BEHIND it, and therefore the ×19 probe explode + join
         // all ran ≤3-wide (measured 3.4 s CPU on a 2-task stage). The
         // window reuses this partitioning — no second exchange.
-        .repartition(s.sparkContext.defaultParallelism * 2, col("user_id"))
+        .transform(spread(_, "user_id"))
         .withColumn("rn", row_number().over(w))
         .pinned // feeds both the probe side and the value side
       // 0.7^k as an EXACT scale-18 decimal literal table (7^k/10^k) —

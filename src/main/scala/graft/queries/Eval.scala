@@ -21,8 +21,7 @@ import graft.core.Tables._
   * every ratio is one correctly-rounded double division, per-bin float
   * terms are dec4-quantized before any order-free decimal sum.
   */
-object Eval {
-  type Q = (SparkSession, String) => DataFrame
+object Eval extends QueryModule {
 
   /** 8-decimal sibling of Tables.dec4, for per-block float terms that get
     * SUMMED over data-sized block counts (avg_precision's trapezoid): at

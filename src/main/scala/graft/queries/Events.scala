@@ -12,8 +12,7 @@ import graft.core.Tables._
   * table so the DuckDB oracle can check them. The streaming suite asserts
   * stream-vs-batch equivalence against these exact frames.
   */
-object Events {
-  type Q = (SparkSession, String) => DataFrame
+object Events extends QueryModule {
 
   val all: Map[String, Q] = Map(
     // ---- EVT-1: tumbling 10-minute window × event_type ----
@@ -1923,8 +1922,6 @@ object Events {
         |ORDER BY user_id NULLS FIRST, session_id NULLS FIRST, n_events NULLS FIRST, session_start NULLS FIRST, session_end NULLS FIRST, sum_value NULLS FIRST""".stripMargin
   )
 
-  /** Every [[graft.core.Warehouse.once]] dataset this module owns, as
-    * (name, forcing thunk) — see [[LlmOps.prebuilds]]. */
-  val prebuilds: Seq[(String, (SparkSession, String) => Unit)] = Seq(
+  override val prebuilds: Seq[(String, (SparkSession, String) => Unit)] = Seq(
     "events_zorder" -> ((s, d) => { zorderEvents(s, d); () }))
 }

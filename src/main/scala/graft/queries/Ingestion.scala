@@ -19,8 +19,7 @@ import graft.sources.Ingest
   * can't be oracle-compared — DuckDB's malformed-row handling differs by
   * design — so they are asserted engine-side in IngestSpec instead.
   */
-object Ingestion {
-  type Q = (SparkSession, String) => DataFrame
+object Ingestion extends QueryModule {
 
   val fixtureDir = "/tmp/graft_fixtures"
 
@@ -641,9 +640,7 @@ object Ingestion {
         |ORDER BY o_orderkey NULLS FIRST, change NULLS FIRST, price_before NULLS FIRST, price_after NULLS FIRST""".stripMargin
   )
 
-  /** Every [[graft.core.Warehouse.once]] dataset this module owns, as
-    * (name, forcing thunk) — see [[LlmOps.prebuilds]]. */
-  val prebuilds: Seq[(String, (SparkSession, String) => Unit)] = Seq(
+  override val prebuilds: Seq[(String, (SparkSession, String) => Unit)] = Seq(
     "orders_evolve" -> ((s, d) => { evolveOrders(s, d); () }),
     "orders_snap" -> ((s, d) => { snapshotOrders(s, d); () }),
     "orders_diff" -> ((s, d) => { diffOrders(s, d); () }),

@@ -26,8 +26,7 @@ import graft.sources.Ingest
   * `PartitionFilters` on the static scan and a `dynamicpruning` expression
   * on the DPP scan.
   */
-object Pruning {
-  type Q = (SparkSession, String) => DataFrame
+object Pruning extends QueryModule {
 
   /** Hive-partitioned warehouse copy of orders, built once per (process,
     * sfDir) via [[graft.core.Warehouse.once]]:
@@ -88,8 +87,6 @@ object Pruning {
         |ORDER BY o_year NULLS FIRST, r_name NULLS FIRST, n_orders NULLS FIRST, sum_price NULLS FIRST""".stripMargin
   )
 
-  /** Every [[graft.core.Warehouse.once]] dataset this module owns, as
-    * (name, forcing thunk) — see [[LlmOps.prebuilds]]. */
-  val prebuilds: Seq[(String, (SparkSession, String) => Unit)] = Seq(
+  override val prebuilds: Seq[(String, (SparkSession, String) => Unit)] = Seq(
     "orders_by_year" -> ((s, d) => { partitionedOrders(s, d); () }))
 }

@@ -21,8 +21,7 @@ import graft.core.Tables._
   *  - top-k is always window-row_number-filter or orderBy.limit
   *    (TakeOrderedAndProject), never a global sort of the full fact table.
   */
-object Relational {
-  type Q = (SparkSession, String) => DataFrame
+object Relational extends QueryModule {
 
   /** Deletion-neighborhood fuzzy-match pair builder shared by `fzj1` (pair
     * list) and `fzj_cluster` (entity assignment): customer pairs within
@@ -45,8 +44,7 @@ object Relational {
       // bucket on duplicate-heavy corpora (the §4.4.3 trap — measured 2/32
       // cores busy on the ×10 clique probe). Partitioning by the join key
       // keeps the probe wide; AQE respects user-specified numbers.
-      .repartition(customer.sparkSession.sparkContext.defaultParallelism * 2,
-        col("pos"), col("k"))
+      .transform(spread(_, "pos", "k"))
     val a = keyed.select(col("c_custkey").as("c1"), col("c_name").as("n1"),
       col("pos").as("p1"), col("k").as("k1"))
     val b = keyed.select(col("c_custkey").as("c2"), col("c_name").as("n2"),
@@ -2555,10 +2553,9 @@ object Relational {
         |ORDER BY bucket NULLS FIRST, n_orders NULLS FIRST, sum_price NULLS FIRST, bucket_lo NULLS FIRST""".stripMargin
   )
 
-  /** Every [[graft.core.Warehouse.once]] dataset this module owns, as
-    * (name, forcing thunk) — see [[LlmOps.prebuilds]]. bucket_tables
-    * includes the catalog registration that happens OUTSIDE the once
-    * block, so forcing it here also pre-registers the bucketed tables. */
-  val prebuilds: Seq[(String, (SparkSession, String) => Unit)] = Seq(
+  /** bucket_tables includes the catalog registration that happens OUTSIDE
+    * the once block, so forcing it here also pre-registers the bucketed
+    * tables. */
+  override val prebuilds: Seq[(String, (SparkSession, String) => Unit)] = Seq(
     "bucket_tables" -> ((s, d) => { bucketedTables(s, d); () }))
 }

@@ -11,8 +11,7 @@ import graft.core.Tables._
   * column set. Type alignment with DuckDB is explicit (INT vs BIGINT casts)
   * because the driver compares schemas/values after reading both results.
   */
-object Scalars {
-  type Q = (SparkSession, String) => DataFrame
+object Scalars extends QueryModule {
 
   val all: Map[String, Q] = Map(
     // ---- STR-1: string functions ----

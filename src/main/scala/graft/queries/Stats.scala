@@ -20,8 +20,7 @@ import graft.core.Tables._
   * scans with engine-dependent double summation order; one moment reduce is
   * one scan and exact.
   */
-object Stats {
-  type Q = (SparkSession, String) => DataFrame
+object Stats extends QueryModule {
 
   /** Exact moment arithmetic: DECIMAL(18,4) inputs so a product is
     * DECIMAL(37,8) in Spark / DECIMAL(36,8) in DuckDB — both EXACT (no
@@ -610,11 +609,8 @@ object Stats {
     //      the SAME gram relation — never rescanning the corpus. ----
     "feat_hash" -> ((s, d) => {
       import graft.functions.GraftFunctions.poly_hash
-      // width-restoring exchange before the per-row bigram explode — the
-      // documents table is one parquet split at test scale (LlmOps
-      // `spread` rationale); no-op cost at real corpus scale
-      val doc = load(s, d, "documents")
-        .repartition(s.sparkContext.defaultParallelism * 2, col("doc_id"))
+      // width-restoring exchange before the per-row bigram explode
+      val doc = spread(load(s, d, "documents"), "doc_id")
       // zip_with bigrams (LlmOps.bigramArr): the old transform-over-
       // sequence spelling re-evaluated the captured split per element —
       // O(len²) re-splits per doc (bigramArr's scaladoc).

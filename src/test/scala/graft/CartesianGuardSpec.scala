@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Fleet-wide O(n²) tripwire: no gated query may plan a CartesianProduct,
   * and BroadcastNestedLoopJoin is allowed only where the operator's
@@ -207,5 +208,10 @@ class CartesianGuardSpec extends AnyFunSuite {
       }
     }
     assert(failures.isEmpty, failures.mkString("\n"))
+    // Every builder has now run, so every Warehouse.once it reaches has
+    // built; an unregistered one would land inside a timed Bench sample.
+    val unregistered = graft.core.Warehouse.buildSecs.keySet.asScala.toSet --
+      SparkEntry.prebuilds.map(_._1)
+    assert(unregistered.isEmpty, s"Warehouse.once builds missing from prebuilds: $unregistered")
   }
 }

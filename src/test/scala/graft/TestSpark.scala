@@ -5,38 +5,23 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.file.attribute.FileTime
 import scala.jdk.CollectionConverters._
 
-/** Shared test session (one forked JVM per `sbt test` run). Mirrors the
-  * Verify/Bench session config and registers [[graft.functions.GraftExtensions]]
-  * so SQL-surface tests can call the custom functions by name. */
+/** Shared test session (one forked JVM per `sbt test` run), built by the
+  * same [[GraftSession]] factory as Verify/Bench at a fixed `local[4]` with
+  * 4 shuffle partitions. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val builderBase = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Static conf; the suite executes the full query board plus its
-      // own variants — far beyond the default 100-entry codegen cache.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.ui.enabled", "false")
-    // Config-matrix axis (r10): GRAFT_TEST_STATESTORE=rocksdb makes the
-    // RocksDB provider the SESSION DEFAULT, so the whole streaming fleet —
-    // including the legacy flatMapGroupsWithState/dedup/join/window
-    // operators that normally run on the HDFS-backed default — executes
-    // against the 100 TB state backend. The transformWithState tests pin
-    // RocksDB per-test regardless (the new API requires it); this axis
-    // proves the REST of the fleet is provider-agnostic by execution.
-    val withStore =
-      if (sys.env.get("GRAFT_TEST_STATESTORE").contains("rocksdb"))
-        builderBase.config("spark.sql.streaming.stateStore.providerClass",
+  lazy val spark: SparkSession = GraftSession.local(cpus = 4,
+    extra = Seq("spark.sql.shuffle.partitions" -> "4") ++
+      // Config-matrix axis (r10): GRAFT_TEST_STATESTORE=rocksdb makes the
+      // RocksDB provider the SESSION DEFAULT, so the whole streaming fleet —
+      // including the legacy flatMapGroupsWithState/dedup/join/window
+      // operators that normally run on the HDFS-backed default — executes
+      // against the 100 TB state backend. The transformWithState tests pin
+      // RocksDB per-test regardless (the new API requires it); this axis
+      // proves the REST of the fleet is provider-agnostic by execution.
+      (if (sys.env.get("GRAFT_TEST_STATESTORE").contains("rocksdb"))
+        Seq("spark.sql.streaming.stateStore.providerClass" ->
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      else builderBase
-    val s2 = withStore.getOrCreate()
-    s2.sparkContext.setLogLevel("WARN")
-    s2
-  }
+      else Nil))
 
   val sfDir = "/root/testdata/sf0.001"
 
