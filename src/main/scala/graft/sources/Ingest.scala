@@ -424,41 +424,13 @@ object Ingest {
                                 rowsWritten: Long, statuses: List[String])
 
   /** One [REF]-shaped ingestion run: schema'd CSV read with PERMISSIVE
-    * quarantine → clean/quarantine split → partitioned parquet warehouse
-    * write → completion status from the attached listener. */
-  def runIngestJob(spark: SparkSession, csvPath: String, schema: StructType,
-                   warehouseDir: String, partitionCols: Seq[String] = Nil): IngestReport = {
-    val listener = StatusListener.attach(spark)
-    try {
-      val corruptCol = "_corrupt_record"
-      val raw = readCsv(spark, csvPath, schema, Permissive(corruptCol)).cache()
-      val quarantined = raw.filter(raw(corruptCol).isNotNull).count()
-      val clean = raw.filter(raw(corruptCol).isNull).drop(corruptCol)
-      writePartitionedParquet(clean, warehouseDir, partitionCols)
-      val written = spark.read.parquet(warehouseDir).count()
-      raw.unpersist()
-      // QueryExecutionListener events post asynchronously AND in order, so
-      // waiting for merely non-empty can report before the WRITE action's
-      // completion record lands (an earlier count's event satisfies the
-      // poll). Drain the shared bus synchronously first; the bounded poll
-      // remains only as a belt-and-braces fallback.
-      graft.streaming.LifecycleGate.flushListenerBus(spark)
-      val deadline = System.nanoTime() + 2_000_000_000L
-      while (listener.statuses.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
-      IngestReport(quarantined + written, quarantined, written, listener.statuses)
-    } finally spark.listenerManager.unregister(listener)
-  }
-
-  /** [[runIngestJob]] rebuilt on `Dataset.observe` (CollectMetrics) — the
-    * SINGLE-PASS audit: the read/quarantine counters ride the warehouse
-    * write as plan-level metrics instead of being paid as separate count
-    * actions over a cached frame. At 100 TB that is the difference
-    * between scanning the landing data once and three times (cache fill
-    * + two counts + write); the audit numbers are exactly the write
-    * job's own row stream, so they can never diverge from what actually
-    * landed. The quarantine side stays a second (cheap, corrupt-only)
-    * pass — PERMISSIVE parsing only materializes the corrupt column on
-    * the branch that selects it. */
+    * quarantine → clean rows to the partitioned parquet warehouse, corrupt
+    * rows to `quarantineDir` → completion status from the attached
+    * listener. The read/quarantine counters ride the warehouse write as
+    * `Dataset.observe` (CollectMetrics) plan-level metrics instead of
+    * separate count actions over a cached frame: the warehouse side scans
+    * the landing data once, and the audit numbers are exactly the write
+    * job's own row stream, so they can never diverge from what landed. */
   def runIngestJobObserved(spark: SparkSession, csvPath: String, schema: StructType,
                            warehouseDir: String, quarantineDir: String,
                            partitionCols: Seq[String] = Nil): IngestReport = {
@@ -474,24 +446,50 @@ object Ingest {
           count(lit(1)).as("rows_read"),
           sum(when(col(corruptCol).isNotNull, 1L).otherwise(0L)).as("rows_bad"))
         .filter(col(corruptCol).isNull).drop(corruptCol)
-      writePartitionedParquet(clean, warehouseDir, partitionCols)
-      // Corrupt-only second scan (tiny by construction) → quarantine.
-      // Full rows, not just the raw-line column: Spark disallows
-      // corrupt-record-only projections from raw CSV
+      // The quarantine write re-parses the whole CSV (the corrupt filter
+      // needs every row parsed), so it is a second job as large as the
+      // first. On a small drop each job is mostly fixed scheduling cost
+      // and one task, so the two run side by side: the quarantine write
+      // goes on its own fresh thread, which inherits the caller's Spark
+      // local properties (job group, scheduler pool, tracing span) as a
+      // pooled thread would not. Full rows, not just the raw-line column:
+      // Spark disallows corrupt-record-only projections from raw CSV
       // (QUERY_ONLY_CORRUPT_RECORD_COLUMN), and the parsed-null columns
       // are the repair operator's context anyway.
-      raw.filter(col(corruptCol).isNotNull)
-        .write.mode(SaveMode.Overwrite).parquet(quarantineDir)
+      var quarantineError: Throwable = null
+      val quarantine = new Thread(() =>
+        try raw.filter(col(corruptCol).isNotNull)
+          .write.mode(SaveMode.Overwrite).parquet(quarantineDir)
+        catch { case e: Throwable => quarantineError = e },
+        "ingest-quarantine")
+      quarantine.start()
+      // Always join before returning or throwing, so no job of this
+      // landing outlives the call. The warehouse error wins; a quarantine
+      // error rides along as suppressed, or is rethrown on its own.
+      try writePartitionedParquet(clean, warehouseDir, partitionCols)
+      catch { case e: Throwable =>
+        joinUninterruptibly(quarantine)
+        if (quarantineError != null) e.addSuppressed(quarantineError)
+        throw e
+      }
+      joinUninterruptibly(quarantine)
+      if (quarantineError != null) throw quarantineError
       val m = obs.get
       val read = m("rows_read").asInstanceOf[Long]
       val bad = Option(m("rows_bad")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      // Same drain rule as runIngestJob: flush the shared bus so the
-      // write's own completion record is in the report, not just the
-      // first action's.
+      // QueryExecutionListener events post asynchronously: flush the
+      // shared bus so both writes' completion records are in the report,
+      // with the bounded poll as the fallback.
       graft.streaming.LifecycleGate.flushListenerBus(spark)
-      val deadline = System.nanoTime() + 2_000_000_000L
-      while (listener.statuses.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
-      IngestReport(read, bad, read - bad, listener.statuses)
+      IngestReport(read, bad, read - bad,
+        graft.streaming.LifecycleGate.awaitStatuses(listener))
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  private def joinUninterruptibly(t: Thread): Unit = {
+    var interrupted = false
+    while (t.isAlive)
+      try t.join() catch { case _: InterruptedException => interrupted = true }
+    if (interrupted) Thread.currentThread().interrupt()
   }
 }

@@ -66,7 +66,7 @@ object LifecycleGate {
 
   /** Bounded wait for the async listener bus to deliver at least one
     * record (QueryExecutionListener events post asynchronously — the same
-    * drain rule as `Ingest.runIngestJob`). Returns the records seen; an
+    * drain rule as `Ingest.runIngestJobObserved`). Returns the records seen; an
     * empty return means the wait EXPIRED — callers feed that into
     * `evaluate(_, timedOut = true)` so a slow bus reads as "timed out",
     * not as a silent hold. The default 2 s is configurable for loaded

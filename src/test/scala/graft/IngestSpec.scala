@@ -474,18 +474,6 @@ class IngestSpec extends AnyFunSuite {
     assert(byName("b.aud")._1 == 100 && byName("b.aud")._2.sameElements(aud))
   }
 
-  test("runIngestJob: clean/quarantine split, partitioned warehouse, status events") {
-    val src = csvDir(goodRows :+ badRow)
-    val wh = tempDir("ingest_wh").toString
-    val report = Ingest.runIngestJob(spark, src, Ingestion.csvSchema, wh, Seq("ship_date"))
-    assert(report.rowsWritten == 2, s"expected 2 clean rows, got $report")
-    assert(report.rowsQuarantined == 1)
-    assert(report.rowsRead == 3)
-    assert(new java.io.File(wh).listFiles().exists(_.getName.startsWith("ship_date=")))
-    assert(report.statuses.nonEmpty, "completion listener must record statuses")
-    assert(report.statuses.forall(_.contains("\"success\"")))
-  }
-
   test("reference flow end-to-end: notify → load → status → gate → publish; a poisoned run never publishes") {
     // The whole [REF] diagram as one executable path: partner CSVs land,
     // an event notification (not a LIST) announces them, the loader
@@ -646,19 +634,20 @@ class IngestSpec extends AnyFunSuite {
     } finally spark.listenerManager.unregister(goodListener)
   }
 
-  test("runIngestJobObserved: single-pass CollectMetrics audit matches the two-pass job") {
+  test("runIngestJobObserved: CollectMetrics audit, quarantine, partitions, statuses") {
     val src = csvDir(goodRows :+ badRow)
     val wh = tempDir("ingest_obs_wh").toString
     val q = tempDir("ingest_obs_q").toString
     val report = Ingest.runIngestJobObserved(
       spark, src, Ingestion.csvSchema, wh, q, Seq("ship_date"))
-    // Same numbers the cached two-count job reports — but measured as
-    // plan-level metrics ON the warehouse write itself.
+    // The counters are plan-level metrics ON the warehouse write itself.
     assert(report.rowsRead == 3 && report.rowsQuarantined == 1 &&
       report.rowsWritten == 2, s"got $report")
     assert(spark.read.parquet(wh).count() == 2)
+    assert(new java.io.File(wh).listFiles().exists(_.getName.startsWith("ship_date=")))
     assert(spark.read.parquet(q).count() == 1, "corrupt raw line quarantined")
-    assert(report.statuses.nonEmpty)
+    assert(report.statuses.nonEmpty, "completion listener must record statuses")
+    assert(report.statuses.forall(_.contains("\"success\"")), s"got ${report.statuses}")
     // The audit is IN the plan: the write's physical plan carries a
     // CollectMetrics node (no cache, no separate count actions).
     val probe = Ingest.readCsv(spark, src, Ingestion.csvSchema,
@@ -667,6 +656,71 @@ class IngestSpec extends AnyFunSuite {
         count(lit(1)).as("n"))
     assert(probe.queryExecution.executedPlan.toString.contains("CollectMetrics"),
       "observe must plan as CollectMetrics")
+  }
+
+  test("runIngestJobObserved: both landing jobs inherit the caller's local properties") {
+    // The quarantine write runs on its own thread; cancelJobGroup and
+    // span parenting only reach it if that thread inherits the caller's
+    // local properties (a pooled thread would not).
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
+    val jobs = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = seen.add(e.properties)
+    }
+    graft.streaming.LifecycleGate.flushListenerBus(spark)
+    sc.addSparkListener(jobs)
+    sc.setJobGroup("ingest_group_probe", "landing")
+    sc.setLocalProperty("graft.test.span", "span-42")
+    try {
+      Ingest.runIngestJobObserved(spark, csvDir(goodRows :+ badRow), Ingestion.csvSchema,
+        tempDir("ingest_props_wh").toString, tempDir("ingest_props_q").toString)
+      graft.streaming.LifecycleGate.flushListenerBus(spark)
+    } finally {
+      sc.clearJobGroup()
+      sc.setLocalProperty("graft.test.span", null)
+      sc.removeSparkListener(jobs)
+    }
+    val props = seen.toArray(Array.empty[java.util.Properties]).toSeq
+    assert(props.size >= 2, s"expected the warehouse and quarantine jobs, saw ${props.size}")
+    props.foreach { p =>
+      assert(p.getProperty("spark.jobGroup.id") == "ingest_group_probe", s"job group lost: $p")
+      assert(p.getProperty("graft.test.span") == "span-42", s"local property lost: $p")
+    }
+  }
+
+  test("runIngestJobObserved: failed writes throw after both jobs end, listener removed") {
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def statusListeners(): Int = spark.listenerManager.getClass
+      .getMethod("listListeners").invoke(spark.listenerManager)
+      .asInstanceOf[Array[QueryExecutionListener]]
+      .count(_.isInstanceOf[graft.streaming.StatusListener])
+    val before = statusListeners()
+    val src = csvDir(goodRows :+ badRow)
+
+    // Only the quarantine write fails: its error surfaces after the
+    // warehouse write has finished.
+    val wh = tempDir("ingest_fail_wh").toString
+    val qErr = intercept[Exception] {
+      Ingest.runIngestJobObserved(spark, src, Ingestion.csvSchema, wh, "nosuchfs://q")
+    }
+    assert(qErr.getMessage.contains("nosuchfs"), s"got $qErr")
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty,
+      "no landing job may outlive the call")
+    assert(new java.io.File(wh, "_SUCCESS").exists(), "warehouse write must have completed")
+    assert(spark.read.parquet(wh).count() == 2)
+    assert(statusListeners() == before, "the landing's StatusListener must be unregistered")
+
+    // Both fail: the warehouse error wins, the quarantine error is attached.
+    val both = intercept[Exception] {
+      Ingest.runIngestJobObserved(spark, src, Ingestion.csvSchema,
+        "nosuchwh://w", "nosuchfs://q")
+    }
+    assert(both.getMessage.contains("nosuchwh"), s"warehouse error must win, got $both")
+    assert(both.getSuppressed.exists(_.getMessage.contains("nosuchfs")),
+      s"quarantine error must ride along as suppressed: ${both.getSuppressed.toSeq}")
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+    assert(statusListeners() == before)
   }
 
   test("ingest_evolve: v1 files genuinely lack the evolved column; merged scan unions both generations") {
