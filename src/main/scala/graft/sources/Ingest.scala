@@ -299,16 +299,6 @@ object Ingest {
   def readBinaryFiles(spark: SparkSession, dir: String, glob: String = "*"): DataFrame =
     spark.read.format("binaryFile").option("pathGlobFilter", glob).load(dir)
 
-  /** Small-files compaction — the nightly operational pass every file-based
-    * warehouse needs: streaming/micro-batch sinks and per-partition writers
-    * leave thousands of KB-sized files, and at 100 TB the resulting
-    * listing + task-scheduling overhead dominates scans (one task per tiny
-    * file). Rewrites `srcDir` into `dstDir` with files sized toward
-    * `targetFileBytes`: file count = ceil(actual bytes / target), measured
-    * from the source listing (no data pass), rows redistributed
-    * round-robin (`repartition(n)`) so output files are uniform. Returns
-    * (filesBefore, filesAfter). Content-preserving by construction —
-    * certified in IngestSpec. */
   /** Recursive parquet-leaf listing for the compaction sizing pass, with a
     * flat-layout guard: a hive-partitioned directory (the
     * `writePartitionedParquet` + partitionCols output) has its part files
@@ -317,12 +307,13 @@ object Ingest {
     * partition layout. Compaction of a partitioned table is per partition
     * directory — fail fast instead of flattening. */
   private def flatParquetLeaves(fs: org.apache.hadoop.fs.FileSystem,
-                                dir: org.apache.hadoop.fs.Path): Seq[Long] = {
+                                dir: org.apache.hadoop.fs.Path)
+      : Seq[org.apache.hadoop.fs.FileStatus] = {
     // listFiles returns scheme-qualified paths; qualify the input dir the
     // same way or every top-level file reads as "nested".
     val qdir = fs.makeQualified(dir)
     val it = fs.listFiles(qdir, true)
-    val sizes = scala.collection.mutable.ArrayBuffer[Long]()
+    val leaves = scala.collection.mutable.ArrayBuffer[org.apache.hadoop.fs.FileStatus]()
     var nested = false
     // Spark's own hidden-file convention: any path component starting
     // with '_' or '.' is metadata/debris (_temporary from a crashed
@@ -342,7 +333,7 @@ object Ingest {
     while (it.hasNext) {
       val s = it.next()
       if (s.getPath.getName.endsWith(".parquet") && !hiddenBelow(s.getPath)) {
-        sizes += s.getLen
+        leaves += s
         if (s.getPath.getParent != qdir) nested = true
       }
     }
@@ -350,19 +341,50 @@ object Ingest {
       s"$dir holds parquet files in subdirectories (a partitioned layout): " +
         "compact each partition directory instead — compacting across " +
         "partitions would silently flatten the layout")
-    sizes.toSeq
+    leaves.toSeq
   }
 
+  /** Small-files compaction — the nightly operational pass every file-based
+    * warehouse needs: streaming/micro-batch sinks and per-partition writers
+    * leave thousands of KB-sized files, and at 100 TB the resulting
+    * listing + task-scheduling overhead dominates scans (one task per tiny
+    * file). Rewrites `srcDir` into `dstDir` with files sized toward
+    * `targetFileBytes`: file count = ceil(actual bytes / target), measured
+    * from the source listing (no data pass), rows redistributed
+    * round-robin (`repartition(n)`) so output files are uniform. A source
+    * that is already ONE file at or under the target has nothing to merge:
+    * it is copied byte-for-byte through the Hadoop FileSystem API instead
+    * (no Spark job — the rewrite would cost schema inference, a shuffle map
+    * and a write to reproduce the same file), the same skip Iceberg's
+    * `rewrite_data_files` (min-input-files) and Delta's OPTIMIZE
+    * (single-file bins) make. Both paths overwrite `dstDir` and leave
+    * `_SUCCESS`. Returns (filesBefore, filesAfter). Content-preserving by
+    * construction — certified in IngestSpec. */
   def compact(spark: SparkSession, srcDir: String, dstDir: String,
               targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    val fs = new org.apache.hadoop.fs.Path(srcDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = flatParquetLeaves(fs, new org.apache.hadoop.fs.Path(srcDir))
-    val totalBytes = parts.sum
+    import org.apache.hadoop.fs.Path
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = new Path(srcDir).getFileSystem(conf)
+    val parts = flatParquetLeaves(fs, new Path(srcDir))
+    val totalBytes = parts.map(_.getLen).sum
     val n = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    spark.read.parquet(srcDir).repartition(n)
-      .write.mode(SaveMode.Overwrite).parquet(dstDir)
-    val after = fs.listStatus(new org.apache.hadoop.fs.Path(dstDir))
+    val dst = new Path(dstDir)
+    val dfs = dst.getFileSystem(conf)
+    if (parts.length == 1 && n == 1) {
+      // Copy under a '_' name (invisible to Spark's file index), then
+      // rename into place, so a reader never lists a half-copied file.
+      val src = parts.head.getPath
+      dfs.delete(dst, true)
+      dfs.mkdirs(dst)
+      val tmp = new Path(dst, s"_copying-${src.getName}")
+      if (!org.apache.hadoop.fs.FileUtil.copy(fs, src, dfs, tmp, false, conf) ||
+          !dfs.rename(tmp, new Path(dst, src.getName)))
+        throw new java.io.IOException(s"compact: cannot copy $src into $dst")
+      dfs.create(new Path(dst, "_SUCCESS"), true).close()
+    } else
+      spark.read.parquet(srcDir).repartition(n)
+        .write.mode(SaveMode.Overwrite).parquet(dstDir)
+    val after = dfs.listStatus(dst)
       .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
     (parts.length, after)
   }
@@ -386,7 +408,7 @@ object Ingest {
     val fs = new org.apache.hadoop.fs.Path(srcDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val parts = flatParquetLeaves(fs, new org.apache.hadoop.fs.Path(srcDir))
-    val totalBytes = parts.sum
+    val totalBytes = parts.map(_.getLen).sum
     val src = spark.read.parquet(srcDir)
     // Metadata-only on an unfiltered parquet scan (footer row counts) —
     // not a data pass.

@@ -428,6 +428,45 @@ class IngestSpec extends AnyFunSuite {
     assertSameRows(spark.read.parquet(dst), orders, "compaction must preserve rows")
   }
 
+  test("compact: a one-file source under target is copied with no Spark job; above target it is rewritten") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val orders = Tables.load(spark, sfDir, "orders")
+    val src = tempDir("compact_one_src").toString
+    orders.coalesce(1).write.mode(SaveMode.Overwrite).parquet(src)
+    val fs = new org.apache.hadoop.fs.Path(src)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def listing(dir: String) = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
+      .map(s => (s.getPath.getName, s.getLen, s.getModificationTime)).toSet
+    val srcBefore = listing(src)
+    val bytes = srcBefore.filter(_._1.endsWith(".parquet")).map(_._2).sum
+    // Stale output from an earlier run: the copy must overwrite it whole.
+    val dst = tempDir("compact_one_dst").toString
+    orders.repartition(3).write.mode(SaveMode.Overwrite).parquet(dst)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val probe = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    graft.streaming.LifecycleGate.flushListenerBus(spark)
+    spark.sparkContext.addSparkListener(probe)
+    val counts = try {
+      val r = Ingest.compact(spark, src, dst)
+      graft.streaming.LifecycleGate.flushListenerBus(spark)
+      r
+    } finally spark.sparkContext.removeSparkListener(probe)
+    assert(counts == ((1, 1)), s"got $counts")
+    assert(jobs.get == 0, s"the copy path must start no Spark job, saw ${jobs.get}")
+    val visible = listing(dst).map(_._1).filterNot(_.startsWith("."))
+    assert(visible.count(_.endsWith(".parquet")) == 1 && visible.size == 2 &&
+      visible("_SUCCESS"), s"expected one parquet file plus _SUCCESS, got $visible")
+    assertSameRows(spark.read.parquet(dst), orders, "the copied drop holds the source rows")
+    assert(listing(src) == srcBefore, "the source must be left untouched")
+    // One file ABOVE the target is not compact: it is still rewritten.
+    val big = tempDir("compact_one_big").toString
+    val (before, after) = Ingest.compact(spark, src, big, targetFileBytes = bytes / 2 + 1)
+    assert((before, after) == ((1, 2)), s"got ($before, $after)")
+    assertSameRows(spark.read.parquet(big), orders, "the rewritten drop holds the source rows")
+  }
+
   test("compactWithErasure: GDPR anti-join rides the compaction rewrite — one pass, exact audit") {
     val src = tempDir("cwe_src").toString
     val orders = Tables.load(spark, sfDir, "orders")

@@ -1422,11 +1422,53 @@ class StreamingSpec extends AnyFunSuite {
       .withColumn("_src", lit("00000000000000000000000divergent"))
       .write.partitionBy("_src", "cell").mode("append").parquet(divDir)
     val divTotal = stored().count()
+    val pointer = java.nio.file.Paths.get(out, "_CURRENT")
+    val pointerBefore = java.nio.file.Files.readString(pointer)
     intercept[java.io.IOException] {
       StreamOps.compactStore(spark, out, Seq("vec_id", "sp"), Seq("_src", "cell"))
     }
     assert(stored().count() == divTotal,
       "a refused compaction must leave the store untouched")
+    // The refusal comes after the staging write: it must clean up that
+    // write and lift the marker, and never move the pointer.
+    assert(java.nio.file.Files.readString(pointer) == pointerBefore,
+      "a refused compaction must not move _CURRENT")
+    assert(!fs.listStatus(new org.apache.hadoop.fs.Path(out))
+      .exists(_.getPath.getName.startsWith(".compact-staging-")),
+      "a refused compaction must delete its staging directory")
+    assert(!fs.exists(crashMarker), "a refused compaction must lift its marker")
+  }
+
+  test("compactStore: the convergence check follows distinct's equality per key") {
+    // The check compares each row's non-_src state to its key's first row
+    // with <=> (ordering equality). It must agree with the per-key
+    // `distinct` rule it replaced: null = null, NaN = NaN, -0.0 = 0.0, and
+    // any other difference (here null vs a value) is divergence.
+    def compacts(name: String, rows: Seq[(Long, Double, Option[String], String)]): Boolean = {
+      val out = tempDir(s"conv_$name").toString
+      val df = rows.toDF("id", "x", "tag", "_src")
+      df.write.partitionBy("_src").mode("overwrite").parquet(out)
+      val distinctRule = df.drop("_src").distinct().groupBy(col("id")).count()
+        .filter(col("count") > 1).isEmpty
+      val compacted =
+        try { StreamOps.compactStore(spark, out, Seq("id"), Seq("_src")); true }
+        catch { case _: java.io.IOException => false }
+      assert(compacted == distinctRule,
+        s"$name: compactStore ${if (compacted) "compacted" else "refused"}, " +
+          s"the distinct rule says converged=$distinctRule")
+      val expected = if (compacted) df.select(col("id")).distinct().count() else rows.size.toLong
+      assert(StreamOps.readStore(spark, out).count() == expected, s"$name: row count")
+      compacted
+    }
+    assert(compacts("identical", Seq(
+      (1L, 1.5, Some("x"), "srcA"), (1L, 1.5, Some("x"), "srcB"),
+      (2L, 2.5, None, "srcA"), (2L, 2.5, None, "srcB"))))
+    assert(compacts("signed_zero_nan", Seq(
+      (1L, -0.0, Some("y"), "srcA"), (1L, 0.0, Some("y"), "srcB"),
+      (2L, Double.NaN, None, "srcA"), (2L, Double.NaN, None, "srcB"))))
+    assert(!compacts("null_vs_value", Seq(
+      (1L, 1.0, None, "srcA"), (1L, 1.0, Some("z"), "srcB"),
+      (2L, 3.0, Some("w"), "srcA"), (2L, 3.0, Some("w"), "srcB"))))
   }
 
   test("STR-COMPACT2 gated ivf_pq_stream: compacted read path matches batch ivf_pq with DISTINCT removed") {
