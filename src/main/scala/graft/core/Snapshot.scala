@@ -1,72 +1,64 @@
 package graft.core
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Versioned atomic table publishing — the executable form of §2.1's
   * commit story ([REF] `Untitled Diagram.drawio:147-149`: load the
   * warehouse copy FIRST, signal availability ONLY after it is complete —
-  * readers must never observe a half-published table).
+  * readers must never observe a half-published table), on the
+  * [[Versioned]] layout: immutable `v=N` directories and a `_CURRENT`
+  * pointer whose swap is the ONLY mutation readers see.
   *
-  * Layout (the Iceberg/Delta pointer-swap scheme, reduced to its atomic
-  * core):
+  * Publishing never rewrites or appends in place, which gives time-travel
+  * reads (`read(root, Some(v))`) and O(1) rollback (`rollback` re-points
+  * `_CURRENT` at a prior version; the bad version's files stay on disk for
+  * audit) for free. Retention keeps every version. A writer crash before
+  * the swap leaves orphan `v=N` files that the next publish ignores
+  * (versions only count once recorded in the `_PUBLISHED` manifest) — the
+  * fsck is a directory sweep deleting unrecorded versions, never a data
+  * repair.
   *
-  * {{{
-  *   <root>/v=1/...parquet        immutable version directories
-  *   <root>/v=2/...parquet
-  *   <root>/_CURRENT              pointer file: the published version id
-  * }}}
+  * Version ALLOCATION is independent of the pointer: a publish stages its
+  * data in a hidden temp directory and claims max(on-disk `v=N`) + 1
+  * without replacing, retrying one higher when another writer took the
+  * slot. So (a) after `rollback(to=1)` the next publish does NOT reuse v=2
+  * — published versions stay immutable and a concurrent time-travel read
+  * can never observe a torn rewrite; (b) concurrent publishers land on
+  * DISTINCT versions, and the pointer swap serializes which one reads as
+  * current (last swap wins — all remain readable and recorded).
   *
-  * The ONLY mutation visible to readers is the pointer swap, executed as
-  * write-temp + `ATOMIC_MOVE` rename: a reader sees the old pointer or
-  * the new one, never a torn file and never a version whose data is
-  * still being written. Version directories are immutable once published
-  * — publishing never rewrites or appends in place — which gives
-  * time-travel reads (`read(root, Some(v))`) and O(1) rollback
-  * (`rollback` re-points `_CURRENT` at a prior version; the bad
-  * version's files stay on disk for audit) for free. A writer crash
-  * before the swap leaves orphan `v=N` files that the next publish
-  * ignores (versions only count once recorded in the `_PUBLISHED`
-  * manifest) — the fsck is a directory sweep deleting unrecorded
-  * versions, never a data repair.
-  *
-  * Version ALLOCATION is independent of the pointer: the next id is
-  * max(on-disk `v=N`) + 1, and the slot is CLAIMED atomically by
-  * staging the data to a hidden temp directory and `rename(2)`-ing it
-  * into `v=N` — the rename fails (EEXIST/ENOTEMPTY) if another writer
-  * took the slot first, and the loser retries with N+1. Two
-  * consequences: (a) after `rollback(to=1)` the next publish does NOT
-  * reuse v=2 — it allocates above every directory that ever existed,
-  * so published versions stay immutable and a concurrent time-travel
-  * read can never observe a torn rewrite; (b) two concurrent
-  * publishers both land, on DISTINCT versions, and the pointer swap
-  * serializes which one reads as current (last swap wins — both
-  * versions remain readable and recorded).
-  *
-  * 100 TB / object-store note: POSIX `ATOMIC_MOVE` is the local-FS
-  * stand-in for the commit primitive. On S3 the SAME layout commits via
-  * conditional PUT (If-None-Match/If-Match on `_CURRENT`) or a
-  * table-format catalog swap — strictly a config/committer substitution;
-  * the reader protocol (resolve pointer → scan immutable dir) and every
-  * query on top are unchanged. What this module deliberately does NOT do
-  * is per-file commit tracking (Iceberg manifests, MAN-1's relation
-  * covers that audit): one pointer per table is the minimum that makes
-  * publish atomic, and the minimum is what's demonstrable without a
-  * table-format dependency.
+  * Roots are Hadoop paths on the running session's Hadoop conf; a path
+  * without a scheme is local. 100 TB / object-store note: the primitives
+  * an object store replaces are [[Versioned]]'s never-replacing pair
+  * (create-if-absent, rename-without-replace) and the pointer's overwrite
+  * rename — conditional PUTs (If-None-Match / If-Match on `_CURRENT`) or a
+  * table-format catalog swap; the reader protocol and every query on top
+  * are unchanged. Per-file commit tracking (Iceberg manifests) is
+  * deliberately out: MAN-1's relation covers that audit, and one pointer
+  * per table is the minimum that makes publish atomic.
   */
 object Snapshot {
-  private val POINTER  = "_CURRENT"
   private val MANIFEST = "_PUBLISHED"
   private val FSCKLOCK = "_FSCK_LOCK"
+  private val META     = "_META"
+
+  /** The table at `root`, on the running session's Hadoop conf (where a
+    * non-local scheme is registered). */
+  private def table(root: String): Versioned =
+    Versioned(new Path(root), SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext.hadoopConfiguration)
+      .getOrElse(new org.apache.hadoop.conf.Configuration()))
 
   // ---- fsck/publish mutual exclusion (r11; the r10 verdict's task 4) ----
   //
   // fsck deletes data, so "run it offline" must be ENFORCED, not
   // documented. The protocol is the store-barrier pattern on the
-  // module's own rename-as-CAS idiom:
+  // module's own create-if-absent:
   //
   //   publisher:  create `.publisher-*` intent marker  →  check lease
-  //   fsck:       CAS-claim `_FSCK_LOCK` lease          →  check markers
+  //   fsck:       claim `_FSCK_LOCK` lease              →  check markers
   //
   // Each side WRITES its own flag before READING the other's, so every
   // interleaving has at least one side observe the other and back off:
@@ -74,169 +66,140 @@ object Snapshot {
   // on disk when fsck's later marker check ran — fsck refuses; if fsck's
   // marker check saw no markers, the lease was already claimed when the
   // publisher's later check ran — the publisher refuses. Crash recovery
-  // is same-host pid liveness (the module is the local-FS stand-in —
-  // SURVEY §2.1; on an object store the lease becomes a conditional PUT
-  // and liveness a TTL): a lease/marker whose owning pid is dead is
-  // reaped by whoever trips over it, so a crashed fsck never wedges
-  // publishing and a crashed publisher never wedges fsck.
+  // is same-host pid liveness (on an object store the lease becomes a
+  // conditional PUT and liveness a TTL): a lease/marker whose owning pid
+  // is dead is reaped by whoever trips over it, so a crashed fsck never
+  // wedges publishing and a crashed publisher never wedges fsck.
 
-  // Lock protocol invariants (the r11 review found rename-onto-a-file is
-  // NOT a CAS on POSIX — rename(2) silently replaces, so a move-based
-  // claim lets two fscks both "win" and a release then deletes the
-  // other's lock):
-  //   CLAIM  = Files.createFile (O_EXCL — the one true file-level CAS),
-  //            then write the owner pid. A reader between the create and
-  //            the write sees empty content and treats the lease as HELD.
+  // Lock protocol invariants (rename onto a file is NOT a claim: it
+  // silently replaces, so two fscks could both "win"):
+  //   CLAIM  = Versioned.createIfAbsent (O_EXCL on the local FS), holding
+  //            the owner pid. A reader between the create and the write
+  //            sees empty content and treats the lease as HELD.
   //   RELEASE = the owner deletes its own lock by path. Safe because no
   //            other actor ever deletes or replaces a LIVE owner's lock
   //            (see REAP), so the path still names the owner's file.
   //   REAP   = on reading a provably-dead pid, move the lock ASIDE to a
-  //            unique graveyard name (atomic; exactly one reaper wins,
-  //            losers get NoSuchFile and re-read). Between the read and
-  //            the move the content cannot have changed hands: claims
-  //            only go through createFile, which fails while the dead
-  //            file still occupies the path. The moved-aside file is
-  //            inert and deleted by its reaper.
-  private def reapDeadLock(p: Path): Unit = {
-    val grave = p.resolveSibling(
-      s".${p.getFileName}.dead.${ProcessHandle.current().pid()}-${System.nanoTime()}")
-    try { Files.move(p, grave, StandardCopyOption.ATOMIC_MOVE)
-      Files.deleteIfExists(grave); () }
-    catch { case _: java.nio.file.FileSystemException => () } // lost the reap race
+  //            unique graveyard name (exactly one reaper wins, losers find
+  //            no source and re-read). Between the read and the move the
+  //            content cannot have changed hands: claims only go through
+  //            createIfAbsent, which fails while the dead file still
+  //            occupies the path. The moved-aside file is inert and
+  //            deleted by its reaper.
+  private def reapDeadLock(t: Versioned, p: Path): Unit = {
+    val grave = t.child(
+      s".${p.getName}.dead.${ProcessHandle.current().pid()}-${System.nanoTime()}")
+    try { if (t.fs.rename(p, grave)) t.fs.delete(grave, false); () }
+    catch { case _: java.io.IOException => () } // lost the reap race
   }
 
-  /** Owner pid of the lock at `p`: Some(alive?) when readable, None when
-    * the lock is absent. Empty/unreadable content reads as ALIVE — the
+  /** Whether the pid written in a lock or marker is alive; None when the
+    * content is not a pid (yet). */
+  private def pidAlive(txt: String): Option[Boolean] = for {
+    pid <- txt.trim.toLongOption
+    up  <- scala.util.Try(ProcessHandle.of(pid).isPresent).toOption
+  } yield up
+
+  /** Owner pid of the lock at `p`: Some(alive?) when present, None when
+    * the lock is absent. Empty/unparsable content reads as ALIVE — the
     * claim's pid write may still be in flight; fail closed — UNLESS the
     * file is over ten minutes old (a claimer that died between the
     * exclusive create and the pid write would otherwise wedge the root
     * forever: its empty lock never parses, so it never reads as dead). */
-  private def lockAlive(p: Path): Option[Boolean] = {
-    if (!Files.exists(p)) return None
-    val parsed = for {
-      txt <- scala.util.Try(Files.readString(p)).toOption
-      pid <- txt.trim.toLongOption
-      up  <- scala.util.Try(ProcessHandle.of(pid).isPresent).toOption
-    } yield up
-    Some(parsed.getOrElse {
-      val age = scala.util.Try(
-        System.currentTimeMillis - Files.getLastModifiedTime(p).toMillis)
-      age.toOption.forall(_ < 10L * 60 * 1000)
-    })
-  }
+  private def lockAlive(t: Versioned, p: Path): Option[Boolean] =
+    t.read(p).map { txt =>
+      pidAlive(txt).getOrElse {
+        val age = scala.util.Try(
+          System.currentTimeMillis - t.fs.getFileStatus(p).getModificationTime)
+        age.toOption.forall(_ < 10L * 60 * 1000)
+      }
+    }
 
   /** True iff a LIVE fsck holds the root's lease; a provably-dead
     * owner's lock (crashed fsck, same host) is reaped on the way. */
-  private def fsckLeaseHeld(root: String): Boolean = {
-    val p = Paths.get(root, FSCKLOCK)
-    lockAlive(p) match {
+  private def fsckLeaseHeld(t: Versioned): Boolean = {
+    val p = t.child(FSCKLOCK)
+    lockAlive(t, p) match {
       case None        => false
       case Some(true)  => true
-      case Some(false) => reapDeadLock(p); false
+      case Some(false) => reapDeadLock(t, p); false
     }
   }
 
-  /** Claim the fsck lease via exclusive create. Returns the release
+  /** Claim the fsck lease via create-if-absent. Returns the release
     * handle. Throws if a live fsck already holds it. Package-visible so
     * SnapshotSpec can hold the lease open across a racing publish. */
   private[graft] def acquireFsckLease(root: String): () => Unit = {
-    Files.createDirectories(Paths.get(root))
-    val p = Paths.get(root, FSCKLOCK)
-    var claimed = false
-    while (!claimed) {
-      lockAlive(p) match {
+    val t = table(root)
+    t.fs.mkdirs(t.root)
+    val p = t.child(FSCKLOCK)
+    while (!t.createIfAbsent(p, ProcessHandle.current().pid().toString))
+      lockAlive(t, p) match {
         case Some(true) =>
           throw new IllegalStateException(s"fsck lease on $root already held")
-        case Some(false) => reapDeadLock(p)
-        case None => ()
+        case Some(false) => reapDeadLock(t, p)
+        case None => () // released meanwhile: claim again
       }
-      try { Files.createFile(p); claimed = true }
-      catch { case _: java.nio.file.FileAlreadyExistsException => () } // re-read
-    }
-    Files.writeString(p, ProcessHandle.current().pid().toString)
-    () => { Files.deleteIfExists(p); () }
+    () => { t.fs.delete(p, false); () }
   }
 
   /** Run `body` under a publisher intent marker, refusing when a live
     * fsck holds the lease (marker BEFORE check — see the barrier note). */
-  private def withPublisherIntent[T](root: String, what: String)(body: => T): T = {
-    Files.createDirectories(Paths.get(root))
-    val intent = Paths.get(root,
-      s".publisher-${ProcessHandle.current().pid()}-" +
-        s"${Thread.currentThread().getId}-${System.nanoTime()}")
-    Files.writeString(intent, ProcessHandle.current().pid().toString)
+  private def withPublisherIntent[T](root: String, what: String)(body: Versioned => T): T = {
+    val t = table(root)
+    t.fs.mkdirs(t.root)
+    val intent = t.fresh(".publisher-")
+    t.createIfAbsent(intent, ProcessHandle.current().pid().toString)
     try {
-      if (fsckLeaseHeld(root))
+      if (fsckLeaseHeld(t))
         throw new IllegalStateException(
           s"$what on $root refused: fsck holds $FSCKLOCK (offline maintenance in progress)")
-      body
-    } finally { Files.deleteIfExists(intent); () }
-  }
-
-  private def vdir(root: String, v: Long): Path = Paths.get(root, s"v=$v")
-
-  /** Every `v=N` directory present on disk (committed or orphaned).
-    * Package-visible: the streaming epoch guard's legacy-root fallback
-    * scans these when the `_PUBLISHED` manifest doesn't exist yet. */
-  private[graft] def diskVersions(root: String): Seq[Long] = {
-    val dir = Paths.get(root)
-    if (!Files.exists(dir)) return Nil
-    val kids = dir.toFile.listFiles()
-    if (kids == null) Nil
-    else kids.toSeq.flatMap(f =>
-      if (f.getName.startsWith("v=")) f.getName.drop(2).toLongOption else None)
+      body(t)
+    } finally { t.fs.delete(intent, false); () }
   }
 
   /** Versions recorded as committed in the `_PUBLISHED` manifest, in
     * publish order. The manifest is append-only — rollback re-points
     * `_CURRENT` but never erases history, so fsck can tell "committed,
     * later rolled past" apart from "crashed writer's orphan". */
-  def publishedVersions(root: String): Seq[Long] = {
-    val p = Paths.get(root, MANIFEST)
-    if (!Files.exists(p)) Nil
-    else Files.readString(p).linesIterator.flatMap(_.trim.toLongOption).toSeq
-  }
+  def publishedVersions(root: String): Seq[Long] = manifest(table(root))
 
-  private def recordPublished(root: String, v: Long): Unit = {
+  private def manifest(t: Versioned): Seq[Long] =
+    t.read(t.child(MANIFEST)).toSeq.flatMap(_.linesIterator.flatMap(_.trim.toLongOption))
+
+  /** The committed history of a root published by pre-manifest code:
+    * publishes were strictly sequential and the pointer never moved
+    * backwards, so every disk version ≤ the pointer is committed. */
+  private def legacyCommitted(t: Versioned): Seq[Long] =
+    t.current.toSeq.flatMap(cur => t.versions.filter(_ <= cur)).sorted
+
+  private def recordPublished(t: Versioned, v: Long): Unit = {
     // Mixed-history upgrade: a root published by pre-manifest code has
     // versions on disk and a pointer but no `_PUBLISHED`. The first
     // post-upgrade publish would otherwise create a manifest containing
     // ONLY the new version, and fsck would read every legacy committed
-    // version as an orphan. Backfill first: under the legacy invariant
-    // (strictly sequential publishes, pointer never moved backwards),
-    // every disk version ≤ the pointer is committed — record them before
-    // the new id so the manifest covers the whole committed history.
-    val mp = Paths.get(root, MANIFEST)
-    if (!Files.exists(mp)) currentVersion(root).foreach { cur =>
-      val legacy = diskVersions(root).filter(_ <= cur).sorted
-      if (legacy.nonEmpty) {
-        // Atomic CLAIM of the backfill, not check-then-append: two
-        // concurrent first-post-upgrade publishers would both pass the
-        // exists() check and double-append the legacy ids. CREATE_NEW
-        // (O_EXCL) makes exactly one writer create the manifest; the
-        // loser proceeds straight to appending its own id. (The previous
-        // stage-and-ATOMIC_MOVE claim was NOT a claim on POSIX: rename
-        // onto an existing file silently replaces it, so the losing
-        // publisher's move could overwrite a manifest the winner had
-        // already appended its new id to — erasing a committed version
-        // from the manifest and exposing it to the fsck sweep.)
-        try Files.writeString(mp, legacy.mkString("", "\n", "\n"),
-          java.nio.file.StandardOpenOption.CREATE_NEW)
-        catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      }
+    // version as an orphan. Backfill first, so the manifest covers the
+    // whole committed history.
+    val mp = t.child(MANIFEST)
+    if (!t.fs.exists(mp)) {
+      val legacy = legacyCommitted(t)
+      // Atomic CLAIM of the backfill, not check-then-append: two
+      // concurrent first-post-upgrade publishers would both pass the
+      // exists() check and double-append the legacy ids. Create-if-absent
+      // makes exactly one writer create the manifest; the loser proceeds
+      // straight to appending its own id. (A stage-and-rename would not
+      // do: rename onto an existing file replaces it, erasing ids the
+      // winner already appended and exposing them to the fsck sweep.)
+      if (legacy.nonEmpty) t.createIfAbsent(mp, legacy.mkString("", "\n", "\n"))
     }
-    Files.writeString(mp, s"$v\n",
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
+    t.append(mp, s"$v\n")
   }
 
   /** The published version id, or None if nothing has been published.
-    * Torn reads are impossible: the pointer is only ever replaced by
-    * `ATOMIC_MOVE`, so its content is always a complete version number. */
-  def currentVersion(root: String): Option[Long] = {
-    val p = Paths.get(root, POINTER)
-    if (Files.exists(p)) Some(Files.readString(p).trim.toLong) else None
-  }
+    * Torn reads are impossible: the pointer is only ever replaced by an
+    * atomic overwrite rename, so its content is always a complete version
+    * number. */
+  def currentVersion(root: String): Option[Long] = table(root).current
 
   /** Publish `df` as the next version: write the data fully, then swap
     * the pointer. Returns the published version id.
@@ -245,123 +208,112 @@ object Snapshot {
     * directory BEFORE the pointer moves, so a published version is
     * self-describing (scans ignore underscore-prefixed files). The
     * streaming sink uses this to stamp each version with the epoch that
-    * produced it — the replay guard reads it back instead of keeping
-    * sink-side state that could diverge from the store. */
+    * produced it — the replay guard reads it back ([[latestMeta]])
+    * instead of keeping sink-side state that could diverge from the
+    * store. */
   def publish(df: DataFrame, root: String,
               meta: Map[String, String] = Map.empty): Long =
-      withPublisherIntent(root, "publish") {
+      withPublisherIntent(root, "publish") { t =>
     // Stage fully OUTSIDE any version slot: parquet write + _META land in
     // a hidden temp directory no reader resolves, so nothing about the
-    // slot is observable until the rename below.
-    val stage = Paths.get(root,
-      s".staging-${ProcessHandle.current().pid()}-${System.nanoTime()}")
+    // slot is observable until the claim.
+    val stage = t.fresh(".staging-")
     df.write.mode("overwrite").parquet(stage.toString)
     if (meta.nonEmpty)
-      Files.writeString(stage.resolve("_META"),
-        meta.map { case (k, v) => s"$k=$v" }.mkString("\n"))
-    // Claim a slot ABOVE every directory that ever existed (not the
-    // pointer — after rollback the pointer is behind live versions), via
-    // rename(2): atomic claim because the target existing (even as
-    // another writer's just-renamed data) makes the move fail, and the
-    // loser retries one id higher. No read-modify-write window.
-    var next = (diskVersions(root) :+ 0L).max + 1L
-    var claimed = false
-    while (!claimed) {
-      try {
-        Files.move(stage, vdir(root, next), StandardCopyOption.ATOMIC_MOVE)
-        claimed = true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => next += 1L
-        case _: java.nio.file.DirectoryNotEmptyException => next += 1L
-        case _: java.nio.file.FileSystemException
-          if Files.exists(vdir(root, next)) => next += 1L
-      }
-    }
-    recordPublished(root, next)
-    swapPointer(root, next)
-    next
+      t.write(new Path(stage, META), meta.map { case (k, v) => s"$k=$v" }.mkString("\n"))
+    val v = t.claim(stage)
+    recordPublished(t, v)
+    t.swap(v)
+    v
   }
 
   /** The `_META` sidecar of a version (empty map if none was written). */
-  def meta(root: String, v: Long): Map[String, String] = {
-    val p = vdir(root, v).resolve("_META")
-    if (!Files.exists(p)) Map.empty
-    else Files.readString(p).linesIterator.filter(_.contains("="))
-      .map { l => val Array(k, rest) = l.split("=", 2); k -> rest }.toMap
+  def meta(root: String, v: Long): Map[String, String] = metaOf(table(root), v)
+
+  private def metaOf(t: Versioned, v: Long): Map[String, String] =
+    t.read(new Path(t.vdir(v), META)).fold(Map.empty[String, String]) {
+      _.linesIterator.filter(_.contains("="))
+        .map { l => val Array(k, rest) = l.split("=", 2); k -> rest }.toMap
+    }
+
+  /** The `key` entry of the newest committed version whose `_META` has
+    * one: the manifest's history scanned newest-first, or — on a root
+    * published before the manifest existed, whose history is empty until
+    * the next publish backfills it — the legacy-committed versions. A
+    * rollback or a plain un-stamped publish can leave the tip without the
+    * key while older versions carry it, so the tip alone is not enough. */
+  def latestMeta(root: String, key: String): Option[String] = {
+    val t = table(root)
+    val history = manifest(t)
+    val scan = if (history.nonEmpty) history else legacyCommitted(t)
+    scan.reverseIterator.flatMap(v => metaOf(t, v).get(key)).nextOption()
   }
 
   /** Point `_CURRENT` back at an existing, fully-published version — the
     * O(1) bad-deploy undo. Fails fast if the target version's data is
     * absent (rolling back to a never-published id would publish nothing). */
   def rollback(root: String, toVersion: Long): Unit =
-      withPublisherIntent(root, "rollback") {
+      withPublisherIntent(root, "rollback") { t =>
     // Rollback must also respect the fsck lease: fsck's legacy-commit arm
     // reads the pointer (committed iff v ≤ pointer on a pre-manifest
     // root), so a pointer moving DOWN mid-sweep could orphan a legacy
     // version the sweep then deletes.
-    require(Files.exists(vdir(root, toVersion)),
+    require(t.fs.exists(t.vdir(toVersion)),
       s"rollback target v=$toVersion has no data directory under $root")
-    swapPointer(root, toVersion)
+    t.swap(toVersion)
   }
 
   /** Read the published version (or a pinned one for time travel). */
   def read(spark: SparkSession, root: String, version: Option[Long] = None): DataFrame = {
-    val v = version.orElse(currentVersion(root)).getOrElse(
+    val t = table(root)
+    val v = version.orElse(t.current).getOrElse(
       sys.error(s"no published version under $root"))
-    spark.read.parquet(vdir(root, v).toString)
+    spark.read.parquet(t.vdir(v).toString)
   }
 
-  /** The declared fsck (scaladoc above): sweep orphan `v=N` directories
-    * left by crashed writers — a manifest-era version that is on disk but
-    * NOT in the `_PUBLISHED` manifest never committed (publish records
-    * the id before the pointer swap, so a manifest miss means the writer
-    * died mid-rename or the directory was hand-planted). Versions
-    * PREDATING the manifest (mixed-history roots) are committed iff ≤ the
-    * pointer — the pre-manifest code's own invariant; see the bounded
-    * union in the body. Committed versions
-    * are untouched REGARDLESS of the pointer position — after a
-    * rollback, versions above the pointer that were once published are
-    * audit/re-roll-forward targets, not garbage. Also sweeps abandoned
-    * `.staging-*` temp directories from crashed writers. Returns the
-    * removed version ids (staging sweeps are not versioned). */
-  /** EXCLUSIVITY (ENFORCED, r11): fsck claims the `_FSCK_LOCK` lease by
-    * rename-as-CAS and refuses to run while any live publisher intent
+  /** The declared fsck: sweep orphan `v=N` directories left by crashed
+    * writers — a manifest-era version that is on disk but NOT in the
+    * `_PUBLISHED` manifest never committed (publish records the id before
+    * the pointer swap, so a manifest miss means the writer died
+    * mid-claim or the directory was hand-planted). Versions PREDATING the
+    * manifest (mixed-history roots) are committed iff ≤ the pointer — the
+    * pre-manifest code's own invariant; see the bounded union in the
+    * sweep. Committed versions are untouched REGARDLESS of the pointer
+    * position — after a rollback, versions above the pointer that were
+    * once published are audit/re-roll-forward targets, not garbage. Also
+    * sweeps abandoned `.staging-*` temp directories from crashed writers.
+    * Returns the removed version ids (staging sweeps are not versioned).
+    *
+    * EXCLUSIVITY (ENFORCED, r11): fsck claims the `_FSCK_LOCK` lease by
+    * create-if-absent and refuses to run while any live publisher intent
     * marker exists; publish/rollback create their marker BEFORE checking
     * the lease, so the two sides cannot both proceed (barrier note at the
     * top of this object). A racing publish therefore fails fast instead
-    * of having its just-renamed `v=N` (manifest append still in flight)
+    * of having its just-claimed `v=N` (manifest append still in flight)
     * or live `.staging-*` read as orphaned; a crashed publisher's or
     * fsck's flag is reaped by same-host pid liveness. Throws
     * IllegalStateException when the root is busy — rerun when quiet,
     * exactly like compaction. */
   def fsck(root: String): Seq[Long] = {
-    val dir = Paths.get(root)
-    if (!Files.exists(dir)) return Nil
+    val t = table(root)
+    if (!t.fs.exists(t.root)) return Nil
     val release = acquireFsckLease(root)
     try {
       // Reap markers from crashed publishers (dead pid, same host), then
       // refuse if any LIVE publisher is in flight.
-      val markers = Option(dir.toFile.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith(".publisher-"))
-      markers.foreach { m =>
-        val alive = (for {
-          txt <- scala.util.Try(Files.readString(m.toPath)).toOption
-          pid <- txt.trim.toLongOption
-          up  <- scala.util.Try(ProcessHandle.of(pid).isPresent).toOption
-        } yield up).getOrElse(true)
-        if (!alive) { m.delete(); () }
+      t.names.filter(_.startsWith(".publisher-")).foreach { m =>
+        val p = t.child(m)
+        if (t.read(p).flatMap(pidAlive).contains(false)) t.fs.delete(p, false)
       }
-      val live = Option(dir.toFile.listFiles()).getOrElse(Array.empty)
-        .count(_.getName.startsWith(".publisher-"))
+      val live = t.names.count(_.startsWith(".publisher-"))
       if (live > 0)
         throw new IllegalStateException(
           s"fsck on $root refused: $live publisher(s) in flight")
-      fsckSweep(root)
+      fsckSweep(t)
     } finally release()
   }
 
-  private def fsckSweep(root: String): Seq[Long] = {
-    val dir = Paths.get(root)
+  private def fsckSweep(t: Versioned): Seq[Long] = {
     // Deleting committed data is the unrecoverable failure mode, so fsck
     // unions two commit invariants — but the legacy arm is BOUNDED so it
     // cannot shelter manifest-era orphans:
@@ -378,48 +330,19 @@ object Snapshot {
     // the pointer — indistinguishable from a legacy commit by the legacy
     // code's own invariant, retained exactly as the old fallback retained
     // it (never newly-leaked disk).
-    val recorded = publishedVersions(root).toSet
+    val recorded = manifest(t).toSet
     val minRecorded = if (recorded.isEmpty) Long.MaxValue else recorded.min
-    val cur = currentVersion(root).getOrElse(Long.MinValue)
+    val cur = t.current.getOrElse(Long.MinValue)
     val committed: Long => Boolean =
       v => recorded.contains(v) || (v <= cur && v < minRecorded)
-    val removed = scala.collection.mutable.ArrayBuffer[Long]()
-    val kids = dir.toFile.listFiles()
-    if (kids != null) kids.foreach { f =>
-      val n = f.getName
-      if (n.startsWith("v=")) n.drop(2).toLongOption.foreach { v =>
-        // Re-read the manifest immediately before each delete: a publish
-        // that appended its id after this fsck's initial snapshot must
-        // not have its data swept (narrows, not closes, the race window —
-        // see the exclusivity note above).
-        if (!committed(v) && !publishedVersions(root).contains(v)) {
-          deleteRec(f); removed += v
-        }
+    // The sweep re-reads the manifest immediately before each delete: a
+    // publish that appended its id after this fsck's initial snapshot
+    // must not have its data swept (narrows, not closes, the race window
+    // — see the exclusivity note above).
+    t.sweep { n =>
+      n.startsWith(".staging-") || Versioned.versionOf(n).exists { v =>
+        !committed(v) && !manifest(t).contains(v)
       }
-      else if (n.startsWith(".staging-")) deleteRec(f)
-    }
-    removed.sorted.toSeq
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    val kids = f.listFiles(); if (kids != null) kids.foreach(deleteRec)
-    f.delete(); ()
-  }
-
-  /** The atomic commit: readers observe the pointer before or after,
-    * never in between. `REPLACE_EXISTING` + `ATOMIC_MOVE` is a single
-    * rename(2) on POSIX — the same primitive a Hive-style job commit
-    * relies on, applied to one tiny file instead of a directory tree. */
-  private def swapPointer(root: String, v: Long): Unit = {
-    Files.createDirectories(Paths.get(root))
-    // Unique per ATTEMPT (pid + thread + nanotime), not per process: the
-    // module supports concurrent publishers, and two threads in one JVM
-    // sharing a pid-keyed temp path could interleave a write with the
-    // other's rename — tearing the very pointer this move keeps atomic.
-    val tmp = Paths.get(root, s".$POINTER.tmp.${ProcessHandle.current().pid()}-" +
-      s"${Thread.currentThread().getId}-${System.nanoTime()}")
-    Files.writeString(tmp, v.toString)
-    Files.move(tmp, Paths.get(root, POINTER),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    }.flatMap(Versioned.versionOf).sorted
   }
 }

@@ -337,7 +337,9 @@ object Ingestion extends QueryModule {
       graft.core.Snapshot.publish(
         base.withColumn("o_totalprice", col("o_totalprice") + lit(50.0)), out)
       // Crashed publish: files land under v=3 but _CURRENT still says 2.
-      base.limit(10).write.mode("overwrite").parquet(s"$out/v=3")
+      base.limit(10).write.mode("overwrite").parquet(graft.core.Versioned(
+        new org.apache.hadoop.fs.Path(out), s.sparkContext.hadoopConfiguration)
+        .vdir(3L).toString)
     }
 
   /** Snapshot store for the version diff: v1 = orders keyslice

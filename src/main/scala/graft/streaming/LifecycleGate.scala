@@ -93,10 +93,6 @@ object LifecycleGate {
       ()
     } catch { case _: Exception => () }
 
-  /** Release the snapshot publish ONLY on a clean run: evaluate the
-    * listener's (drained) records; publish `df` as the next version of
-    * `root` iff the gate releases, stamping the decision into the version
-    * `_META`. Returns the published version, or None when the gate held. */
   /** Drain the listener and produce the gate's full verdict — the entry
     * point for callers that must distinguish a held-by-timeout run
     * (retriable: re-await and re-decide) from a held-by-failure run
@@ -107,6 +103,10 @@ object LifecycleGate {
     evaluate(seen, timedOut = seen.isEmpty)
   }
 
+  /** Release the snapshot publish ONLY on a clean run: evaluate the
+    * listener's (drained) records; publish `df` as the next version of
+    * `root` iff the gate releases, stamping the decision into the version
+    * `_META`. Returns the published version, or None when the gate held. */
   def publishIfClean(listener: StatusListener, df: DataFrame, root: String,
                      meta: Map[String, String] = Map.empty,
                      timeoutMs: Long = 2000): Option[Long] = {

@@ -95,9 +95,8 @@ object StreamOps {
           // Versioned-store commit protocol — runSrcKeyedIngest's rule
           // applied to the notified store (it is `_src`-keyed too):
           // resolve, mutate inside the current version, re-validate.
-          val base = new org.apache.hadoop.fs.Path(outDir)
-          val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val (v, vd) = resolveForWrite(spark, fs, base)
+          val t = storeTable(spark, outDir)
+          val v = t.bootstrap()
           val reader = spark.read.schema(schema)
           val src = format match {
             case "csv" => reader.option("header", true).option("escape", "\"")
@@ -112,8 +111,8 @@ object StreamOps {
           src.withColumn("_src", md5(input_file_name()))
             .write.partitionBy("_src").mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
-            .parquet(vd.toString)
-          if (!storeVersion(fs, base).contains(v))
+            .parquet(t.vdir(v).toString)
+          if (!t.current.contains(v))
             throw new java.io.IOException(
               s"notified load superseded: $outDir advanced past v=$v " +
                 "while this micro-batch was writing — left uncommitted " +
@@ -163,9 +162,6 @@ object StreamOps {
         val srcs = withSrc.select(col("_src")).distinct()
           .collect().map(_.getString(0))
         if (srcs.nonEmpty) {
-          val conf = spark.sparkContext.hadoopConfiguration
-          val base = new org.apache.hadoop.fs.Path(outDir)
-          val fs = base.getFileSystem(conf)
           // Versioned-store commit protocol (r14, closes the lost-append
           // race the r12/r13 sentinel could only narrow): resolve the
           // pointer, mutate ONLY inside that version directory, then
@@ -177,15 +173,17 @@ object StreamOps {
           // inside whichever version is now current. (If the compaction
           // DID see the append, redelivery is a no-op rewrite of the
           // same _src partitions — idempotent by the keying.)
-          val (v, vd) = resolveForWrite(spark, fs, base)
+          val t = storeTable(spark, outDir)
+          val v = t.bootstrap()
+          val vd = t.vdir(v)
           srcs.foreach { h =>
-            fs.delete(new org.apache.hadoop.fs.Path(vd, s"_src=$h"), true)
+            t.fs.delete(new org.apache.hadoop.fs.Path(vd, s"_src=$h"), true)
           }
           rowsFor(withSrc)
             .write.partitionBy(partSpec: _*).mode("append")
             .parquet(vd.toString)
           ingestPostAppendHook()
-          if (!storeVersion(fs, base).contains(v))
+          if (!t.current.contains(v))
             throw new java.io.IOException(
               s"ingest superseded: $outDir advanced past v=$v while this " +
                 "micro-batch was appending — left uncommitted; the " +
@@ -380,15 +378,12 @@ object StreamOps {
   /** The mutual-exclusion marker a live compaction holds on a store —
     * COMPACTOR-vs-COMPACTOR only since r14 (writers coordinate through
     * the version pointer instead; see the versioned-layout note below).
-    *
-    * FILESYSTEM-ATOMICITY ASSUMPTION (ADVICE r13): acquisition relies on
-    * `FileSystem.create(overwrite=false)` being an atomic
-    * create-if-absent — true for the local FS and HDFS this module runs
-    * on, NOT for object stores (S3A), where two passes can both
-    * "acquire". The version-pointer swap below likewise assumes
-    * `rename(2)` atomicity. On an object store both become conditional
-    * PUTs (If-None-Match / If-Match) — the same substitution
-    * [[graft.core.Snapshot]]'s scaladoc names for `_CURRENT`. */
+    * It is acquired through [[graft.core.Versioned]]'s create-if-absent:
+    * an `O_EXCL` create on the local FS and `create(overwrite = false)`
+    * elsewhere, which is atomic on HDFS. Hadoop's own local
+    * `create(overwrite = false)` is NOT atomic (exists-then-open), and
+    * neither is an object store's: there two passes can both "acquire"
+    * unless the create becomes a conditional PUT (If-None-Match). */
   private def compactionSentinel(store: org.apache.hadoop.fs.Path)
       : org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(store.getParent,
@@ -396,85 +391,25 @@ object StreamOps {
 
   // ---- Versioned streamed-store layout (r14, the r13 verdict's task 4) --
   //
-  //   <store>/v=N/_src=…/…     version directories; v=N is the LIVE
-  //                            append target while the pointer names it,
-  //                            frozen forever once the pointer moves on
-  //   <store>/_CURRENT         pointer file: the served version id
+  // A [[graft.core.Versioned]] table: `<store>/v=N/_src=…/…` version
+  // directories plus the `_CURRENT` pointer. v=N is the LIVE append
+  // target while the pointer names it, frozen forever once the pointer
+  // moves on.
   //
   // Writers ([[runSrcKeyedIngest]], [[runNotifiedLoad]]) resolve the
-  // pointer, mutate ONLY inside that version directory, and RE-VALIDATE
-  // the pointer after their append commits — a moved pointer throws,
-  // leaving the micro-batch uncommitted for the checkpointed source to
-  // redeliver against the new current version. [[compactStore]] publishes
-  // v+1 from a snapshot of v and swaps the pointer; readers
+  // pointer (bootstrapping v=1 on a store's first micro-batch), mutate
+  // ONLY inside that version directory, and RE-VALIDATE the pointer after
+  // their append commits — a moved pointer throws, leaving the
+  // micro-batch uncommitted for the checkpointed source to redeliver
+  // against the new current version. [[compactStore]] publishes a new
+  // version from a snapshot of v and swaps the pointer; readers
   // ([[readStore]]) resolve-then-scan. The lost-append race the r12/r13
   // sentinel could only NARROW is closed by construction — see
   // [[compactStore]]'s proof sketch.
 
-  private val StorePointer = "_CURRENT"
-
-  private def storePointerPath(store: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(store, StorePointer)
-
-  private def storeVdir(store: org.apache.hadoop.fs.Path, v: Long) =
-    new org.apache.hadoop.fs.Path(store, s"v=$v")
-
-  /** The pointer's version id, or None when the store is unversioned or
-    * absent. Torn reads are impossible: the pointer is only ever replaced
-    * by an atomic rename (see the FS-atomicity note above). */
-  private def storeVersion(fs: org.apache.hadoop.fs.FileSystem,
-      store: org.apache.hadoop.fs.Path): Option[Long] = {
-    val p = storePointerPath(store)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val line = new java.io.BufferedReader(
-          new java.io.InputStreamReader(in, "UTF-8")).readLine()
-        Option(line).map(_.trim.toLong)
-      } finally in.close()
-    }
-  }
-
-  /** Swap the store pointer atomically: write a temp sibling, then one
-    * overwrite-rename (FileContext — FileSystem.rename refuses existing
-    * destinations). */
-  private def swapStorePointer(spark: SparkSession,
-      store: org.apache.hadoop.fs.Path, v: Long): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = store.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(store,
-      s".$StorePointer.tmp.${ProcessHandle.current().pid()}-${System.nanoTime()}")
-    val out = fs.create(tmp, true)
-    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(store.toUri, conf)
-      .rename(tmp, storePointerPath(store),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
-  /** Writer-side resolve: the current (version, data dir), bootstrapping
-    * `v=1` + pointer on a store's first micro-batch. The bootstrap claim
-    * is a no-overwrite rename (atomic create-if-absent), so two racing
-    * first writers converge on one pointer. */
-  private def resolveForWrite(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      store: org.apache.hadoop.fs.Path)
-      : (Long, org.apache.hadoop.fs.Path) =
-    storeVersion(fs, store) match {
-      case Some(v) => (v, storeVdir(store, v))
-      case None =>
-        fs.mkdirs(storeVdir(store, 1L))
-        val tmp = new org.apache.hadoop.fs.Path(store,
-          s".$StorePointer.boot.${ProcessHandle.current().pid()}-${System.nanoTime()}")
-        val out = fs.create(tmp, true)
-        try out.write("1".getBytes("UTF-8")) finally out.close()
-        // rename WITHOUT overwrite: loses (returns false) iff another
-        // writer's pointer landed first — either way, re-read.
-        if (!fs.rename(tmp, storePointerPath(store))) fs.delete(tmp, false)
-        val v = storeVersion(fs, store).getOrElse(sys.error(
-          s"store $store: pointer vanished during bootstrap"))
-        (v, storeVdir(store, v))
-    }
+  private def storeTable(spark: SparkSession, storeDir: String): graft.core.Versioned =
+    graft.core.Versioned(new org.apache.hadoop.fs.Path(storeDir),
+      spark.sparkContext.hadoopConfiguration)
 
   /** Resolve-then-scan read of a versioned streamed store; unversioned
     * directories (no `_CURRENT`) read as plain parquet so pre-versioning
@@ -485,12 +420,8 @@ object StreamOps {
   /** The CURRENT version's data directory (the store root itself for an
     * unversioned layout) — the path tests and maintenance tooling mutate. */
   def storeDataDir(spark: SparkSession, storeDir: String): String = {
-    val store = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    storeVersion(fs, store) match {
-      case Some(v) => storeVdir(store, v).toString
-      case None    => storeDir
-    }
+    val t = storeTable(spark, storeDir)
+    t.current.fold(storeDir)(t.vdir(_).toString)
   }
 
   // Test-only fault injection (StreamingSpec's race tests drive the
@@ -514,22 +445,22 @@ object StreamOps {
     * task 4 — upgrading the r12/r13 sentinel, which could only NARROW
     * it). The store lives behind a version pointer (layout note above):
     * this pass snapshots the current version v's file listing (L0),
-    * compacts v's content into an immutable new `v+1` directory, re-lists
-    * v (L1 — a change aborts with the pointer untouched), swaps the
-    * pointer to v+1, then re-lists v a FINAL time (L2): if anything
-    * landed between L1 and the swap, the pointer is rolled back to v and
-    * the pass reports the race — the appended rows are still in v, which
-    * is current again. Why no committed append can be lost: a writer
-    * commits its micro-batch only if its OWN post-append pointer read
-    * (which runs after its job commit makes its files listable) still
-    * says v. If that read preceded the swap, the files it committed are
-    * listable at L2 — either they were already in the compaction's input
-    * (L0 saw them) or L2 ≠ L0 rolls the pointer back; if it followed the
-    * swap, the writer threw and the batch redelivers into v+1. Every
-    * interleaving ends with the append in the served version or
-    * redelivered — never silently dropped. Quiescence is therefore no
-    * longer a correctness contract, just the way to avoid wasted
-    * (rolled-back or redelivered) work.
+    * compacts v's content into an immutable new version directory (the
+    * next free slot, normally v+1), re-lists v (L1 — a change aborts with
+    * the pointer untouched), swaps the pointer to the new version, then
+    * re-lists v a FINAL time (L2): if anything landed between L1 and the
+    * swap, the pointer is rolled back to v and the pass reports the race
+    * — the appended rows are still in v, which is current again. Why no
+    * committed append can be lost: a writer commits its micro-batch only
+    * if its OWN post-append pointer read (which runs after its job commit
+    * makes its files listable) still says v. If that read preceded the
+    * swap, the files it committed are listable at L2 — either they were
+    * already in the compaction's input (L0 saw them) or L2 ≠ L0 rolls the
+    * pointer back; if it followed the swap, the writer threw and the
+    * batch redelivers into the new version. Every interleaving ends with
+    * the append in the served version or redelivered — never silently
+    * dropped. Quiescence is therefore no longer a correctness contract,
+    * just the way to avoid wasted (rolled-back or redelivered) work.
     *
     * The `.compacting` sentinel remains as COMPACTOR-vs-COMPACTOR mutual
     * exclusion: a second pass finding it refuses — live and crashed
@@ -571,82 +502,68 @@ object StreamOps {
     * anywhere. */
   def compactStore(spark: SparkSession, storeDir: String,
       keyCols: Seq[String], partSpec: Seq[String]): Unit = {
-    import org.apache.hadoop.fs.Path
-    val store = new Path(storeDir)
-    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sentinel = compactionSentinel(store)
+    val t = storeTable(spark, storeDir)
+    val sentinel = compactionSentinel(t.root)
     // SENTINEL FIRST (review r13): a present sentinel means a pass is
     // live OR crashed, and this code cannot tell which — so it always
     // refuses; the operator confirms nothing is running, removes the
     // marker, and re-calls (the entry sweep below then clears any
     // crashed pass's structural leftovers before a new pass starts).
-    if (fs.exists(sentinel))
+    if (t.fs.exists(sentinel))
       throw new java.io.IOException(
         s"compactStore: $sentinel present — another compaction is live " +
           "on this store, or a crashed pass left its marker; after " +
           "confirming nothing is running, remove it and re-call (the " +
           "entry sweep then clears any crashed pass's leftovers)")
-    if (!fs.exists(store)) return
-    // Acquire the exclusion marker ATOMICALLY (create-new semantics): two
-    // simultaneous passes that both passed the exists-check above race
-    // here and exactly one create succeeds.
-    try fs.create(sentinel, false).close()
-    catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-        throw new java.io.IOException(
-          s"compactStore: $sentinel appeared concurrently — another " +
-            "compaction just started on this store")
-      case e: java.io.IOException if fs.exists(sentinel) =>
-        throw new java.io.IOException(
-          s"compactStore: $sentinel appeared concurrently — another " +
-            "compaction just started on this store", e)
-    }
-    try compactStoreLocked(spark, keyCols, partSpec, store, fs)
+    if (!t.fs.exists(t.root)) return
+    // Two simultaneous passes that both passed the exists-check above
+    // race here, and exactly one create-if-absent succeeds.
+    if (!t.createIfAbsent(sentinel))
+      throw new java.io.IOException(
+        s"compactStore: $sentinel appeared concurrently — another " +
+          "compaction just started on this store")
+    try compactStoreLocked(spark, keyCols, partSpec, t)
     // Every non-crash exit path (success, guard refusal, or the rolled-
     // back race) leaves the pointer naming a complete consistent version,
     // so the marker always lifts here; only a process crash leaves it for
     // the remove-by-hand path above.
-    finally fs.delete(sentinel, false)
+    finally t.fs.delete(sentinel, false)
+  }
+
+  /** A LEGACY unversioned store (content at the root, no pointer)
+    * migrates in place: its entries move to a side directory, the side
+    * directory is claimed as the first version, and the pointer publishes
+    * it. */
+  private def migrateLegacyStore(t: graft.core.Versioned): Long = {
+    import org.apache.hadoop.fs.Path
+    val side = new Path(t.root.getParent, t.root.getName +
+      s".mig-${ProcessHandle.current().pid()}-${System.nanoTime()}")
+    t.fs.mkdirs(side)
+    t.fs.listStatus(t.root).foreach { k =>
+      if (!t.fs.rename(k.getPath, new Path(side, k.getPath.getName)))
+        throw new java.io.IOException(
+          s"compactStore: legacy migration cannot move ${k.getPath}")
+    }
+    val v = t.claim(side)
+    t.swap(v)
+    v
   }
 
   private def compactStoreLocked(spark: SparkSession,
       keyCols: Seq[String], partSpec: Seq[String],
-      store: org.apache.hadoop.fs.Path,
-      fs: org.apache.hadoop.fs.FileSystem): Unit = {
-    import org.apache.hadoop.fs.Path
-    // Resolve the current version; a LEGACY unversioned layout (content
-    // at the store root, no pointer) migrates in place first — two
-    // metadata renames move the content under v=1, then the pointer
-    // publishes it.
-    val v: Long = storeVersion(fs, store) match {
-      case Some(x) => x
-      case None =>
-        val side = new Path(store.getParent, store.getName +
-          s".mig-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-        fs.mkdirs(side)
-        fs.listStatus(store).foreach { k =>
-          if (!fs.rename(k.getPath, new Path(side, k.getPath.getName)))
-            throw new java.io.IOException(
-              s"compactStore: legacy migration cannot move ${k.getPath}")
-        }
-        if (!fs.rename(side, storeVdir(store, 1L)))
-          throw new java.io.IOException(
-            s"compactStore: legacy migration cannot publish v=1 under $store")
-        swapStorePointer(spark, store, 1L)
-        1L
-    }
+      t: graft.core.Versioned): Unit = {
+    val v = t.current.getOrElse(migrateLegacyStore(t))
     // Entry sweep: a crashed pass leaves either an orphan staging dir or
     // an orphan version ABOVE the pointer (data published, pointer never
     // moved — or rolled back after a detected race). Neither is ever
     // served, so both are structural garbage.
-    fs.listStatus(store).foreach { st =>
-      val n = st.getPath.getName
-      val orphanV = n.startsWith("v=") &&
-        n.drop(2).toLongOption.exists(_ > v)
-      if (n.startsWith(".compact-staging-") || orphanV)
-        fs.delete(st.getPath, true)
-    }
-    val cur = storeVdir(store, v)
+    t.sweep(n => n.startsWith(".compact-staging-") ||
+      graft.core.Versioned.versionOf(n).exists(_ > v))
+    val cur = t.vdir(v)
+    // Listed on the session's file system, which hides `.crc` sidecars;
+    // the raw one under `t` would list each file twice, and without
+    // native Hadoop every listed file forks a shell for its permissions.
+    val fs = t.root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def listing(): Set[(String, Long, Long)] = {
       val it = fs.listFiles(cur, true)
       val b = Set.newBuilder[(String, Long, Long)]
@@ -672,13 +589,12 @@ object StreamOps {
       .withColumn("_diverged", !(state <=> first(state).over(w)))
       .observe(obs, count_if(col("_diverged")).as("diverged"))
       .filter(col("_rn") === 1).drop("_rn", "_diverged")
-    val staging = new Path(store,
-      s".compact-staging-${ProcessHandle.current().pid()}-${System.nanoTime()}")
+    val staging = t.fresh(".compact-staging-")
     kept.write.partitionBy(partSpec: _*).mode("overwrite")
       .parquet(staging.toString)
     val diverged = obs.get("diverged").asInstanceOf[Long]
     if (diverged > 0) {
-      fs.delete(staging, true)
+      t.fs.delete(staging, true)
       throw new java.io.IOException(
         s"compactStore: $diverged row(s) carry state that differs from " +
           "their key's row in another _src partition (duplicate-named " +
@@ -689,27 +605,24 @@ object StreamOps {
     // with the pointer untouched (the racing append is in v, still
     // served; the next pass will include it).
     if (listing() != before) {
-      fs.delete(staging, true)
+      t.fs.delete(staging, true)
       throw new java.io.IOException(
         s"compactStore: $cur changed during compaction — the racing " +
           "append is preserved in the served version; rerun the pass")
     }
-    if (!fs.rename(staging, storeVdir(store, v + 1L))) {
-      fs.delete(staging, true)
-      throw new java.io.IOException(
-        s"compactStore: cannot publish ${storeVdir(store, v + 1L)}")
-    }
+    val next = t.claim(staging)
     compactPreSwapHook()
-    swapStorePointer(spark, store, v + 1L)
+    t.swap(next)
     // L2, post-swap re-check — the instant the r12/r13 sentinel could
     // not cover: an append that landed between L1 and the swap has its
     // files listable here (a writer only COMMITS after its post-append
     // pointer read, which runs after its files are listable — if that
     // read preceded our swap, its files precede this listing). Roll the
-    // pointer back: the append is intact in v, served again; v+1 becomes
-    // an orphan above the pointer, swept at the next pass's entry.
+    // pointer back: the append is intact in v, served again; the new
+    // version becomes an orphan above the pointer, swept at the next
+    // pass's entry.
     if (listing() != before) {
-      swapStorePointer(spark, store, v)
+      t.swap(v)
       throw new java.io.IOException(
         s"compactStore: a concurrent append landed in $cur during the " +
           "pointer swap — rolled back; the append is intact in the " +
@@ -717,12 +630,7 @@ object StreamOps {
     }
     // Success: drop versions older than the immediately-previous one
     // (kept as reader grace + rollback target — retention note above).
-    fs.listStatus(store).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("v=") && n.drop(2).toLongOption.exists(_ < v))
-        fs.delete(st.getPath, true)
-    }
-    ()
+    t.dropBelow(v)
   }
 
   /** Documents-schema streaming source over a directory of parquet files —
@@ -1838,30 +1746,9 @@ object StreamOps {
   def publishEpochGuarded(batch: DataFrame, root: String,
                           epoch: Long): Option[Long] = {
     // The guard must survive an INTERLEAVED plain publish (a batch
-    // seeding/repair job stamps no epoch): reading only the CURRENT
-    // version's meta would see no epoch there and wave a redelivered
-    // stale epoch through. Scan the published history back to the last
-    // epoch-stamped version — the manifest is append-only and tiny.
-    // Legacy roots (published before the _PUBLISHED manifest existed)
-    // have an empty history until recordPublished backfills at the NEXT
-    // publish — i.e. after this guard has already run — so an empty
-    // manifest must fall back to scanning the on-disk versions at or
-    // below the pointer, newest-first (the legacy commit invariant), or
-    // the first post-upgrade call waves any redelivered stale epoch
-    // through. Scanning ONLY the current version is not enough: a
-    // rollback or one plain un-stamped publish can leave the tip without
-    // an epoch while older epoch-stamped versions exist.
-    val history = graft.core.Snapshot.publishedVersions(root)
-    val scan =
-      if (history.nonEmpty) history.reverse.iterator
-      else graft.core.Snapshot.currentVersion(root).iterator.flatMap { cur =>
-        graft.core.Snapshot.diskVersions(root).filter(_ <= cur)
-          .sorted.reverse.iterator
-      }
-    val published = scan
-      .flatMap(v => graft.core.Snapshot.meta(root, v).get("epoch"))
-      .map(_.toLong)
-      .nextOption()
+    // seeding/repair job stamps no epoch) and a rollback: the newest
+    // epoch-stamped committed version decides, not the current one.
+    val published = graft.core.Snapshot.latestMeta(root, "epoch").map(_.toLong)
     if (published.exists(_ >= epoch)) None
     else Some(graft.core.Snapshot.publish(batch, root,
       Map("epoch" -> epoch.toString)))

@@ -385,4 +385,75 @@ class SnapshotSpec extends AnyFunSuite {
     assert(seen.size() > 0 && seen.contains(10),
       s"reader must have observed the final version; saw ${seen}")
   }
+
+  // ---- The single-writer contract on a non-`file:` scheme ---------------
+  //
+  // `graftlocal:` (GraftLocalFileSystem) is the local disk under another
+  // scheme, so the commit layer takes its Hadoop branch (`FileContext`
+  // renames, `create(overwrite = false)`), the one HDFS takes. The two
+  // concurrency stress tests above stay on `file:`: the test scheme is
+  // only as atomic as its local backing (exists-then-open create,
+  // delete-then-rename overwrite), so racing it would test the fake.
+
+  /** A fresh `graftlocal:` root and the local directory behind it. */
+  private def graftRoot(prefix: String): (String, java.nio.file.Path) = {
+    GraftLocalFileSystem.register(spark.sparkContext.hadoopConfiguration)
+    val dir = tempDir(prefix)
+    (s"${GraftLocalFileSystem.Scheme}:$dir", dir)
+  }
+
+  test("graftlocal: round-trip, time travel, _META, rollback and a no-reuse republish") {
+    val (root, dir) = graftRoot("gsnap_rt")
+    val renames = GraftLocalFileSystem.renames.get
+    assert(Snapshot.currentVersion(root).isEmpty)
+    assert(Snapshot.publish(table(1, 10), root, Map("epoch" -> "7")) == 1L)
+    assert(Snapshot.publish(table(2, 20), root) == 2L)
+    assert(GraftLocalFileSystem.renames.get >= renames + 4,
+      "slot claims and pointer swaps must go through FileContext")
+    assert(java.nio.file.Files.readString(dir.resolve("_CURRENT")) == "2")
+    assert(Snapshot.read(spark, root).agg(count(lit(1)), max(col("v")))
+      .head().toSeq == Seq(20L, 2))
+    assert(Snapshot.read(spark, root, Some(1L)).count() == 10L)
+    assert(Snapshot.meta(root, 1L) == Map("epoch" -> "7"))
+    assert(Snapshot.latestMeta(root, "epoch").contains("7"))
+    Snapshot.rollback(root, 1L)
+    assert(Snapshot.read(spark, root).count() == 10L)
+    intercept[IllegalArgumentException] { Snapshot.rollback(root, 99L) }
+    assert(Snapshot.publish(table(3, 30), root) == 3L)
+    assert(Snapshot.read(spark, root, Some(2L)).count() == 20L)
+    assert(Snapshot.fsck(root).isEmpty)
+    assert(Snapshot.publishedVersions(root) == Seq(1L, 2L, 3L))
+  }
+
+  test("graftlocal: a crashed writer is invisible; fsck sweeps its orphans and staging, never a committed version") {
+    val (root, dir) = graftRoot("gsnap_crash")
+    Snapshot.publish(table(1, 10), root)
+    Snapshot.publish(table(2, 20), root)
+    table(3, 5).write.mode("overwrite").parquet(s"$root/v=3")
+    assert(Snapshot.read(spark, root).agg(max(col("v"))).head().getInt(0) == 2)
+    assert(Snapshot.publish(table(4, 40), root) == 4L, "allocation goes above the orphan")
+    table(5, 5).write.mode("overwrite").parquet(s"$root/v=5")
+    val stage = dir.resolve(".staging-999-123456")
+    java.nio.file.Files.createDirectories(stage)
+    java.nio.file.Files.writeString(stage.resolve("part-0.parquet"), "junk")
+    assert(Snapshot.fsck(root) == Seq(3L, 5L))
+    assert(Seq("v=3", "v=5", ".staging-999-123456")
+      .forall(n => !java.nio.file.Files.exists(dir.resolve(n))))
+    assert(Snapshot.read(spark, root).count() == 40L)
+    assert(Snapshot.read(spark, root, Some(1L)).count() == 10L)
+    assert(Snapshot.read(spark, root, Some(2L)).count() == 20L)
+    assert(Snapshot.fsck(root).isEmpty)
+  }
+
+  test("graftlocal: the first post-upgrade publish backfills a pre-manifest history") {
+    val (root, dir) = graftRoot("gsnap_mixed")
+    Snapshot.publish(table(1, 10), root)
+    Snapshot.publish(table(2, 20), root)
+    java.nio.file.Files.delete(dir.resolve("_PUBLISHED"))
+    assert(Snapshot.publish(table(3, 30), root) == 3L)
+    assert(Snapshot.publishedVersions(root) == Seq(1L, 2L, 3L))
+    assert(Snapshot.fsck(root).isEmpty)
+    assert(Snapshot.read(spark, root, Some(1L)).count() == 10L)
+    assert(Snapshot.read(spark, root, Some(2L)).count() == 20L)
+  }
 }
