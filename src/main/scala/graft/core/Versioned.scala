@@ -5,7 +5,8 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{FileSystemException, Files, Paths, StandardCopyOption => Copy,
   StandardOpenOption => Open}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, FileStatus, FileSystem, Options,
+  Path}
 
 /** One versioned table on the Hadoop `FileSystem`, the commit layer of
   * §2.1's load-then-signal contract: `<root>/v=N/` version directories and
@@ -126,6 +127,17 @@ object Versioned {
 
   def versionOf(name: String): Option[Long] =
     if (name.startsWith("v=")) name.drop(2).toLongOption else None
+
+  /** Every file below `dir`, by a `listStatus` walk that enters only the
+    * children whose names pass `keep` (a file's own name must pass too).
+    * It replaces `listFiles(dir, true)`, whose `LocatedFileStatus` reads
+    * each file's permissions — on a local file system without native
+    * Hadoop, one forked shell per file. */
+  def leafFiles(fs: FileSystem, dir: Path,
+                keep: String => Boolean = _ => true): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.filter(s => keep(s.getPath.getName)).flatMap { s =>
+      if (s.isDirectory) leafFiles(fs, s.getPath, keep) else Seq(s)
+    }
 
   /** Unique per attempt, not per process: two threads of one JVM sharing a
     * temp name could interleave one's write with the other's rename. */

@@ -47,15 +47,13 @@ object Warehouse {
     if (cleanupHook.compareAndSet(false, true))
       Runtime.getRuntime.addShutdownHook(new Thread(() =>
         built.values.forEach { cell =>
-          def rm(p: java.io.File): Unit = {
-            val kids = p.listFiles(); if (kids != null) kids.foreach(rm)
-            p.delete(); ()
-          }
           // Only fully-built dirs are deleted; a cell whose write is still
           // in flight at JVM exit leaves its partial dir (pid-suffixed,
-          // never read by another process).
+          // never read by another process). fullyDelete removes a
+          // symlink without following it.
           cell.ifBuilt.foreach(dir =>
-            try rm(new java.io.File(dir)) catch { case _: Throwable => () })
+            try org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(dir))
+            catch { case _: Throwable => () })
         }))
 
   def once(srcDir: String, name: String)(write: String => Unit): String =

@@ -729,12 +729,11 @@ object Events extends QueryModule {
           col("event_type"), col("value"))
         .as[graft.streaming.StreamOps.Ev]
       val out = e.groupByKey(_.user_id).flatMapGroups { (uid, it) =>
-        val sorted = it.toSeq.sortBy(ev =>
-          (ev.ts.getTime, ev.ts.getNanos, ev.event_id))
+        val sorted = graft.streaming.StreamOps.inTimeOrder(it)
         var lastKept = Long.MinValue
         var nKept = 0L; var idSum = 0L
         sorted.foreach { ev =>
-          val t = ev.ts.getTime * 1000L + (ev.ts.getNanos / 1000L) % 1000L
+          val t = graft.streaming.StreamOps.micros(ev.ts)
           if (lastKept == Long.MinValue || t - lastKept > gapUs) {
             lastKept = t; nKept += 1; idSum += ev.event_id
           }

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, DataFrameReader, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import graft.streaming.StatusListener
 
 /** The [REF]-fidelity ingestion surface (SURVEY.md §2.1, §3.2).
@@ -306,43 +307,35 @@ object Ingest {
     * the rewrite both mis-sizes to one file AND silently flattens the
     * partition layout. Compaction of a partitioned table is per partition
     * directory — fail fast instead of flattening. */
-  private def flatParquetLeaves(fs: org.apache.hadoop.fs.FileSystem,
-                                dir: org.apache.hadoop.fs.Path)
-      : Seq[org.apache.hadoop.fs.FileStatus] = {
-    // listFiles returns scheme-qualified paths; qualify the input dir the
-    // same way or every top-level file reads as "nested".
+  private def flatParquetLeaves(fs: FileSystem, dir: Path): Seq[FileStatus] = {
+    // Qualified like the listed paths, or every top-level file reads as
+    // "nested".
     val qdir = fs.makeQualified(dir)
-    val it = fs.listFiles(qdir, true)
-    val leaves = scala.collection.mutable.ArrayBuffer[org.apache.hadoop.fs.FileStatus]()
-    var nested = false
     // Spark's own hidden-file convention: any path component starting
     // with '_' or '.' is metadata/debris (_temporary from a crashed
     // write, .staging-* dirs, _SUCCESS). Debris below such a component
     // must neither count toward sizing nor flip the partitioned-layout
     // flag — a legitimately flat directory with a leftover _temporary
     // tree would otherwise fail compaction with a misleading error.
-    def hiddenBelow(p: org.apache.hadoop.fs.Path): Boolean = {
-      var cur = p
-      while (cur != null && cur != qdir) {
-        val n = cur.getName
-        if (n.startsWith("_") || n.startsWith(".")) return true
-        cur = cur.getParent
-      }
-      false
-    }
-    while (it.hasNext) {
-      val s = it.next()
-      if (s.getPath.getName.endsWith(".parquet") && !hiddenBelow(s.getPath)) {
-        leaves += s
-        if (s.getPath.getParent != qdir) nested = true
-      }
-    }
-    require(!nested,
+    val leaves = graft.core.Versioned
+      .leafFiles(fs, qdir, n => !n.startsWith("_") && !n.startsWith("."))
+      .filter(_.getPath.getName.endsWith(".parquet"))
+    require(leaves.forall(_.getPath.getParent == qdir),
       s"$dir holds parquet files in subdirectories (a partitioned layout): " +
         "compact each partition directory instead — compacting across " +
         "partitions would silently flatten the layout")
-    leaves.toSeq
+    leaves
   }
+
+  /** Compaction's sizing rule: output files for `bytes` at the target. */
+  private def filesFor(bytes: Double, targetFileBytes: Long): Int =
+    math.max(1, math.ceil(bytes / targetFileBytes).toInt)
+
+  /** The parquet files a compaction left in `dst`, counted on `dst`'s own
+    * file system. */
+  private def parquetFilesIn(spark: SparkSession, dst: Path): Int =
+    dst.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(dst)
+      .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
 
   /** Small-files compaction — the nightly operational pass every file-based
     * warehouse needs: streaming/micro-batch sinks and per-partition writers
@@ -362,12 +355,10 @@ object Ingest {
     * construction — certified in IngestSpec. */
   def compact(spark: SparkSession, srcDir: String, dstDir: String,
               targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    import org.apache.hadoop.fs.Path
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(srcDir).getFileSystem(conf)
     val parts = flatParquetLeaves(fs, new Path(srcDir))
-    val totalBytes = parts.map(_.getLen).sum
-    val n = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
+    val n = filesFor(parts.map(_.getLen).sum.toDouble, targetFileBytes)
     val dst = new Path(dstDir)
     val dfs = dst.getFileSystem(conf)
     if (parts.length == 1 && n == 1) {
@@ -384,9 +375,7 @@ object Ingest {
     } else
       spark.read.parquet(srcDir).repartition(n)
         .write.mode(SaveMode.Overwrite).parquet(dstDir)
-    val after = dfs.listStatus(dst)
-      .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    (parts.length, after)
+    (parts.length, parquetFilesIn(spark, dst))
   }
 
   /** GDPR erasure FOLDED INTO the compaction rewrite — the 100 TB
@@ -405,9 +394,9 @@ object Ingest {
                          deletionList: org.apache.spark.sql.DataFrame,
                          keyCol: String,
                          targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int, Long) = {
-    val fs = new org.apache.hadoop.fs.Path(srcDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = flatParquetLeaves(fs, new org.apache.hadoop.fs.Path(srcDir))
+    val srcPath = new Path(srcDir)
+    val parts = flatParquetLeaves(
+      srcPath.getFileSystem(spark.sparkContext.hadoopConfiguration), srcPath)
     val totalBytes = parts.map(_.getLen).sum
     val src = spark.read.parquet(srcDir)
     // Metadata-only on an unfiltered parquet scan (footer row counts) —
@@ -429,15 +418,13 @@ object Ingest {
     val survivorsEst = math.max(0L, total - delKeys)
     val keptBytes = if (total == 0) 0.0
                     else totalBytes.toDouble * survivorsEst / total
-    val n = math.max(1, math.ceil(keptBytes / targetFileBytes).toInt)
+    val n = filesFor(keptBytes, targetFileBytes)
     val obs = new org.apache.spark.sql.Observation()
     kept.observe(obs, org.apache.spark.sql.functions
         .count(org.apache.spark.sql.functions.lit(1)).as("survivors"))
       .repartition(n).write.mode(SaveMode.Overwrite).parquet(dstDir)
     val survivors = obs.get("survivors").asInstanceOf[Long]
-    val after = fs.listStatus(new org.apache.hadoop.fs.Path(dstDir))
-      .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    (parts.length, after, total - survivors)
+    (parts.length, parquetFilesIn(spark, new Path(dstDir)), total - survivors)
   }
 
   // ---- The ingestion job (diagram flows 1-3 in miniature) ----

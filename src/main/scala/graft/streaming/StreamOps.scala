@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
+  OutputMode, Trigger, ValueState}
+import org.apache.hadoop.fs.Path
 import java.sql.Timestamp
 
 /** Streaming operators (SURVEY.md §2.5) over the events schema.
@@ -80,49 +82,72 @@ object StreamOps {
   def runNotifiedLoad(spark: SparkSession, queueDir: String,
                       schema: org.apache.spark.sql.types.StructType,
                       outDir: String, checkpointDir: String,
-                      format: String = "parquet"): Unit = {
-    val q = notificationSource(spark, queueDir).writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // .distinct: an at-least-once producer can write the SAME path
-        // twice within one manifest (intra-batch duplicate) — without the
-        // dedup both copies land in one _src partition and the overwrite
-        // commits doubled content; cross-batch duplicates converge via the
-        // partition rewrite, same-batch ones must converge here.
-        val paths = batch.collect().map(_.getString(0).trim)
-          .filter(_.nonEmpty).distinct
-        if (paths.nonEmpty) {
-          // Versioned-store commit protocol — runSrcKeyedIngest's rule
-          // applied to the notified store (it is `_src`-keyed too):
-          // resolve, mutate inside the current version, re-validate.
-          val t = storeTable(spark, outDir)
-          val v = t.bootstrap()
-          val reader = spark.read.schema(schema)
-          val src = format match {
-            case "csv" => reader.option("header", true).option("escape", "\"")
-              .csv(paths: _*)
-            case _ => reader.parquet(paths: _*)
-          }
-          // Dynamic overwrite is a PER-WRITE option, not a session-conf
-          // mutation: toggling the session conf inside foreachBatch would
-          // leak dynamic-overwrite semantics to any concurrent write in
-          // the same SparkSession (and two concurrent notified loads
-          // would race the set/restore).
-          src.withColumn("_src", md5(input_file_name()))
-            .write.partitionBy("_src").mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(t.vdir(v).toString)
-          if (!t.current.contains(v))
-            throw new java.io.IOException(
-              s"notified load superseded: $outDir advanced past v=$v " +
-                "while this micro-batch was writing — left uncommitted " +
-                "for redelivery against the current version")
+                      format: String = "parquet"): Unit =
+    drainBatches(notificationSource(spark, queueDir), checkpointDir) { (batch, _) =>
+      // .distinct: an at-least-once producer can write the SAME path
+      // twice within one manifest (intra-batch duplicate) — without the
+      // dedup both copies land in one _src partition and the overwrite
+      // commits doubled content; cross-batch duplicates converge via the
+      // partition rewrite, same-batch ones must converge here.
+      val paths = batch.collect().map(_.getString(0).trim)
+        .filter(_.nonEmpty).distinct
+      if (paths.nonEmpty) appendToCurrent(spark, outDir, "notified load") { vd =>
+        val reader = spark.read.schema(schema)
+        val src = format match {
+          case "csv" => reader.option("header", true).option("escape", "\"")
+            .csv(paths: _*)
+          case _ => reader.parquet(paths: _*)
         }
+        // Dynamic overwrite is a PER-WRITE option, not a session-conf
+        // mutation: toggling the session conf inside foreachBatch would
+        // leak dynamic-overwrite semantics to any concurrent write in
+        // the same SparkSession (and two concurrent notified loads
+        // would race the set/restore).
+        src.withColumn("_src", md5(input_file_name()))
+          .write.partitionBy("_src").mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .parquet(vd.toString)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
+
+  /** The one AvailableNow driver every sink here runs through: start `w`
+    * under `Trigger.AvailableNow` (checkpointed when `checkpointDir` is
+    * given), drain all available input and return once it is processed. */
+  private def drain[T](w: DataStreamWriter[T],
+                       checkpointDir: Option[String] = None): Unit =
+    checkpointDir.fold(w)(w.option("checkpointLocation", _))
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+
+  /** [[drain]] for a `foreachBatch` sink: `f` gets each micro-batch and its
+    * id. */
+  private def drainBatches(df: DataFrame, checkpointDir: String,
+                           mode: OutputMode = OutputMode.Append)
+                          (f: (DataFrame, Long) => Unit): Unit =
+    drain(df.writeStream.outputMode(mode).foreachBatch(f), Some(checkpointDir))
+
+  /** The versioned-store commit protocol both `_src`-keyed writers
+    * ([[runSrcKeyedIngest]], [[runNotifiedLoad]]) run each micro-batch
+    * through: resolve the pointer (bootstrapping `v=1` on a store's first
+    * batch), `write` ONLY inside that version directory, then RE-VALIDATE
+    * the pointer after the write's job commit. A moved pointer means a
+    * compaction published a new version whose input may predate this
+    * write — throwing keeps the micro-batch UNCOMMITTED, so the
+    * checkpointed source redelivers it and the writer's keying reconverges
+    * inside whichever version is now current. (If the compaction DID see
+    * the write, redelivery is a no-op rewrite of the same `_src`
+    * partitions.) This closes the lost-append race by construction; see
+    * [[compactStore]]'s proof sketch. */
+  private def appendToCurrent(spark: SparkSession, outDir: String, what: String)
+                             (write: Path => Unit): Unit = {
+    val t = storeTable(spark, outDir)
+    val v = t.bootstrap()
+    write(t.vdir(v))
+    ingestPostAppendHook()
+    if (!t.current.contains(v))
+      throw new java.io.IOException(
+        s"$what superseded: $outDir advanced past v=$v while this " +
+          "micro-batch was writing — left uncommitted; the checkpointed " +
+          "source redelivers it against the current version")
   }
 
   /** Nearest-centroid cell assignment shared by STR-IVF's streaming index
@@ -143,58 +168,48 @@ object StreamOps {
   /** The exactly-once-per-FILE ingest skeleton shared by every streamed
     * store builder (review fix — four verbatim copies diverge silently):
     * a checkpointed AvailableNow file stream where each micro-batch tags
-    * rows with `_src = md5(path)`, DELETES its own `_src=` partitions,
-    * then appends `rowsFor(taggedBatch)` partitioned by
+    * rows with `_src = md5(path)`, DELETES its own `_src=` partitions
+    * inside the current version ([[appendToCurrent]]), then appends
+    * `rowsFor(taggedBatch)` partitioned by
     * (partCols…, _src-last-ordering preserved via `partSpec`). The
     * delete-then-append keying converges under replay, duplicate
     * delivery, and metadata retrain between crash and replay — the laws
     * StreamingSpec pins once and every consumer inherits. */
   private def runSrcKeyedIngest(spark: SparkSession, src: DataFrame,
       outDir: String, checkpointDir: String, partSpec: Seq[String])
-      (rowsFor: DataFrame => DataFrame): Unit = {
-    val q = src
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val withSrc = batch.withColumn("_src", md5(input_file_name()))
-        // ≤ maxFilesPerTrigger values — a scan-only distinct, never the
-        // transform plan (which would run twice otherwise).
-        val srcs = withSrc.select(col("_src")).distinct()
-          .collect().map(_.getString(0))
-        if (srcs.nonEmpty) {
-          // Versioned-store commit protocol (r14, closes the lost-append
-          // race the r12/r13 sentinel could only narrow): resolve the
-          // pointer, mutate ONLY inside that version directory, then
-          // RE-VALIDATE the pointer after the append's job commit. A
-          // moved pointer means a compaction published a new version
-          // whose input may predate this append — throwing here keeps
-          // the micro-batch UNCOMMITTED, so the checkpointed source
-          // redelivers it and the delete-then-append keying reconverges
-          // inside whichever version is now current. (If the compaction
-          // DID see the append, redelivery is a no-op rewrite of the
-          // same _src partitions — idempotent by the keying.)
-          val t = storeTable(spark, outDir)
-          val v = t.bootstrap()
-          val vd = t.vdir(v)
-          srcs.foreach { h =>
-            t.fs.delete(new org.apache.hadoop.fs.Path(vd, s"_src=$h"), true)
-          }
-          rowsFor(withSrc)
-            .write.partitionBy(partSpec: _*).mode("append")
-            .parquet(vd.toString)
-          ingestPostAppendHook()
-          if (!t.current.contains(v))
-            throw new java.io.IOException(
-              s"ingest superseded: $outDir advanced past v=$v while this " +
-                "micro-batch was appending — left uncommitted; the " +
-                "checkpointed source redelivers it against the current " +
-                "version")
-        }
+      (rowsFor: DataFrame => DataFrame): Unit =
+    drainBatches(src, checkpointDir) { (batch, _) =>
+      val withSrc = batch.withColumn("_src", md5(input_file_name()))
+      // ≤ maxFilesPerTrigger values — a scan-only distinct, never the
+      // transform plan (which would run twice otherwise).
+      val srcs = withSrc.select(col("_src")).distinct()
+        .collect().map(_.getString(0))
+      if (srcs.nonEmpty) appendToCurrent(spark, outDir, "ingest") { vd =>
+        val fs = vd.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        srcs.foreach(h => fs.delete(new Path(vd, s"_src=$h"), true))
+        rowsFor(withSrc)
+          .write.partitionBy(partSpec: _*).mode("append")
+          .parquet(vd.toString)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
+
+  /** The arrival stream and store layout the three STR-IVF ingests share:
+    * embedding files one per micro-batch, stored by (`_src`, cell). */
+  private def runCellIngest(spark: SparkSession, vecDir: String,
+      schema: org.apache.spark.sql.types.StructType, outDir: String,
+      checkpointDir: String)(rowsFor: DataFrame => DataFrame): Unit =
+    runSrcKeyedIngest(spark,
+      spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1).parquet(vecDir),
+      outDir, checkpointDir, Seq("_src", "cell"))(rowsFor)
+
+  /** (vec_id, _src, vn): each vector's exact norm, by the IDENTICAL
+    * expression the batch assignment computes (sqrt of the codegen'd
+    * in-order dot fold) — bit-equal doubles. */
+  private def vectorNorms(withSrc: DataFrame): DataFrame = {
+    import graft.functions.GraftFunctions.dot_product
+    val dbl = transform(col("embedding"), x => x.cast("double"))
+    withSrc.select(col("vec_id"), col("_src"), sqrt(dot_product(dbl, dbl)).as("vn"))
   }
 
   /** STR-IVF: streaming ANN index maintenance — the arrival half of the
@@ -222,10 +237,7 @@ object StreamOps {
                    schema: org.apache.spark.sql.types.StructType,
                    cent: DataFrame, outDir: String,
                    checkpointDir: String): Unit = {
-    runSrcKeyedIngest(spark,
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(vecDir),
-      outDir, checkpointDir, Seq("_src", "cell")) { withSrc =>
+    runCellIngest(spark, vecDir, schema, outDir, checkpointDir) { withSrc =>
       assignCells(withSrc, cent).join(withSrc, Seq("vec_id"))
     }
   }
@@ -258,19 +270,10 @@ object StreamOps {
                       schema: org.apache.spark.sql.types.StructType,
                       cent: DataFrame, book: DataFrame, outDir: String,
                       checkpointDir: String): Unit = {
-    import graft.functions.GraftFunctions.dot_product
-    runSrcKeyedIngest(spark,
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(vecDir),
-      outDir, checkpointDir, Seq("_src", "cell")) { withSrc =>
-      val dbl = transform(col("embedding"), x => x.cast("double"))
-      // vn uses the IDENTICAL expression the batch assignment computes
-      // (sqrt of the codegen'd in-order dot fold) — bit-equal doubles.
-      val meta = withSrc.select(col("vec_id"), col("_src"),
-        sqrt(dot_product(dbl, dbl)).as("vn"))
+    runCellIngest(spark, vecDir, schema, outDir, checkpointDir) { withSrc =>
       assignCells(withSrc, cent)
         .join(encodePq(withSrc, book), Seq("vec_id"))
-        .join(meta, Seq("vec_id"))
+        .join(vectorNorms(withSrc), Seq("vec_id"))
     }
   }
 
@@ -288,19 +291,12 @@ object StreamOps {
                      schema: org.apache.spark.sql.types.StructType,
                      cent: DataFrame, sqStats: DataFrame, outDir: String,
                      checkpointDir: String): Unit = {
-    import graft.functions.GraftFunctions.dot_product
-    runSrcKeyedIngest(spark,
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(vecDir),
-      outDir, checkpointDir, Seq("_src", "cell")) { withSrc =>
-      val dbl = transform(col("embedding"), x => x.cast("double"))
-      val meta = withSrc.select(col("vec_id"), col("_src"),
-        sqrt(dot_product(dbl, dbl)).as("vn"))
+    runCellIngest(spark, vecDir, schema, outDir, checkpointDir) { withSrc =>
       assignCells(withSrc, cent)
         .join(graft.queries.LlmOps.sqEncodeWith(
           graft.queries.LlmOps.sqLongForm(withSrc), sqStats),
           Seq("vec_id"))
-        .join(meta, Seq("vec_id"))
+        .join(vectorNorms(withSrc), Seq("vec_id"))
     }
   }
 
@@ -384,10 +380,8 @@ object StreamOps {
     * `create(overwrite = false)` is NOT atomic (exists-then-open), and
     * neither is an object store's: there two passes can both "acquire"
     * unless the create becomes a conditional PUT (If-None-Match). */
-  private def compactionSentinel(store: org.apache.hadoop.fs.Path)
-      : org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(store.getParent,
-      store.getName + ".compacting")
+  private def compactionSentinel(store: Path): Path =
+    new Path(store.getParent, store.getName + ".compacting")
 
   // ---- Versioned streamed-store layout (r14, the r13 verdict's task 4) --
   //
@@ -396,20 +390,15 @@ object StreamOps {
   // target while the pointer names it, frozen forever once the pointer
   // moves on.
   //
-  // Writers ([[runSrcKeyedIngest]], [[runNotifiedLoad]]) resolve the
-  // pointer (bootstrapping v=1 on a store's first micro-batch), mutate
-  // ONLY inside that version directory, and RE-VALIDATE the pointer after
-  // their append commits — a moved pointer throws, leaving the
-  // micro-batch uncommitted for the checkpointed source to redeliver
-  // against the new current version. [[compactStore]] publishes a new
+  // Writers ([[runSrcKeyedIngest]], [[runNotifiedLoad]]) commit each
+  // micro-batch through [[appendToCurrent]]. [[compactStore]] publishes a new
   // version from a snapshot of v and swaps the pointer; readers
   // ([[readStore]]) resolve-then-scan. The lost-append race the r12/r13
   // sentinel could only NARROW is closed by construction — see
   // [[compactStore]]'s proof sketch.
 
   private def storeTable(spark: SparkSession, storeDir: String): graft.core.Versioned =
-    graft.core.Versioned(new org.apache.hadoop.fs.Path(storeDir),
-      spark.sparkContext.hadoopConfiguration)
+    graft.core.Versioned(new Path(storeDir), spark.sparkContext.hadoopConfiguration)
 
   /** Resolve-then-scan read of a versioned streamed store; unversioned
     * directories (no `_CURRENT`) read as plain parquet so pre-versioning
@@ -535,7 +524,6 @@ object StreamOps {
     * directory is claimed as the first version, and the pointer publishes
     * it. */
   private def migrateLegacyStore(t: graft.core.Versioned): Long = {
-    import org.apache.hadoop.fs.Path
     val side = new Path(t.root.getParent, t.root.getName +
       s".mig-${ProcessHandle.current().pid()}-${System.nanoTime()}")
     t.fs.mkdirs(side)
@@ -560,19 +548,12 @@ object StreamOps {
     t.sweep(n => n.startsWith(".compact-staging-") ||
       graft.core.Versioned.versionOf(n).exists(_ > v))
     val cur = t.vdir(v)
-    // Listed on the session's file system, which hides `.crc` sidecars;
-    // the raw one under `t` would list each file twice, and without
-    // native Hadoop every listed file forks a shell for its permissions.
+    // Listed on the session's file system, which hides `.crc` sidecars
+    // (the raw one under `t` would list each file twice).
     val fs = t.root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def listing(): Set[(String, Long, Long)] = {
-      val it = fs.listFiles(cur, true)
-      val b = Set.newBuilder[(String, Long, Long)]
-      while (it.hasNext) {
-        val f = it.next()
-        b += ((f.getPath.toString, f.getLen, f.getModificationTime))
-      }
-      b.result()
-    }
+    def listing(): Set[(String, Long, Long)] =
+      graft.core.Versioned.leafFiles(fs, cur)
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSet
     val before = listing()
     val curDf = spark.read.parquet(cur.toString)
     // Convergence check, riding the election window: every key must carry
@@ -798,7 +779,12 @@ object StreamOps {
     * function applied to bounded frames is the batch twin (watermarks are
     * no-ops in batch); equivalence holds under time-ordered replay and is
     * asserted in StreamingSpec. */
-  def clickPurchaseJoin(clicks: DataFrame, purchases: DataFrame): DataFrame = {
+  def clickPurchaseJoin(clicks: DataFrame, purchases: DataFrame): DataFrame =
+    clickPurchase(clicks, purchases, "inner")
+
+  /** The click⋈purchase body both joins share; only the join type differs. */
+  private def clickPurchase(clicks: DataFrame, purchases: DataFrame,
+                            joinType: String): DataFrame = {
     val l = clicks.filter(col("event_type") === "click")
       .withWatermark("ts", "1 hour")
       .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("click_ts"))
@@ -808,7 +794,8 @@ object StreamOps {
         col("ts").as("purchase_ts"))
     l.join(r, col("user_id") === col("p_user") &&
         col("purchase_ts") >= col("click_ts") &&
-        col("purchase_ts") <= col("click_ts") + expr("INTERVAL 10 MINUTES"))
+        col("purchase_ts") <= col("click_ts") + expr("INTERVAL 10 MINUTES"),
+        joinType)
       .select(col("click_id"), col("purchase_id"), col("user_id"),
         col("click_ts"), col("purchase_ts"))
   }
@@ -823,21 +810,8 @@ object StreamOps {
     * younger than the final watermark stay in state unemitted — a stream
     * is never "done" the way a batch is, and the StreamingSpec test pins
     * exactly this boundary. */
-  def clickPurchaseLeftJoin(clicks: DataFrame, purchases: DataFrame): DataFrame = {
-    val l = clicks.filter(col("event_type") === "click")
-      .withWatermark("ts", "1 hour")
-      .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("click_ts"))
-    val r = purchases.filter(col("event_type") === "purchase")
-      .withWatermark("ts", "1 hour")
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-        col("ts").as("purchase_ts"))
-    l.join(r, col("user_id") === col("p_user") &&
-        col("purchase_ts") >= col("click_ts") &&
-        col("purchase_ts") <= col("click_ts") + expr("INTERVAL 10 MINUTES"),
-        "left_outer")
-      .select(col("click_id"), col("purchase_id"), col("user_id"),
-        col("click_ts"), col("purchase_ts"))
-  }
+  def clickPurchaseLeftJoin(clicks: DataFrame, purchases: DataFrame): DataFrame =
+    clickPurchase(clicks, purchases, "left_outer")
 
   /** STR-DDP: streaming dedup on event_id within the watermark horizon.
     * The event-time column is part of the dedup key — the structured
@@ -874,20 +848,28 @@ object StreamOps {
     events.groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
         (uid: Long, rows: Iterator[Ev], state: GroupState[UserStat]) => {
-          val prev = state.getOption.getOrElse(UserStat(uid, 0L, 0.0, new Timestamp(0)))
-          val batch = rows.toSeq
-          // last_ts is a RUNNING max: replay order across micro-batches is
-          // arbitrary, so the current batch's max may precede the stored one.
-          val next = UserStat(
-            uid,
-            prev.n_events + batch.size,
-            prev.total_value + batch.map(_.value).sum,
-            (prev.last_ts +: batch.map(_.ts)).max(Ordering.comparatorToOrdering(
-            java.util.Comparator.naturalOrder[java.sql.Timestamp]())))
+          val next = countersStep(uid, state.getOption, rows)
           state.update(next)
           Iterator.single(next)
         })
   }
+
+  /** The counters fold all three STR-ST counter operators share: `prev`
+    * (zero when absent) plus one micro-batch's rows. */
+  private def countersStep(uid: Long, prev: Option[UserStat],
+                           rows: Iterator[Ev]): UserStat = {
+    val p = prev.getOrElse(UserStat(uid, 0L, 0.0, new Timestamp(0)))
+    val batch = rows.toSeq
+    // last_ts is a RUNNING max: replay order across micro-batches is
+    // arbitrary, so the current batch's max may precede the stored one.
+    UserStat(uid, p.n_events + batch.size, p.total_value + batch.map(_.value).sum,
+      (p.last_ts +: batch.map(_.ts)).max(Ordering.comparatorToOrdering(
+        java.util.Comparator.naturalOrder[Timestamp]())))
+  }
+
+  /** A value slot's content, or None when it is empty. */
+  private def valueOf[S](st: ValueState[S]): Option[S] =
+    if (st.exists()) Some(st.get()) else None
 
   /** STR-ST3: [[runningCounters]] on the Spark 4 ARBITRARY-STATE API
     * (`transformWithState` + `StatefulProcessor`) — the forward path for
@@ -910,15 +892,7 @@ object StreamOps {
         org.apache.spark.sql.streaming.TTLConfig.NONE)
     override def handleInputRows(uid: Long, rows: Iterator[Ev],
         timer: org.apache.spark.sql.streaming.TimerValues): Iterator[UserStat] = {
-      val prev = if (st.exists()) st.get()
-                 else UserStat(uid, 0L, 0.0, new Timestamp(0))
-      val batch = rows.toSeq
-      // Same running-max rule as the legacy twin: replay order across
-      // micro-batches is arbitrary, so max against the stored last_ts.
-      val next = UserStat(uid, prev.n_events + batch.size,
-        prev.total_value + batch.map(_.value).sum,
-        (prev.last_ts +: batch.map(_.ts)).max(Ordering.comparatorToOrdering(
-            java.util.Comparator.naturalOrder[java.sql.Timestamp]())))
+      val next = countersStep(uid, valueOf(st), rows)
       st.update(next)
       Iterator.single(next)
     }
@@ -996,13 +970,7 @@ object StreamOps {
       st.update(seed)
     override def handleInputRows(uid: Long, rows: Iterator[Ev],
         timer: org.apache.spark.sql.streaming.TimerValues): Iterator[UserStat] = {
-      val prev = if (st.exists()) st.get()
-                 else UserStat(uid, 0L, 0.0, new Timestamp(0))
-      val batch = rows.toSeq
-      val next = UserStat(uid, prev.n_events + batch.size,
-        prev.total_value + batch.map(_.value).sum,
-        (prev.last_ts +: batch.map(_.ts)).max(Ordering.comparatorToOrdering(
-            java.util.Comparator.naturalOrder[java.sql.Timestamp]())))
+      val next = countersStep(uid, valueOf(st), rows)
       st.update(next)
       Iterator.single(next)
     }
@@ -1017,6 +985,34 @@ object StreamOps {
       .transformWithState(new SeededCountersProcessor,
         org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update,
         seed.groupByKey(_.user_id))
+  }
+
+  /** An event time in µs since the epoch, exact before 1970 too: a
+    * Timestamp's `getTime` is floored ms (its nanos are never negative), and
+    * the nanos carry the µs below the ms. */
+  private[graft] def micros(ts: Timestamp): Long =
+    ts.getTime * 1000L + (ts.getNanos / 1000L) % 1000L
+
+  /** A user's micro-batch rows in (µs, event_id) order — the fold order of
+    * every µs-exact per-user operator and of their batch twins. */
+  private[graft] def inTimeOrder(rows: Iterator[Ev]): Seq[Ev] =
+    rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
+
+  /** The per-user fold of the legacy-API operators that run in µs order
+    * (STR-EWMA, STR-ATTR, STR-DEB, STR-RATE, STR-BAL): `fold` gets a user,
+    * its stored state and the micro-batch's rows [[inTimeOrder]], and
+    * returns the state to store and the rows to emit. Across batches the
+    * time-ordered replay contract applies (STR-EWMA's). */
+  private def foldInTimeOrder[S: Encoder, O: Encoder](events: Dataset[Ev])(
+      fold: (Long, Option[S], Seq[Ev]) => (Option[S], Seq[O])): Dataset[O] = {
+    import events.sparkSession.implicits._
+    events.groupByKey(_.user_id)
+      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
+        (uid: Long, rows: Iterator[Ev], state: GroupState[S]) => {
+          val (next, out) = fold(uid, state.getOption, inTimeOrder(rows))
+          next.foreach(state.update)
+          out.iterator
+        })
   }
 
   case class CtxEv(t: Long, i: Long, y: String)
@@ -1045,11 +1041,9 @@ object StreamOps {
       st = getHandle.getListState[CtxEv]("ctx",
         org.apache.spark.sql.Encoders.product[CtxEv],
         org.apache.spark.sql.streaming.TTLConfig.NONE)
-    private def micros(ts: Timestamp): Long =
-      (ts.getTime / 1000L) * 1000000L + ts.getNanos / 1000L
     override def handleInputRows(uid: Long, rows: Iterator[Ev],
         timer: org.apache.spark.sql.streaming.TimerValues): Iterator[CtxOut] = {
-      val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
+      val sorted = inTimeOrder(rows)
       var buf = if (st.exists()) st.get().toVector else Vector.empty[CtxEv]
       val out = scala.collection.mutable.ArrayBuffer[CtxOut]()
       sorted.foreach { e =>
@@ -1093,24 +1087,15 @@ object StreamOps {
     * is for. Emits every event's smoothed value once (Update mode). */
   def ewmaStream(events: Dataset[Ev], alpha: Double = 0.3): Dataset[EwmaOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        (uid: Long, rows: Iterator[Ev], state: GroupState[EwmaSt]) => {
-          // (ms, nanos, id): nanos carries the sub-ms component getTime
-          // truncates, so the fold order is µs-exact like the batch twin's
-          val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-          var st = state.getOption
-          val out = sorted.map { e =>
-            val s = st match {
-              case None    => e.value
-              case Some(p) => alpha * e.value + (1 - alpha) * p.s
-            }
-            st = Some(EwmaSt(s))
-            EwmaOut(uid, e.event_id, s)
-          }
-          st.foreach(state.update)
-          out.iterator
-        })
+    foldInTimeOrder[EwmaSt, EwmaOut](events) { (uid, prev, sorted) =>
+      var s = prev.map(_.s)
+      val out = sorted.map { e =>
+        val next = s.fold(e.value)(p => alpha * e.value + (1 - alpha) * p)
+        s = Some(next)
+        EwmaOut(uid, e.event_id, next)
+      }
+      (s.map(EwmaSt(_)), out)
+    }
   }
 
   case class AttrSt(clickId: Long, clickTsu: Long)
@@ -1127,23 +1112,18 @@ object StreamOps {
   def attributionStream(events: Dataset[Ev],
       horizonUs: Long = 86400L * 1000000L): Dataset[AttrOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        (uid: Long, rows: Iterator[Ev], state: GroupState[AttrSt]) => {
-          val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-          var st = state.getOption
-          val out = scala.collection.mutable.ArrayBuffer[AttrOut]()
-          sorted.foreach { e =>
-            val tsu = e.ts.getTime * 1000L + (e.ts.getNanos / 1000L) % 1000L
-            if (e.event_type == "click") st = Some(AttrSt(e.event_id, tsu))
-            if (e.event_type == "purchase") {
-              val hit = st.filter(s => tsu - s.clickTsu <= horizonUs)
-              out += AttrOut(e.event_id, uid, e.ts, hit.map(_.clickId), hit.nonEmpty)
-            }
-          }
-          st.foreach(state.update)
-          out.iterator
-        })
+    foldInTimeOrder[AttrSt, AttrOut](events) { (uid, prev, sorted) =>
+      var st = prev
+      val out = sorted.flatMap { e =>
+        val tsu = micros(e.ts)
+        if (e.event_type == "click") st = Some(AttrSt(e.event_id, tsu))
+        Option.when(e.event_type == "purchase") {
+          val hit = st.filter(s => tsu - s.clickTsu <= horizonUs)
+          AttrOut(e.event_id, uid, e.ts, hit.map(_.clickId), hit.nonEmpty)
+        }
+      }
+      (st, out)
+    }
   }
 
   case class DebSt(lastKept: Long)
@@ -1160,20 +1140,16 @@ object StreamOps {
   def debounceStream(events: Dataset[Ev],
       gapUs: Long = 14400L * 1000000L): Dataset[DebOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        (uid: Long, rows: Iterator[Ev], state: GroupState[DebSt]) => {
-          val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-          var lastKept = state.getOption.map(_.lastKept).getOrElse(Long.MinValue)
-          val out = sorted.map { e =>
-            val t = e.ts.getTime * 1000L + (e.ts.getNanos / 1000L) % 1000L
-            val keep = lastKept == Long.MinValue || t - lastKept > gapUs
-            if (keep) lastKept = t
-            DebOut(e.event_id, uid, keep)
-          }
-          state.update(DebSt(lastKept))
-          out.iterator
-        })
+    foldInTimeOrder[DebSt, DebOut](events) { (uid, prev, sorted) =>
+      var lastKept = prev.map(_.lastKept)
+      val out = sorted.map { e =>
+        val t = micros(e.ts)
+        val keep = lastKept.forall(t - _ > gapUs)
+        if (keep) lastKept = Some(t)
+        DebOut(e.event_id, uid, keep)
+      }
+      (lastKept.map(DebSt(_)), out)
+    }
   }
 
   case class RateSt(times: Array[Long])
@@ -1193,19 +1169,15 @@ object StreamOps {
   def burstStream(events: Dataset[Ev],
       windowUs: Long = 86400L * 1000000L): Dataset[RateOut] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        (uid: Long, rows: Iterator[Ev], state: GroupState[RateSt]) => {
-          val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-          var kept = state.getOption.map(_.times.toVector).getOrElse(Vector.empty)
-          val out = sorted.map { e =>
-            val t = e.ts.getTime * 1000L + (e.ts.getNanos / 1000L) % 1000L
-            kept = (kept :+ t).dropWhile(_ < t - windowUs)
-            RateOut(e.event_id, uid, kept.size.toLong)
-          }
-          state.update(RateSt(kept.toArray))
-          out.iterator
-        })
+    foldInTimeOrder[RateSt, RateOut](events) { (uid, prev, sorted) =>
+      var kept = prev.map(_.times.toVector).getOrElse(Vector.empty)
+      val out = sorted.map { e =>
+        val t = micros(e.ts)
+        kept = (kept :+ t).dropWhile(_ < t - windowUs)
+        RateOut(e.event_id, uid, kept.size.toLong)
+      }
+      (Some(RateSt(kept.toArray)), out)
+    }
   }
 
   case class BalSt(units: Long)
@@ -1225,25 +1197,21 @@ object StreamOps {
     import events.sparkSession.implicits._
     def u4(v: Double): Long =
       (BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP) * 10000).toLongExact
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
-        (uid: Long, rows: Iterator[Ev], state: GroupState[BalSt]) => {
-          val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-          var b = state.getOption.map(_.units).getOrElse(0L)
-          val out = sorted.map { e =>
-            val flow = e.event_type match {
-              case "purchase" | "signup" => u4(e.value)
-              case "click" | "error"     => -u4(e.value)
-              case _                     => 0L
-            }
-            b = math.max(0L, b + flow)
-            BalOut(e.event_id, uid,
-              java.math.BigDecimal.valueOf(flow, 4).toPlainString,
-              java.math.BigDecimal.valueOf(b, 4).toPlainString)
-          }
-          state.update(BalSt(b))
-          out.iterator
-        })
+    foldInTimeOrder[BalSt, BalOut](events) { (uid, prev, sorted) =>
+      var b = prev.map(_.units).getOrElse(0L)
+      val out = sorted.map { e =>
+        val flow = e.event_type match {
+          case "purchase" | "signup" => u4(e.value)
+          case "click" | "error"     => -u4(e.value)
+          case _                     => 0L
+        }
+        b = math.max(0L, b + flow)
+        BalOut(e.event_id, uid,
+          java.math.BigDecimal.valueOf(flow, 4).toPlainString,
+          java.math.BigDecimal.valueOf(b, 4).toPlainString)
+      }
+      (Some(BalSt(b)), out)
+    }
   }
 
   case class SessSt(start: Timestamp, end: Timestamp, n: Long)
@@ -1286,31 +1254,34 @@ object StreamOps {
             state.remove()
             Iterator.single(SessionOut(uid, s.start, s.end, s.n))
           } else {
-            // Apply the batch's events in event-time order; under the
-            // time-ordered replay contract cross-batch order is monotone.
-            val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-            val closed = Seq.newBuilder[SessionOut]
-            var cur = state.getOption
-            sorted.foreach { e =>
-              cur match {
-                case Some(s) if e.ts.getTime <= s.end.getTime + gapMs =>
-                  cur = Some(SessSt(s.start,
-                    if (e.ts.getTime > s.end.getTime) e.ts else s.end, s.n + 1))
-                case Some(s) =>
-                  closed += SessionOut(uid, s.start, s.end, s.n)
-                  cur = Some(SessSt(e.ts, e.ts, 1L))
-                case None =>
-                  cur = Some(SessSt(e.ts, e.ts, 1L))
-              }
-            }
+            val (cur, closed) = sessionStep(uid, state.getOption, rows, gapMs)
             cur.foreach { s =>
               state.update(s)
               // Close when the watermark proves no in-gap event can arrive.
               state.setTimeoutTimestamp(s.end.getTime + gapMs)
             }
-            closed.result().iterator
+            closed.iterator
           }
         })
+  }
+
+  /** The session fold [[sessionize]] and [[SessionProcessor]] share: a
+    * micro-batch's events extend the `open` session while within `gapMs`
+    * of its end, or close it and open a new one. Returns the session left
+    * open and the closed ones. */
+  private def sessionStep(uid: Long, open: Option[SessSt], rows: Iterator[Ev],
+                          gapMs: Long): (Option[SessSt], Seq[SessionOut]) = {
+    val closed = Seq.newBuilder[SessionOut]
+    // Apply the batch's events in event-time order; under the
+    // time-ordered replay contract cross-batch order is monotone.
+    val cur = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).foldLeft(open) {
+      case (Some(s), e) if e.ts.getTime <= s.end.getTime + gapMs =>
+        Some(SessSt(s.start, if (e.ts.getTime > s.end.getTime) e.ts else s.end, s.n + 1))
+      case (prev, e) =>
+        prev.foreach(s => closed += SessionOut(uid, s.start, s.end, s.n))
+        Some(SessSt(e.ts, e.ts, 1L))
+    }
+    (cur, closed.result())
   }
 
   /** STR-ST4: [[sessionize]] on the Spark 4 arbitrary-state API with real
@@ -1334,22 +1305,9 @@ object StreamOps {
         org.apache.spark.sql.streaming.TTLConfig.NONE)
     override def handleInputRows(uid: Long, rows: Iterator[Ev],
         timer: org.apache.spark.sql.streaming.TimerValues): Iterator[SessionOut] = {
-      val sorted = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-      val closed = Seq.newBuilder[SessionOut]
-      var cur = if (st.exists()) Some(st.get()) else None
-      val prevTimer = cur.map(s => s.end.getTime + gapMs)
-      sorted.foreach { e =>
-        cur match {
-          case Some(s) if e.ts.getTime <= s.end.getTime + gapMs =>
-            cur = Some(SessSt(s.start,
-              if (e.ts.getTime > s.end.getTime) e.ts else s.end, s.n + 1))
-          case Some(s) =>
-            closed += SessionOut(uid, s.start, s.end, s.n)
-            cur = Some(SessSt(e.ts, e.ts, 1L))
-          case None =>
-            cur = Some(SessSt(e.ts, e.ts, 1L))
-        }
-      }
+      val prev = valueOf(st)
+      val prevTimer = prev.map(s => s.end.getTime + gapMs)
+      val (cur, closed) = sessionStep(uid, prev, rows, gapMs)
       cur.foreach { s =>
         st.update(s)
         // Re-arm the idle-gap timer only when the session end moved — the
@@ -1361,7 +1319,7 @@ object StreamOps {
           getHandle.registerTimer(t)
         }
       }
-      closed.result().iterator
+      closed.iterator
     }
     override def handleExpiredTimer(uid: Long,
         timer: org.apache.spark.sql.streaming.TimerValues,
@@ -1430,16 +1388,9 @@ object StreamOps {
   /** STR-SNK: run any of the above to a parquet sink with checkpointing
     * (exactly-once file sink), draining all available input. Returns the
     * sink directory. */
-  def runToParquetSink(df: DataFrame, outDir: String, checkpointDir: String): Unit = {
-    val q = df.writeStream
-      .outputMode(OutputMode.Append)
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+  def runToParquetSink(df: DataFrame, outDir: String, checkpointDir: String): Unit =
+    drain(df.writeStream.outputMode(OutputMode.Append).format("parquet")
+      .option("path", outDir), Some(checkpointDir))
 
   /** STR-WH: stream → warehouse loading via foreachBatch — the [REF]
     * Redshift-load flow (`Untitled Diagram.drawio:79-87`) as a stream.
@@ -1450,17 +1401,10 @@ object StreamOps {
     * targets want an idempotent load keyed on batchId — the parquet impl
     * here appends, and the test asserts a clean rerun adds nothing. */
   def runToWarehouse(df: DataFrame, writer: graft.sources.Ingest.WarehouseWriter,
-                     checkpointDir: String): Unit = {
-    val q = df.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        writer.write(batch, org.apache.spark.sql.SaveMode.Append)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                     checkpointDir: String): Unit =
+    drainBatches(df, checkpointDir) { (batch, _) =>
+      writer.write(batch, org.apache.spark.sql.SaveMode.Append)
+    }
 
   /** STR-QR: streaming clean/quarantine split — the [REF] bad-record
     * policy as a stream: each arriving partner file parses PERMISSIVE,
@@ -1471,34 +1415,27 @@ object StreamOps {
     * only materializes the corrupt-record column through a cache. */
   def runQuarantineSplit(parsed: DataFrame, corruptCol: String,
                          cleanDir: String, quarantineDir: String,
-                         checkpointDir: String): Unit = {
-    val q = parsed.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // Batch-keyed DYNAMIC partition overwrite, not a plain append: a
-        // writer crash between the clean append and the checkpoint commit
-        // replays this batch, and overwrite of ONLY its batch_id=N
-        // partition converges to one copy (the file-sink analog of
-        // runToJdbcWarehouse's delete-then-insert). Dynamic overwrite is
-        // a PER-WRITE option (runNotifiedLoad's rule): mutating the
-        // session conf here would race any concurrent writer's set/
-        // restore, and a lost race downgrades these overwrites to STATIC
-        // — which deletes EVERY prior batch's partition.
-        val c = batch.withColumn("batch_id", lit(batchId)).cache()
-        try {
-          c.filter(col(corruptCol).isNull).drop(corruptCol)
-            .write.partitionBy("batch_id").mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic").parquet(cleanDir)
-          c.filter(col(corruptCol).isNotNull).select(col(corruptCol), col("batch_id"))
-            .write.partitionBy("batch_id").mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic").parquet(quarantineDir)
-        } finally c.unpersist()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                         checkpointDir: String): Unit =
+    drainBatches(parsed, checkpointDir) { (batch, batchId) =>
+      // Batch-keyed DYNAMIC partition overwrite, not a plain append: a
+      // writer crash between the clean append and the checkpoint commit
+      // replays this batch, and overwrite of ONLY its batch_id=N
+      // partition converges to one copy (the file-sink analog of
+      // runToJdbcWarehouse's delete-then-insert). Dynamic overwrite is
+      // a PER-WRITE option (runNotifiedLoad's rule): mutating the
+      // session conf here would race any concurrent writer's set/
+      // restore, and a lost race downgrades these overwrites to STATIC
+      // — which deletes EVERY prior batch's partition.
+      val c = batch.withColumn("batch_id", lit(batchId)).cache()
+      try {
+        c.filter(col(corruptCol).isNull).drop(corruptCol)
+          .write.partitionBy("batch_id").mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic").parquet(cleanDir)
+        c.filter(col(corruptCol).isNotNull).select(col(corruptCol), col("batch_id"))
+          .write.partitionBy("batch_id").mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic").parquet(quarantineDir)
+      } finally c.unpersist()
+    }
 
   /** STR-WH2: stream → JDBC warehouse with an IDEMPOTENT batch-keyed load —
     * the missing half of the at-least-once contract in [[runToWarehouse]]'s
@@ -1510,43 +1447,36 @@ object StreamOps {
     * staging, JDBC) implements; tested against embedded Derby including a
     * full re-replay from a FRESH checkpoint. */
   def runToJdbcWarehouse(df: DataFrame, target: graft.sources.Ingest.JdbcTarget,
-                         checkpointDir: String): Unit = {
-    val q = df.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // Scrub any prior (possibly partial) copy of this batch. First-ever
-        // batch: the table doesn't exist yet — the write below creates it.
-        val conn = java.sql.DriverManager.getConnection(target.url)
-        try {
-          // Existence check via metadata, NOT a swallowed SQLException: a
-          // transient DELETE failure (lock timeout, dropped connection)
-          // must abort the batch — silently proceeding to the append
-          // would double-load the rows the delete was there to scrub.
-          // Probe every identifier-folding convention: Derby stores the
-          // unquoted name UPPER-folded, PostgreSQL lower-folded, DuckDB
-          // as-typed. Probing only the upper-case form silently misses the
-          // table on lower-folding engines — exists=false skips the DELETE
-          // scrub and a redelivered batch double-loads.
-          val exists = Seq(target.table.toUpperCase, target.table.toLowerCase,
-              target.table).distinct.exists { name =>
-            val rs = conn.getMetaData.getTables(null, null, name, Array("TABLE"))
-            try rs.next() finally rs.close()
-          }
-          // Spark's JDBC writer creates COLUMNS as quoted (case-sensitive)
-          // identifiers but the table unquoted — mirror that here, or the
-          // predicate resolves to a non-existent BATCH_ID.
-          if (exists) conn.createStatement()
-            .executeUpdate(s"""DELETE FROM ${target.table} WHERE "batch_id" = $batchId""")
-        } finally conn.close()
-        new graft.sources.Ingest.JdbcWarehouseWriter(target)
-          .write(batch.withColumn("batch_id", lit(batchId)),
-            org.apache.spark.sql.SaveMode.Append)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                         checkpointDir: String): Unit =
+    drainBatches(df, checkpointDir) { (batch, batchId) =>
+      // Scrub any prior (possibly partial) copy of this batch. First-ever
+      // batch: the table doesn't exist yet — the write below creates it.
+      val conn = java.sql.DriverManager.getConnection(target.url)
+      try {
+        // Existence check via metadata, NOT a swallowed SQLException: a
+        // transient DELETE failure (lock timeout, dropped connection)
+        // must abort the batch — silently proceeding to the append
+        // would double-load the rows the delete was there to scrub.
+        // Probe every identifier-folding convention: Derby stores the
+        // unquoted name UPPER-folded, PostgreSQL lower-folded, DuckDB
+        // as-typed. Probing only the upper-case form silently misses the
+        // table on lower-folding engines — exists=false skips the DELETE
+        // scrub and a redelivered batch double-loads.
+        val exists = Seq(target.table.toUpperCase, target.table.toLowerCase,
+            target.table).distinct.exists { name =>
+          val rs = conn.getMetaData.getTables(null, null, name, Array("TABLE"))
+          try rs.next() finally rs.close()
+        }
+        // Spark's JDBC writer creates COLUMNS as quoted (case-sensitive)
+        // identifiers but the table unquoted — mirror that here, or the
+        // predicate resolves to a non-existent BATCH_ID.
+        if (exists) conn.createStatement()
+          .executeUpdate(s"""DELETE FROM ${target.table} WHERE "batch_id" = $batchId""")
+      } finally conn.close()
+      new graft.sources.Ingest.JdbcWarehouseWriter(target)
+        .write(batch.withColumn("batch_id", lit(batchId)),
+          org.apache.spark.sql.SaveMode.Append)
+    }
 
   /** STR-CDC: streaming changelog APPLY — CDC-2 as incremental snapshot
     * maintenance. Each arriving changelog micro-batch merges into a keyed
@@ -1568,81 +1498,70 @@ object StreamOps {
     * merge runs as MERGE INTO / the staged DELETE+INSERT of
     * [[graft.sources.Ingest.JdbcUpsertWriter]], which STR-WH2 proves. */
   def runChangelogApply(changelog: DataFrame, snapshotDir: String,
-                        checkpointDir: String): Unit = {
-    val q = changelog.writeStream
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val curDir = new java.io.File(snapshotDir)
-          val prevDir = new java.io.File(snapshotDir + ".prev")
-          def rm(f: java.io.File): Unit = {
-            val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-            f.delete(); ()
-          }
-          // CRASH RECOVERY before reading: a death between the two renames
-          // below leaves the last committed snapshot parked at `.prev` and
-          // no live dir — restore it, never fall through to "empty". The
-          // empty fallback is reserved for a TRUE cold start (neither dir
-          // exists); reaching it with a parked .prev present would silently
-          // rebuild the view from one batch.
-          if (!curDir.exists() && prevDir.exists() &&
-              !prevDir.renameTo(curDir))
-            throw new java.io.IOException(
-              s"snapshot recovery failed: $prevDir -> $snapshotDir")
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("k")).orderBy(col("seq").desc)
-          val latest = batch
-            .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-            .select(col("k").as("ck"), col("op"),
-              col("price").as("cp"), col("status").as("cst"))
-          val snapSchema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("k",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("price",
-              org.apache.spark.sql.types.DecimalType(38, 4)),
-            org.apache.spark.sql.types.StructField("status",
-              org.apache.spark.sql.types.StringType)))
-          // Always read with the EXPLICIT schema: a legal all-delete batch
-          // leaves a snapshot dir with zero part files, and schema
-          // inference on it throws on every subsequent batch — bricking
-          // the pipeline right after the one batch that emptied the view.
-          val cur =
-            if (curDir.exists()) s.read.schema(snapSchema).parquet(snapshotDir)
-            else s.createDataFrame(
-              s.sparkContext.emptyRDD[org.apache.spark.sql.Row], snapSchema)
-          val merged = cur.join(latest, col("k") === col("ck"), "full_outer")
-            .filter(col("op").isNull || col("op") =!= "D")
-            .select(coalesce(col("k"), col("ck")).as("k"),
-              coalesce(col("cp"), col("price")).cast(
-                org.apache.spark.sql.types.DecimalType(38, 4)).as("price"),
-              coalesce(col("cst"), col("status")).as("status"))
-          // Write the next version FIRST (the current snapshot is still
-          // being read lazily during this write), then swap by RENAME-ASIDE
-          // (cur -> .prev, next -> cur, drop .prev): the last committed
-          // snapshot exists on disk at every instant, so a crash anywhere
-          // in the sequence recovers — either cur survives untouched, or
-          // the recovery block above restores it from .prev. A delete-
-          // before-rename swap would instead have a window where NO
-          // snapshot exists and recovery silently restarts empty.
-          val tmp = snapshotDir + ".next"
-          merged.write.mode("overwrite").parquet(tmp)
-          if (prevDir.exists()) rm(prevDir)
-          if (curDir.exists() && !curDir.renameTo(prevDir))
-            throw new java.io.IOException(
-              s"snapshot swap failed: $snapshotDir -> $prevDir")
-          if (!new java.io.File(tmp).renameTo(curDir)) {
-            prevDir.renameTo(curDir) // best-effort restore before failing
-            throw new java.io.IOException(s"snapshot swap failed: $tmp -> $snapshotDir")
-          }
-          if (prevDir.exists()) rm(prevDir)
+                        checkpointDir: String): Unit =
+    drainBatches(changelog, checkpointDir) { (batch, _) =>
+      if (!batch.isEmpty) {
+        val s = batch.sparkSession
+        val curDir = new java.io.File(snapshotDir)
+        val prevDir = new java.io.File(snapshotDir + ".prev")
+        // CRASH RECOVERY before reading: a death between the two renames
+        // below leaves the last committed snapshot parked at `.prev` and
+        // no live dir — restore it, never fall through to "empty". The
+        // empty fallback is reserved for a TRUE cold start (neither dir
+        // exists); reaching it with a parked .prev present would silently
+        // rebuild the view from one batch.
+        if (!curDir.exists() && prevDir.exists() &&
+            !prevDir.renameTo(curDir))
+          throw new java.io.IOException(
+            s"snapshot recovery failed: $prevDir -> $snapshotDir")
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("k")).orderBy(col("seq").desc)
+        val latest = batch
+          .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+          .select(col("k").as("ck"), col("op"),
+            col("price").as("cp"), col("status").as("cst"))
+        val snapSchema = org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("k",
+            org.apache.spark.sql.types.LongType),
+          org.apache.spark.sql.types.StructField("price",
+            org.apache.spark.sql.types.DecimalType(38, 4)),
+          org.apache.spark.sql.types.StructField("status",
+            org.apache.spark.sql.types.StringType)))
+        // Always read with the EXPLICIT schema: a legal all-delete batch
+        // leaves a snapshot dir with zero part files, and schema
+        // inference on it throws on every subsequent batch — bricking
+        // the pipeline right after the one batch that emptied the view.
+        val cur =
+          if (curDir.exists()) s.read.schema(snapSchema).parquet(snapshotDir)
+          else s.createDataFrame(
+            s.sparkContext.emptyRDD[org.apache.spark.sql.Row], snapSchema)
+        val merged = cur.join(latest, col("k") === col("ck"), "full_outer")
+          .filter(col("op").isNull || col("op") =!= "D")
+          .select(coalesce(col("k"), col("ck")).as("k"),
+            coalesce(col("cp"), col("price")).cast(
+              org.apache.spark.sql.types.DecimalType(38, 4)).as("price"),
+            coalesce(col("cst"), col("status")).as("status"))
+        // Write the next version FIRST (the current snapshot is still
+        // being read lazily during this write), then swap by RENAME-ASIDE
+        // (cur -> .prev, next -> cur, drop .prev): the last committed
+        // snapshot exists on disk at every instant, so a crash anywhere
+        // in the sequence recovers — either cur survives untouched, or
+        // the recovery block above restores it from .prev. A delete-
+        // before-rename swap would instead have a window where NO
+        // snapshot exists and recovery silently restarts empty.
+        val tmp = snapshotDir + ".next"
+        merged.write.mode("overwrite").parquet(tmp)
+        org.apache.hadoop.fs.FileUtil.fullyDelete(prevDir)
+        if (curDir.exists() && !curDir.renameTo(prevDir))
+          throw new java.io.IOException(
+            s"snapshot swap failed: $snapshotDir -> $prevDir")
+        if (!new java.io.File(tmp).renameTo(curDir)) {
+          prevDir.renameTo(curDir) // best-effort restore before failing
+          throw new java.io.IOException(s"snapshot swap failed: $tmp -> $snapshotDir")
         }
+        org.apache.hadoop.fs.FileUtil.fullyDelete(prevDir)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+    }
 
   /** STR-SNAP: streaming atomic versioned publish — STR-CDC's swap
     * upgraded to the full [[graft.core.Snapshot]] pointer store. Each
@@ -1661,17 +1580,10 @@ object StreamOps {
     * results switch to Update/Append + partition-level publish — the
     * pointer-swap commit is unchanged. */
   def runVersionedPublish(agg: DataFrame, root: String,
-                          checkpointDir: String): Unit = {
-    val q = agg.writeStream
-      .outputMode(OutputMode.Complete)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        publishEpochGuarded(batch, root, batchId); ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                          checkpointDir: String): Unit =
+    drainBatches(agg, checkpointDir, OutputMode.Complete) { (batch, batchId) =>
+      publishEpochGuarded(batch, root, batchId); ()
+    }
 
   /** STR-DRIFT: streaming distribution-drift monitor — DRIFT-1's binned
     * divergence evaluated per epoch against a PINNED reference profile
@@ -1714,28 +1626,22 @@ object StreamOps {
       .count().collect().map(r => r.getInt(0) -> r.getLong(1) / refN).toMap
     val counts = values.groupBy(binOf(col("value")).as("bin"))
       .agg(count(lit(1)).as("n"))
-    val q = counts.writeStream
-      .outputMode(OutputMode.Complete)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val rows = batch.collect().map(r => r.getInt(0) -> r.getLong(1))
-        val n = rows.map(_._2).sum
-        if (n > 0) {
-          val drift = (0 to 9).map { bin =>
-            val p = refFreq.getOrElse(bin, 0.0)
-            val qf = rows.toMap.getOrElse(bin, 0L).toDouble / n
-            if (p + qf == 0.0) 0.0 else (p - qf) * (p - qf) / (p + qf)
-          }.sum
-          import batch.sparkSession.implicits._
-          Seq((epoch, n, drift, drift > alarmAt))
-            .toDF("epoch", "n_seen", "drift", "alarm")
-            .write.mode("append").parquet(logDir)
-        }
-        ()
+    drainBatches(counts, checkpointDir, OutputMode.Complete) { (batch, epoch) =>
+      val rows = batch.collect().map(r => r.getInt(0) -> r.getLong(1))
+      val n = rows.map(_._2).sum
+      if (n > 0) {
+        val drift = (0 to 9).map { bin =>
+          val p = refFreq.getOrElse(bin, 0.0)
+          val qf = rows.toMap.getOrElse(bin, 0L).toDouble / n
+          if (p + qf == 0.0) 0.0 else (p - qf) * (p - qf) / (p + qf)
+        }.sum
+        import batch.sparkSession.implicits._
+        Seq((epoch, n, drift, drift > alarmAt))
+          .toDF("epoch", "n_seen", "drift", "alarm")
+          .write.mode("append").parquet(logDir)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      ()
+    }
   }
 
   /** The STR-SNAP epoch commit, factored for direct redelivery testing:
@@ -1758,15 +1664,8 @@ object StreamOps {
     * (test/verification harness; Complete mode for aggregations, Update for
     * flatMapGroupsWithState, Append otherwise). */
   def drainToMemory(df: DataFrame, name: String, mode: OutputMode): DataFrame = {
-    val spark = df.sparkSession
-    val q = df.writeStream
-      .outputMode(mode)
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drain(df.writeStream.outputMode(mode).format("memory").queryName(name))
+    df.sparkSession.table(name)
   }
   def drainToMemory(df: DataFrame, name: String, complete: Boolean): DataFrame =
     drainToMemory(df, name, if (complete) OutputMode.Complete else OutputMode.Append)

@@ -780,4 +780,49 @@ class IngestSpec extends AnyFunSuite {
     assert(!v1Schema.fieldNames.contains("o_orderstatus"),
       s"v1 generation must predate the column: ${v1Schema.fieldNames.mkString(",")}")
   }
+
+  test("leafFiles: the listStatus walk finds listFiles' set on a partitioned store with _SUCCESS and a _temporary tree") {
+    val dir = tempDir("walk_store")
+    Tables.load(spark, sfDir, "orders").select(col("o_orderkey"), col("o_orderstatus"))
+      .write.partitionBy("o_orderstatus").mode(SaveMode.Overwrite).parquet(dir.toString)
+    val debris = dir.resolve("_temporary/0/_temporary/attempt_0/o_orderstatus=F")
+    Files.createDirectories(debris)
+    Files.write(debris.resolve("part-00000.parquet"), Array[Byte](1, 2, 3))
+    val root = new org.apache.hadoop.fs.Path(dir.toString)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def key(s: org.apache.hadoop.fs.FileStatus) =
+      (s.getPath.toString, s.getLen, s.getModificationTime)
+    val it = fs.listFiles(root, true)
+    val listed = Iterator.continually(it).takeWhile(_.hasNext).map(i => key(i.next())).toSet
+    assert(listed.exists(_._1.endsWith("/_SUCCESS")) &&
+      listed.exists(_._1.contains("/_temporary/")) &&
+      listed.exists(_._1.contains("/o_orderstatus=O/")), s"fixture: $listed")
+    val walked = graft.core.Versioned.leafFiles(fs, root).map(key)
+    assert(walked.size == listed.size && walked.toSet == listed)
+    // With Spark's hidden-name rule the walk skips _SUCCESS and the tree.
+    val prefix = fs.makeQualified(root).toString + "/"
+    val visible = graft.core.Versioned
+      .leafFiles(fs, root, n => !n.startsWith("_") && !n.startsWith(".")).map(key).toSet
+    assert(visible == listed.filterNot(_._1.stripPrefix(prefix).split('/')
+      .exists(c => c.startsWith("_") || c.startsWith("."))))
+    assert(visible.nonEmpty && visible.forall(_._1.endsWith(".parquet")))
+  }
+
+  test("compactWithErasure: a destination on another file system is counted on its own") {
+    // A file: source and a graftlocal: destination — counting the output
+    // on the source's file system fails with "Wrong FS".
+    GraftLocalFileSystem.register(spark.sparkContext.hadoopConfiguration)
+    val src = tempDir("cwe_xfs_src").toString
+    val orders = Tables.load(spark, sfDir, "orders")
+    orders.repartition(4).write.mode(SaveMode.Overwrite).parquet(src)
+    val dstDir = tempDir("cwe_xfs_dst")
+    val deletion = orders.filter(col("o_custkey") % 13 === 0).select(col("o_custkey"))
+    val (before, after, erased) = Ingest.compactWithErasure(spark, src,
+      s"${GraftLocalFileSystem.Scheme}:$dstDir", deletion, "o_custkey")
+    val expected = orders.filter(col("o_custkey") % 13 =!= 0)
+    assert((before, after) == (4, 1), s"got ($before, $after)")
+    assert(erased == orders.count() - expected.count())
+    assertSameRows(spark.read.parquet(dstDir.toString), expected,
+      "exactly the non-erased rows land on the other file system")
+  }
 }

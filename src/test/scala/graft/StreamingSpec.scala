@@ -1823,4 +1823,59 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed.count() == 3L)
     assertSameRows(streamed, batch, "streamed CSV vs batch CSV")
   }
+
+  test("STR-ST6 context clock is µs-exact before 1970: a click at -0.7 s is context for a purchase at +0.1 s") {
+    // A µs conversion that truncates toward zero put the click at +0.3 s,
+    // after the purchase, so it fell out of the context.
+    val d = tempDir("ctx_epoch")
+    Seq(StreamOps.Ev(1L, new Timestamp(-700L), 7L, "click", 1.0),
+        StreamOps.Ev(2L, new Timestamp(100L), 7L, "purchase", 2.0))
+      .toDS().write.mode("overwrite").parquet(d.toString)
+    val stream = spark.readStream
+      .schema(org.apache.spark.sql.Encoders.product[StreamOps.Ev].schema)
+      .parquet(d.toString).as[StreamOps.Ev]
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try {
+      val out = StreamOps.drainToMemory(
+        StreamOps.purchaseContextStream(stream).toDF(), "ctx_epoch",
+        org.apache.spark.sql.streaming.OutputMode.Append)
+        .select(col("event_id"), col("ctx_n"), col("ctx")).collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSeq
+      assert(out == Seq((2L, 1, "-700000:1:click")), s"got $out")
+    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+  }
+
+  test("STR-NTFY a compaction mid-batch supersedes the notified load; its redelivery lands every row once") {
+    // The hook runs a compaction after the micro-batch's write commits and
+    // before its pointer re-check: the batch must refuse to commit, and the
+    // checkpointed rerun must redeliver it into the new current version.
+    val queue = tempDir("ntfy_race_queue")
+    val out = tempDir("ntfy_race_out").toString
+    val ckpt = tempDir("ntfy_race_ckpt").toString
+    def notify(name: String, lines: String*): Unit =
+      java.nio.file.Files.writeString(queue.resolve(name),
+        lines.mkString("\n") + "\n")
+    notify("n0.txt", s"$replayDir/slice_00.parquet")
+    StreamOps.runNotifiedLoad(spark, queue.toString, eventsBatch.schema, out, ckpt)
+    val before = StreamOps.storeDataDir(spark, out)
+    notify("n1.txt", s"$replayDir/slice_01.parquet")
+    StreamOps.ingestPostAppendHook = () =>
+      StreamOps.compactStore(spark, out, Seq("event_id"), Seq("_src"))
+    val ex = try intercept[Exception] {
+      StreamOps.runNotifiedLoad(spark, queue.toString, eventsBatch.schema, out, ckpt)
+    } finally StreamOps.ingestPostAppendHook = () => ()
+    val msgs = Iterator.iterate(ex: Throwable)(_.getCause)
+      .takeWhile(_ != null).map(t => Option(t.getMessage).getOrElse(""))
+      .toSeq
+    assert(msgs.exists(_.contains("notified load superseded")),
+      s"expected the version-supersede refusal, got: $msgs")
+    assert(StreamOps.storeDataDir(spark, out) != before,
+      "the compaction must have published a new version")
+    StreamOps.runNotifiedLoad(spark, queue.toString, eventsBatch.schema, out, ckpt)
+    assertSameRows(
+      StreamOps.readStore(spark, out).select(eventsBatch.columns.map(col): _*),
+      eventsBatch.filter(col("event_id") % 4 < 2),
+      "every announced row exactly once after the redelivery")
+  }
 }
