@@ -13,6 +13,49 @@ import graft.core.Tables._
   */
 object Analytics extends QueryModule {
 
+  /** The exact two-sample KS tail shared by `drift_ks` and
+    * `vec_norm_drift`: `perV` = (value, ca, cb), one row per distinct
+    * value with both halves' counts. GlobalRank's two-pass exclusive
+    * prefix recovers each ECDF step, D = max |F_A − F_B|, argmax ties →
+    * smallest value (named `atName`), reject = dec4(D) >
+    * dec4(1.3581·√((nA+nB)/(nA·nB))). Columns (n_a, n_b, ks_d, atName,
+    * reject). */
+  private[queries] def ksDrift(perV: DataFrame, atName: String): DataFrame = {
+    // NOT pinned: GlobalRank already pins the ranged relation internally,
+    // the prefix windows recompute from it for pennies (the relation is
+    // |distinct values|-sized), and an outer checkpoint would hide the
+    // _gr_ offset columns from the no-unpartitioned-window plan guard.
+    val withP = graft.operators.GlobalRank.attach(perV,
+      Seq(col("value").asc), None, Seq("ca" -> "pa", "cb" -> "pb"))
+    val tot = withP.agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"))
+    // empty-half guard (drift_psi's NULLIF rule): a corpus with every row
+    // in one half makes the other ECDF x/0 = Infinity, and the ANSI
+    // decimal render of the resulting D throws. NULL out the undefined
+    // ECDF instead → diff NULL → max NULL → empty result, identically in
+    // both engines.
+    def nz(c: Column): Column = when(c === 0L, lit(null)).otherwise(c)
+    val diff = abs(
+      (col("pa") + col("ca")).cast("double") / nz(col("na")).cast("double") -
+      (col("pb") + col("cb")).cast("double") / nz(col("nb")).cast("double"))
+    val scored = withP.crossJoin(broadcast(tot)).withColumn("diff", diff)
+    val dmax = scored.agg(max(col("diff")).as("dmax"))
+    // na·nb computed in DOUBLE, not int64: at 100 TB half-sizes (~1e12
+    // rows) the int64 product overflows — Spark wraps silently to a
+    // wrong/negative threshold while DuckDB raises, so the engines
+    // diverge (cls_eval/cohen_kappa's count-product rule applied here).
+    val thr = lit(1.3581) * sqrt(
+      (col("na") + col("nb")).cast("double") /
+        (col("na").cast("double") * col("nb").cast("double")))
+    scored.crossJoin(broadcast(dmax))
+      .filter(col("diff") === col("dmax"))
+      .groupBy(col("na"), col("nb"), col("dmax"))
+      .agg(min(col("value")).as("atv"))
+      .select(col("na").as("n_a"), col("nb").as("n_b"),
+        dec4S(col("dmax")).as("ks_d"),
+        dec4S(col("atv")).as(atName),
+        (dec4(col("dmax")) > dec4(thr)).as("reject"))
+  }
+
   val all: Map[String, Q] = Map(
     // ---- GRPH-2: triangle census of the part co-purchase graph (nodes =
     //      parts, edge when two parts share an order) — the local-density
@@ -475,39 +518,7 @@ object Analytics extends QueryModule {
           when(unix_micros(col("ts")) < col("mid"), 1L).otherwise(0L).as("ia"))
         .groupBy(col("value"))
         .agg(sum(col("ia")).as("ca"), sum(lit(1L) - col("ia")).as("cb"))
-      // NOT pinned: GlobalRank already pins the ranged relation internally,
-      // the prefix windows recompute from it for pennies (the relation is
-      // |distinct values|-sized), and an outer checkpoint would hide the
-      // _gr_ offset columns from the no-unpartitioned-window plan guard.
-      val withP = graft.operators.GlobalRank.attach(perV,
-        Seq(col("value").asc), None, Seq("ca" -> "pa", "cb" -> "pb"))
-      val tot = withP.agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"))
-      // empty-half guard (drift_psi's NULLIF rule): a ≤1µs corpus puts
-      // every row in one half, the other ECDF is x/0 = Infinity, and the
-      // ANSI decimal render of the resulting D throws. NULL out the
-      // undefined ECDF instead → diff NULL → max NULL → empty result,
-      // identically in both engines.
-      def nz(c: Column): Column = when(c === 0L, lit(null)).otherwise(c)
-      val diff = abs(
-        (col("pa") + col("ca")).cast("double") / nz(col("na")).cast("double") -
-        (col("pb") + col("cb")).cast("double") / nz(col("nb")).cast("double"))
-      val scored = withP.crossJoin(broadcast(tot)).withColumn("diff", diff)
-      val dmax = scored.agg(max(col("diff")).as("dmax"))
-      // na·nb computed in DOUBLE, not int64: at 100 TB half-sizes (~1e12
-      // rows) the int64 product overflows — Spark wraps silently to a
-      // wrong/negative threshold while DuckDB raises, so the engines
-      // diverge (cls_eval/cohen_kappa's count-product rule applied here).
-      val thr = lit(1.3581) * sqrt(
-        (col("na") + col("nb")).cast("double") /
-          (col("na").cast("double") * col("nb").cast("double")))
-      ordered(scored.crossJoin(broadcast(dmax))
-        .filter(col("diff") === col("dmax"))
-        .groupBy(col("na"), col("nb"), col("dmax"))
-        .agg(min(col("value")).as("atv"))
-        .select(col("na").as("n_a"), col("nb").as("n_b"),
-          dec4S(col("dmax")).as("ks_d"),
-          dec4S(col("atv")).as("at_value"),
-          (dec4(col("dmax")) > dec4(thr)).as("reject")))
+      ordered(ksDrift(perV, "at_value"))
     }),
 
     // ---- DRIFT-3: χ² homogeneity drift test (`drift_chi2`) — the

@@ -1060,11 +1060,11 @@ object LlmOps extends QueryModule {
     * path, byte-identical to the original CTE text). Only `ibase` — the
     * training base feeding the seeds and both Lloyd rounds — is filtered;
     * `vecs`/`assigned` (full-corpus assignment) always read the whole
-    * table, mirroring [[ivfAssignedWith]] over a sample-trained
+    * table, mirroring [[ivfAssigned]] over a sample-trained
     * [[ivfKmeansCentroidsFrom]]. */
   private def duckIvfBaseCtesTrain(trainWhere: String): String = {
     // Lloyd-trained coarse quantizer (r11): the DuckDB twin of
-    // [[ivfKmeansCentroids]] — kmeans_iter's certified oracle CTEs with
+    // [[ivfKmeansCentroidsFrom]] — kmeans_iter's certified oracle CTEs with
     // k=10 seeds (vec_id < 10) and TWO update steps; `cent` is the
     // round-2 centroid table.
     val centCols = (1 to 64).map { i =>
@@ -1208,8 +1208,8 @@ object LlmOps extends QueryModule {
     * by `trainWhere` ("" = the certified full-train path, byte-identical
     * text). Training CTEs (sign seed, book, refinement rounds) read the
     * sampled long relation `plqt`; the encode (`pdist`), LUT and scan
-    * always read the full `plq` — mirroring [[ivfPqRanked]]'s
-    * trainSample path. */
+    * always read the full `plq` — mirroring [[ivfPqRanked]] off the
+    * [[Full]] population. */
   private def duckIvfPqCtesTrain(trainWhere: String): String = {
     val tl = if (trainWhere.nonEmpty) "plqt" else "plq"
     val tsel = if (trainWhere.isEmpty) "" else s""", tsel AS (
@@ -1378,7 +1378,7 @@ object LlmOps extends QueryModule {
     * by `trainWhere` ("" = the certified full-train path, byte-identical
     * text). Only `sstat` — the per-dim [min,max] grid — trains on the
     * sample; the encode (`snq`) and scan always read the full corpus,
-    * mirroring [[ivfSqRanked]]'s trainSample path (out-of-grid full-corpus
+    * mirroring [[ivfSqRanked]] off the [[Full]] population (out-of-grid full-corpus
     * dims saturate to the sampled grid edges, the published SQ8 clamp). */
   private def duckIvfSqCtesTrain(trainWhere: String): String = {
     val statSrc = if (trainWhere.isEmpty) "slf"
@@ -1681,6 +1681,30 @@ object LlmOps extends QueryModule {
       .select(col("q_id"), col("doc_id"), col("r_bm25"))
   }
 
+  /** The corpus as (vec_id, e, nrm): double vectors and their L2 norms,
+    * the base every brute cosine leg reads. */
+  private def normedVecs(s: SparkSession, d: String): DataFrame = {
+    val dbl = transform(col("embedding"), x => x.cast("double"))
+    load(s, d, "embeddings").select(col("vec_id"), dbl.as("e"),
+      sqrt(dot_product(dbl, dbl)).as("nrm"))
+  }
+
+  /** Brute cosine top-`k` (sim1's shape): the broadcast query set `q` =
+    * (query_id, qe, qn, …) joined to the corpus `c` = (neighbor_id, ce,
+    * cn, …) on `on` minus self pairs, scored `score_raw` = cosine and
+    * ranked `rn` by (score desc, neighbor_id asc), cut at `k`. Keeps every
+    * input column. */
+  private def cosineTopK(q: DataFrame, c: DataFrame, k: Int,
+      on: Column = lit(true)): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("score_raw").desc, col("neighbor_id").asc)
+    broadcast(q).join(c, on && col("query_id") =!= col("neighbor_id"))
+      .withColumn("score_raw",
+        dot_product(col("qe"), col("ce")) / (col("qn") * col("cn")))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= k)
+  }
+
   /** Dense retrieval stage shared by RRF-1 and HN-1: per query (vec_id %
     * 100 == 7), the cosine top-10 corpus vectors (self excluded) with
     * rank — (q_id, doc_id, r_cos, cos_raw). The brute-force query×corpus
@@ -1688,20 +1712,14 @@ object LlmOps extends QueryModule {
     * retrieve_rerank's dense stage is deliberately NOT this — it scores
     * only its recalled candidates. */
   private def denseTop10(s: SparkSession, d: String): DataFrame = {
-    val emb = load(s, d, "embeddings")
-    val dbl = transform(col("embedding"), x => x.cast("double"))
-    val base = emb.select(col("vec_id"), dbl.as("e"),
-      sqrt(dot_product(dbl, dbl)).as("nrm"))
-    val qe = base.filter(col("vec_id") % 100 === 7)
-      .select(col("vec_id").as("q_id"), col("e").as("qe"), col("nrm").as("qn"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_raw").desc, col("doc_id").asc)
-    base.select(col("vec_id").as("doc_id"), col("e").as("de"), col("nrm").as("dn"))
-      .join(broadcast(qe), col("doc_id") =!= col("q_id"))
-      .withColumn("cos_raw", dot_product(col("qe"), col("de")) / (col("qn") * col("dn")))
-      .withColumn("r_cos", row_number().over(w))
-      .filter(col("r_cos") <= 10)
-      .select(col("q_id"), col("doc_id"), col("r_cos"), col("cos_raw"))
+    val base = normedVecs(s, d)
+    val q = base.filter(col("vec_id") % 100 === 7)
+      .select(col("vec_id").as("query_id"), col("e").as("qe"), col("nrm").as("qn"))
+    val c = base.select(col("vec_id").as("neighbor_id"), col("e").as("ce"),
+      col("nrm").as("cn"))
+    cosineTopK(q, c, 10)
+      .select(col("query_id").as("q_id"), col("neighbor_id").as("doc_id"),
+        col("rn").as("r_cos"), col("score_raw").as("cos_raw"))
   }
 
   /** DuckDB twin of [[bm25Top10]] + [[denseTop10]] — CTE block (appended
@@ -1876,73 +1894,50 @@ object LlmOps extends QueryModule {
       s"OR ($duckCapHash = (SELECT ch FROM $thr t2) AND vec_id <= (SELECT cvid FROM $thr t3))"
   }
 
-  /** The corpus Lloyd centroid table, memoized per (process, corpus) via
-    * Warehouse.once (gramBucketsOnce's rationale applied to the index
-    * family): ~12 gated IVF/PQ queries each re-ran the two certified
-    * Lloyd rounds on the same corpus; the table is ten rows of
-    * deterministic dec4-quantized doubles — EXACTLY the published index
-    * metadata the lifecycle tests Snapshot-round-trip — so one training
-    * job + shared reads is both pure caching (bit-identical values,
-    * oracles unchanged) and the production shape. */
-  private def centroidsOnce(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.core.Warehouse.once(d, "ivf_centroids") { out =>
-      ivfKmeansCentroidsFrom(load(s, d, "embeddings"))
+  /** Training population of a quantizer table: the full corpus (the
+    * certified path), [[embSampleTrain]]'s rate-keyed ~50% parity slice,
+    * or [[embCapTrain]]'s fixed-size content-hash top-K slice. `suffix`
+    * names the memoized table. Encode/search always read the full
+    * corpus; only the trained metadata differs. */
+  private sealed abstract class Population(val suffix: String) {
+    def slice(emb: DataFrame): DataFrame
+  }
+  private case object Full extends Population("") {
+    def slice(emb: DataFrame): DataFrame = emb
+  }
+  private case object Sample extends Population("_sample") {
+    def slice(emb: DataFrame): DataFrame = embSampleTrain(emb)
+  }
+  private case object Cap extends Population("_cap") {
+    def slice(emb: DataFrame): DataFrame = embCapTrain(emb)
+  }
+
+  /** The corpus Lloyd centroid table trained on `pop`, memoized per
+    * (process, corpus) via Warehouse.once (gramBucketsOnce's rationale
+    * applied to the index family): ~12 gated IVF/PQ queries each re-ran
+    * the two certified Lloyd rounds on the same corpus; the table is ten
+    * rows of deterministic dec4-quantized doubles — EXACTLY the published
+    * index metadata the lifecycle tests Snapshot-round-trip — so one
+    * training job + shared reads is both pure caching (bit-identical
+    * values, oracles unchanged) and the production shape. The sample-
+    * and cap-trained tables are published metadata in precisely the same
+    * way: the train-once/read-everywhere shape IS the 100 TB story the
+    * SIM-SAMPLE and SIM-CAP audits price. */
+  private def centroidsFor(s: SparkSession, d: String, pop: Population): DataFrame = {
+    val dir = graft.core.Warehouse.once(d, "ivf_centroids" + pop.suffix) { out =>
+      ivfKmeansCentroidsFrom(pop.slice(load(s, d, "embeddings")))
         .write.mode("overwrite").parquet(out)
     }
     s.read.parquet(dir)
   }
 
-  /** The corpus PQ codebook (xq space), memoized like [[centroidsOnce]] —
-    * ≤ 1024 rows of exact DECIMAL(18,4) codewords, the other half of the
-    * published index metadata. */
-  private def pqBookOnce(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.core.Warehouse.once(d, "pq_book_xq") { out =>
+  /** The corpus PQ codebook (xq space) trained on `pop`, memoized like
+    * [[centroidsFor]] — ≤ 1024 rows of exact DECIMAL(18,4) codewords,
+    * the other half of the published index metadata. */
+  private def pqBookFor(s: SparkSession, d: String, pop: Population): DataFrame = {
+    val dir = graft.core.Warehouse.once(d, "pq_book_xq" + pop.suffix) { out =>
       graft.operators.PqEncode.codebook(
-        graft.operators.PqEncode.toLong(load(s, d, "embeddings")), "xq")
-        .write.mode("overwrite").parquet(out)
-    }
-    s.read.parquet(dir)
-  }
-
-  /** The SAMPLE-trained metadata pair (Lloyd cells + PQ codebook fit on
-    * [[embSampleTrain]]'s slice), memoized exactly like the full-train
-    * pair — the sample-trained index is published metadata in precisely
-    * the same way, and the train-once/read-everywhere shape IS the
-    * 100 TB story the SIM-SAMPLE audits price. */
-  private def centroidsSampleOnce(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.core.Warehouse.once(d, "ivf_centroids_sample") { out =>
-      ivfKmeansCentroidsFrom(embSampleTrain(load(s, d, "embeddings")))
-        .write.mode("overwrite").parquet(out)
-    }
-    s.read.parquet(dir)
-  }
-
-  private def pqBookSampleOnce(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.core.Warehouse.once(d, "pq_book_xq_sample") { out =>
-      graft.operators.PqEncode.codebook(
-        graft.operators.PqEncode.toLong(
-          embSampleTrain(load(s, d, "embeddings"))), "xq")
-        .write.mode("overwrite").parquet(out)
-    }
-    s.read.parquet(dir)
-  }
-
-  /** The CAP-trained metadata pair ([[embCapTrain]]'s fixed-size slice),
-    * memoized like the other two pairs — the bounded-training-job index
-    * metadata the SIM-CAP audits price. */
-  private def centroidsCapOnce(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.core.Warehouse.once(d, "ivf_centroids_cap") { out =>
-      ivfKmeansCentroidsFrom(embCapTrain(load(s, d, "embeddings")))
-        .write.mode("overwrite").parquet(out)
-    }
-    s.read.parquet(dir)
-  }
-
-  private def pqBookCapOnce(s: SparkSession, d: String): DataFrame = {
-    val dir = graft.core.Warehouse.once(d, "pq_book_xq_cap") { out =>
-      graft.operators.PqEncode.codebook(
-        graft.operators.PqEncode.toLong(
-          embCapTrain(load(s, d, "embeddings"))), "xq")
+        graft.operators.PqEncode.toLong(pop.slice(load(s, d, "embeddings"))), "xq")
         .write.mode("overwrite").parquet(out)
     }
     s.read.parquet(dir)
@@ -1972,7 +1967,7 @@ object LlmOps extends QueryModule {
       .select(col("vec_id"), col("sp"), col("p"),
         (col("xq") - col("m")).cast(DecimalType(18, 4)).as("r"))
 
-  /** The RESIDUAL-space PQ codebook, memoized like [[pqBookOnce]] (r14:
+  /** The RESIDUAL-space PQ codebook, memoized like [[pqBookFor]] (r14:
     * the residual pair was the last quantizer family still retraining
     * per call — both gated consumers re-ran the Lloyd refinement on the
     * same corpus every time). The residual frame is deterministic given
@@ -1983,8 +1978,8 @@ object LlmOps extends QueryModule {
   private def resBookOnce(s: SparkSession, d: String): DataFrame = {
     val dir = graft.core.Warehouse.once(d, "pq_book_res") { out =>
       val long = graft.operators.PqEncode.toLong(load(s, d, "embeddings"))
-      val centTab = centroidsOnce(s, d)
-      val cells = ivfAssignedWith(s, d, centTab).filter(col("crn") === 1)
+      val centTab = centroidsFor(s, d, Full)
+      val cells = ivfAssigned(s, d, centTab).filter(col("crn") === 1)
       val rlong = resLongFrom(long, cells, resCentLong(centTab)).pinned
       graft.operators.PqEncode.codebook(rlong, "r")
         .write.mode("overwrite").parquet(out)
@@ -1992,38 +1987,9 @@ object LlmOps extends QueryModule {
     s.read.parquet(dir)
   }
 
-  /** Training-population selector shared by the quantizer pipelines:
-    * "full" (the certified path), "sample" ([[embSampleTrain]]'s rate-
-    * keyed ~50% parity slice), "cap" ([[embCapTrain]]'s fixed-size
-    * content-hash top-K slice). Encode/search always read the full
-    * corpus; only the trained metadata differs. */
-  private def trainSlice(pop: String, emb: DataFrame): DataFrame = pop match {
-    case "sample" => embSampleTrain(emb)
-    case "cap"    => embCapTrain(emb)
-    case "full"   => emb
-    case other => throw new IllegalArgumentException(
-      s"unknown training population '$other' (full|sample|cap)")
-  }
-
-  private def centroidsFor(s: SparkSession, d: String, pop: String): DataFrame =
-    pop match {
-      case "sample" => centroidsSampleOnce(s, d)
-      case "cap"    => centroidsCapOnce(s, d)
-      case _        => centroidsOnce(s, d)
-    }
-
-  private def pqBookFor(s: SparkSession, d: String, pop: String): DataFrame =
-    pop match {
-      case "sample" => pqBookSampleOnce(s, d)
-      case "cap"    => pqBookCapOnce(s, d)
-      case _        => pqBookOnce(s, d)
-    }
-
   /** The Lloyd trainer over a caller-supplied TRAINING embeddings
-    * frame — the full table on the certified path ([[centroidsOnce]]),
-    * [[embSampleTrain]]'s slice on the sample-train path (assignment of
-    * the full corpus against the sample-trained table stays
-    * [[ivfAssignedWith]]). */
+    * frame — a [[Population]]'s slice ([[centroidsFor]]); the full
+    * corpus is assigned against the trained table by [[ivfAssigned]]. */
   private def ivfKmeansCentroidsFrom(emb: DataFrame): DataFrame = {
     val dbl = transform(col("embedding"), x => x.cast("double"))
     val base = spread(emb, "vec_id").select(col("vec_id"), dbl.as("v"),
@@ -2059,18 +2025,12 @@ object LlmOps extends QueryModule {
   }
 
   /** The IVF coarse-quantizer ASSIGNMENT shared by the whole IVF family
-    * (`sim1_ivf`, `ivf_eval`, `ivf_curve`, `ivf_pq`): Lloyd-trained
-    * centroids ([[ivfKmeansCentroidsFrom]]), every vector scored against the
-    * broadcast centroid table, `crn` = that vector's cell preference rank
+    * (`sim1_ivf`, `ivf_eval`, `ivf_curve`, `ivf_pq`, …): every vector
+    * scored against the broadcast centroid table `cent0` (a
+    * [[centroidsFor]] table), `crn` = that vector's cell preference rank
     * (crn=1 is its home cell; crn≤nprobe are a query's probe cells).
     * Columns: (vec_id, e, vn, cell_label, cscore, crn). */
-  private def ivfAssigned(s: SparkSession, d: String): DataFrame =
-    ivfAssignedWith(s, d, centroidsOnce(s, d))
-
-  /** [[ivfAssigned]] against a caller-supplied centroid table — so a
-    * pipeline that also needs the centroids themselves (the residual
-    * variant's μ table) trains the Lloyd loop exactly once. */
-  private def ivfAssignedWith(s: SparkSession, d: String,
+  private def ivfAssigned(s: SparkSession, d: String,
       cent0: DataFrame): DataFrame = {
     val emb = load(s, d, "embeddings")
     val dbl = transform(col("embedding"), x => x.cast("double"))
@@ -2089,7 +2049,7 @@ object LlmOps extends QueryModule {
     * probe_rank (before the per-query top-k) — SIM-CURVE's input. */
   private def ivfRanked(s: SparkSession, d: String,
       maxProbe: Int = 2, raw: Boolean = false): DataFrame = {
-    val assigned = ivfAssigned(s, d)
+    val assigned = ivfAssigned(s, d, centroidsFor(s, d, Full))
     val cells = assigned.filter(col("crn") === 1)
       .select(col("vec_id"), col("e"), col("vn"), col("cell_label").as("cell"))
     val probes = assigned.filter(col("vec_id") < 10 && col("crn") <= maxProbe)
@@ -2119,23 +2079,45 @@ object LlmOps extends QueryModule {
     * sample-able at 100 TB per ddp_eval's methodology). One definition so
     * the audits cannot diverge on the query bound or the tie-break. */
   private def bruteTruthTop3(s: SparkSession, d: String): DataFrame = {
-    val emb = load(s, d, "embeddings")
-    val dbl = transform(col("embedding"), x => x.cast("double"))
-    val base = emb.select(col("vec_id"), dbl.as("e"),
-      sqrt(dot_product(dbl, dbl)).as("nrm"))
+    val base = normedVecs(s, d)
     val q = base.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("e").as("qe"), col("nrm").as("qn"))
     val c = base.select(col("vec_id").as("neighbor_id"), col("e").as("ce"),
       col("nrm").as("cn"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score_raw").desc, col("neighbor_id").asc)
-    broadcast(q).join(c, col("query_id") =!= col("neighbor_id"))
-      .withColumn("score_raw",
-        dot_product(col("qe"), col("ce")) / (col("qn") * col("cn")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
-      .select(col("query_id"), col("neighbor_id"))
+    cosineTopK(q, c, 3).select(col("query_id"), col("neighbor_id"))
   }
+
+  /** Brute cosine top-3 over the first `w` entries of `base`.`arr` —
+    * one width leg of the vec_mrl/vec_jl recall curves. Columns
+    * (query_id, rn, neighbor_id). */
+  private def prefixTop3(base: DataFrame, arr: String, w: Int): DataFrame = {
+    val pre = slice(col(arr), 1, w)
+    val q = base.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("query_id"), pre.as("qe"))
+      .withColumn("qn", sqrt(dot_product(col("qe"), col("qe"))))
+    val c = base.select(col("vec_id").as("neighbor_id"), pre.as("ce"))
+      .withColumn("cn", sqrt(dot_product(col("ce"), col("ce"))))
+    cosineTopK(q, c, 3).select(col("query_id"), col("rn"), col("neighbor_id"))
+  }
+
+  /** The width recall curve of vec_mrl/vec_jl: per width, the
+    * [[prefixTop3]] leg against `truth` = (tq, tn) over the 10 queries —
+    * n_hits, recall@3 and macro-MRR (reciprocal ranks dec4-quantized
+    * before the sum, ann_ndcg's exact-decimal-fold rule). */
+  private def widthCurve(base: DataFrame, arr: String, widths: Seq[Int],
+      truth: DataFrame): DataFrame =
+    widths.map { w =>
+      prefixTop3(base, arr, w).join(truth, col("query_id") === col("tq") &&
+          col("neighbor_id") === col("tn"), "left")
+        .groupBy(col("query_id")).agg(
+          count(col("tn")).as("nh"),
+          min(when(col("tn").isNotNull, col("rn"))).as("frank"))
+        .agg(sum(col("nh")).as("n_hits"),
+          dec4S(sum(col("nh")).cast("double") / lit(30.0)).as("recall"),
+          dec4S(sum(dec4(coalesce(lit(1.0) / col("frank"), lit(0.0))))
+            .cast("double") / lit(10.0)).as("mrr"))
+        .select(lit(w).as("width"), col("n_hits"), col("recall"), col("mrr"))
+    }.reduce(_ unionByName _)
 
   /** Per-query recall@3 of an approx (query_id, neighbor_id) pair set
     * against [[bruteTruthTop3]] — ivf_eval's audit rule, shared verbatim
@@ -2215,10 +2197,46 @@ object LlmOps extends QueryModule {
     else adcShortlistRerank(pool, qv, rerank, shortlist)
   }
 
+  /** The search frames every quantized IVF search reads off one
+    * assignment: `cells` = (vec_id, e, vn, cell_label) home cells,
+    * `probes` = (query_id, pcell) each query's 2 nearest cells, `qv` =
+    * (query_id, qe, qn) the query vectors, and `rerank` =
+    * (neighbor_id, ce2, cn2) the raw vectors [[adcShortlistRerank]]
+    * fetches. */
+  private final case class IvfProbes(cells: DataFrame, probes: DataFrame,
+      qv: DataFrame, rerank: DataFrame)
+
+  /** [[IvfProbes]] of the full corpus assigned against `cent`. */
+  private def ivfProbes(s: SparkSession, d: String, cent: DataFrame): IvfProbes = {
+    val assigned = ivfAssigned(s, d, cent)
+    val cells = assigned.filter(col("crn") === 1)
+      .select(col("vec_id"), col("e"), col("vn"), col("cell_label"))
+    val probes = assigned.filter(col("vec_id") < 10 && col("crn") <= 2)
+      .select(col("vec_id").as("query_id"), col("cell_label").as("pcell"))
+    val qv = cells.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("query_id"), col("e").as("qe"), col("vn").as("qn"))
+    IvfProbes(cells, probes, qv,
+      cells.select(col("vec_id").as("neighbor_id"), col("e").as("ce2"),
+        col("vn").as("cn2")))
+  }
+
+  /** Per-query ADC lookup table over `book`: the inner product of each
+    * query SUBVECTOR (`long` = PqEncode.toLong rows, vec_id < 10) with
+    * each codeword — |queries|·8·16 rows, exact decimal sums. Columns
+    * (query_id, sp, cw, ip). */
+  private def queryLut(long: DataFrame, book: DataFrame): DataFrame =
+    long.filter(col("vec_id") < 10)
+      .join(broadcast(book), Seq("sp", "p"))
+      .groupBy(col("vec_id"), col("sp"), col("cell"))
+      .agg(sum(col("xq") * col("c")).as("ip"))
+      .select(col("vec_id").as("query_id"), col("sp"),
+        col("cell").as("cw"), col("ip"))
+
   /** ADC-pool → shortlist → exact-re-rank tail shared by EVERY
-    * approximate-scoring index variant (`ivf_pq`, `ivf_pq_res`,
-    * `ivf_pq_stream` via [[ivfAdcSearchTail]]; `ivf_sq` directly): `pool`
-    * = (query_id, neighbor_id, cn, qn, adc_raw) from ANY approximate
+    * approximate-scoring index variant (`ivf_pq`, `ivf_pq_stream` via
+    * [[ivfAdcSearchTail]]; `ivf_pq_res`, `ivf_sq` and each shortlist
+    * length of `ivf_pq_curve` directly): `pool` ⊇
+    * (query_id, neighbor_id, cn, qn, adc_raw) from ANY approximate
     * scorer — PQ lookup tables or SQ dequantized dots — shortlisted by
     * approximate score, the survivors re-scored EXACTLY (raw-vector
     * cosine against `rerank` = (neighbor_id, ce2, cn2), the cold-storage
@@ -2324,30 +2342,19 @@ object LlmOps extends QueryModule {
 
   private def ivfSqRanked(s: SparkSession, d: String,
       shortlist: Int = 16, extState: Option[DataFrame] = None,
-      trainPop: String = "full"): DataFrame = {
+      pop: Population = Full): DataFrame = {
     val emb = load(s, d, "embeddings")
     val base = sqLongForm(emb).pinned
     // --- TRAIN + ENCODE (the shared core; see [[sqStats]]/[[sqEncodeWith]]).
-    //     `trainPop` fits the [min,max] grid (and the Lloyd cells below)
-    //     on [[embSampleTrain]]'s rate-keyed slice ("sample") or
-    //     [[embCapTrain]]'s fixed-size slice ("cap") and encodes the FULL
-    //     corpus against the fixed metadata — the 100 TB train-on-sample
-    //     paths the gated `ivf_sq_sample_eval`/`ivf_sq_cap_eval` audit. ---
-    val stats = sqStats(
-      if (trainPop == "full") base
-      else sqLongForm(trainSlice(trainPop, emb)))
+    //     `pop` fits the [min,max] grid (and the Lloyd cells below) on its
+    //     training slice and encodes the FULL corpus against the fixed
+    //     metadata — the 100 TB train-on-sample paths the gated
+    //     `ivf_sq_sample_eval`/`ivf_sq_cap_eval` audit. The full grid
+    //     reads the pinned `base` the encode reads. ---
+    val stats = sqStats(if (pop == Full) base else sqLongForm(pop.slice(emb)))
     val enc = sqEncodeWith(base, stats)
-    // --- IVF cells + probes + queries (the shared assignment, verbatim;
-    //     memoized sample-/cap-trained centroids off the full path) ---
-    val assigned =
-      if (trainPop == "full") ivfAssigned(s, d)
-      else ivfAssignedWith(s, d, centroidsFor(s, d, trainPop))
-    val cells = assigned.filter(col("crn") === 1)
-      .select(col("vec_id"), col("e"), col("vn"), col("cell_label"))
-    val probes = assigned.filter(col("vec_id") < 10 && col("crn") <= 2)
-      .select(col("vec_id").as("query_id"), col("cell_label").as("pcell"))
-    val qv = cells.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("e").as("qe"), col("vn").as("qn"))
+    val IvfProbes(cells, probes, qv, rerank) =
+      ivfProbes(s, d, centroidsFor(s, d, pop))
     val qxi = base.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"),
         transform(col("xi"), _.cast("double")).as("qxa"))
@@ -2371,9 +2378,7 @@ object LlmOps extends QueryModule {
           (col("qn") * col("vn")))
       .select(col("query_id"), col("neighbor_id"), col("vn").as("cn"),
         col("qn"), col("adc_raw"))
-    adcShortlistRerank(pool, qv,
-      cells.select(col("vec_id").as("neighbor_id"), col("e").as("ce2"),
-        col("vn").as("cn2")), shortlist)
+    adcShortlistRerank(pool, qv, rerank, shortlist)
   }
 
   /** The (memoized) root of the streamed IVFADC store `ivf_pq_stream`
@@ -2432,13 +2437,12 @@ object LlmOps extends QueryModule {
     * cell-partitioned inverted lists), ckpt/ (the stream checkpoint). */
   private def buildIvfAdcStreamStore(s: SparkSession, d: String,
       out: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
     val emb = load(s, d, "embeddings").select(col("vec_id"), col("embedding"))
-    // Memoized index metadata (centroidsOnce/pqBookOnce): already
+    // Memoized index metadata (centroidsFor/pqBookFor): already
     // materialized parquet, so each of the 4 foreachBatch invocations
     // broadcasts a small scan instead of re-running the training DAGs.
-    val cent = centroidsOnce(s, d)
-    val book = pqBookOnce(s, d)
+    val cent = centroidsFor(s, d, Full)
+    val book = pqBookFor(s, d, Full)
     val arrivals = stageArrivalSlices(emb, out)
     graft.streaming.StreamOps.runIvfAdcIngest(s, arrivals,
       emb.schema, cent, book, s"$out/store", s"$out/ckpt")
@@ -2480,7 +2484,7 @@ object LlmOps extends QueryModule {
       out: String): Unit = {
     val emb = load(s, d, "embeddings").select(col("vec_id"), col("embedding"))
     // Memoized/pinned index metadata (see buildIvfAdcStreamStore).
-    val cent = centroidsOnce(s, d)
+    val cent = centroidsFor(s, d, Full)
     val stats = pin(sqStats(sqLongForm(emb)))
     val arrivals = stageArrivalSlices(emb, out)
     graft.streaming.StreamOps.runIvfSqIngest(s, arrivals,
@@ -2490,15 +2494,14 @@ object LlmOps extends QueryModule {
   private def ivfPqRanked(s: SparkSession, d: String,
       shortlist: Int = 16, raw: Boolean = false,
       extState: Option[DataFrame] = None,
-      trainPop: String = "full"): DataFrame = {
+      pop: Population = Full): DataFrame = {
     val emb = load(s, d, "embeddings")
     // --- PQ training + encoding (the shared operators/PqEncode core —
     //     vec_pq's scheme; see PQ-1 for the decimal-width rationale).
-    //     `trainPop` fits the codebook (and the Lloyd cells below) on
-    //     [[embSampleTrain]]'s rate-keyed slice ("sample") or
-    //     [[embCapTrain]]'s fixed-size slice ("cap") and encodes the FULL
-    //     corpus against the fixed book — the 100 TB train-on-sample
-    //     paths the gated `ivf_pq_sample_eval`/`ivf_pq_cap_eval` audit. ---
+    //     `pop` fits the codebook (and the Lloyd cells below) on its
+    //     training slice and encodes the FULL corpus against the fixed
+    //     book — the 100 TB train-on-sample paths the gated
+    //     `ivf_pq_sample_eval`/`ivf_pq_cap_eval` audit. ---
     // `long` now feeds ONLY the query-side LUT (the vec_id<10 filter
     // pushes to the scan), so it needs no checkpoint barrier; the
     // corpus-sized encode leg enters PqEncode straight off the wide rows
@@ -2507,37 +2510,18 @@ object LlmOps extends QueryModule {
     // lazily by both consumers — a pin bought one parquet re-read and
     // cost a materialization job.
     val long = graft.operators.PqEncode.toLong(emb)
-    val book = pqBookFor(s, d, trainPop)
+    val book = pqBookFor(s, d, pop)
     val code = graft.operators.PqEncode.encodeWide(emb, book)
       .withColumnRenamed("vec_id", "neighbor_id")
-    // --- IVF cells + probes (ivfAssigned verbatim; sample-trained
-    //     centroid table on the sample path, full-corpus assignment) ---
-    val assigned =
-      if (trainPop == "full") ivfAssigned(s, d)
-      else ivfAssignedWith(s, d, centroidsFor(s, d, trainPop))
-    val cells = assigned.filter(col("crn") === 1)
-      .select(col("vec_id"), col("e"), col("vn"), col("cell_label"))
-    val probes = assigned.filter(col("vec_id") < 10 && col("crn") <= 2)
-      .select(col("vec_id").as("query_id"), col("cell_label").as("pcell"))
-    val qv = cells.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("e").as("qe"), col("vn").as("qn"))
-    // --- Per-query LUT: inner product of each query SUBVECTOR with each
-    //     codeword — |queries|·8·16 rows, exact decimal sums ---
-    val qlut = long.filter(col("vec_id") < 10)
-      .join(broadcast(book), Seq("sp", "p"))
-      .groupBy(col("vec_id"), col("sp"), col("cell"))
-      .agg(sum(col("xq") * col("c")).as("ip"))
-      .select(col("vec_id").as("query_id"), col("sp"),
-        col("cell").as("cw"), col("ip"))
+    val IvfProbes(cells, probes, qv, rerank) =
+      ivfProbes(s, d, centroidsFor(s, d, pop))
     // --- Per-vector search state: this pipeline's own encode, or (the
     //     `ivf_pq_stream` parity case) the state STR-IVF streamed into
     //     the cell-partitioned store ---
     val state = extState.getOrElse(
       code.join(cells.select(col("vec_id").as("neighbor_id"), col("vn"),
         col("cell_label")), Seq("neighbor_id")))
-    ivfAdcSearchTail(state, probes, qv, qlut,
-      cells.select(col("vec_id").as("neighbor_id"), col("e").as("ce2"),
-        col("vn").as("cn2")),
+    ivfAdcSearchTail(state, probes, qv, queryLut(long, book), rerank,
       shortlist, raw)
   }
 
@@ -2567,15 +2551,8 @@ object LlmOps extends QueryModule {
     val long = graft.operators.PqEncode.toLong(emb)
     // --- Coarse quantizer: the memoized table shared by the assignment
     //     and the residual μ table (10-row relation) ---
-    val centTab = centroidsOnce(s, d)
-    // --- IVF cells + probes (shared assignment) ---
-    val assigned = ivfAssignedWith(s, d, centTab)
-    val cells = assigned.filter(col("crn") === 1)
-      .select(col("vec_id"), col("e"), col("vn"), col("cell_label"))
-    val probes = assigned.filter(col("vec_id") < 10 && col("crn") <= 2)
-      .select(col("vec_id").as("query_id"), col("cell_label").as("pcell"))
-    val qv = cells.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("e").as("qe"), col("vn").as("qn"))
+    val centTab = centroidsFor(s, d, Full)
+    val IvfProbes(cells, probes, qv, rerank) = ivfProbes(s, d, centTab)
     // --- Cell centroids in LONG decimal form: the ASSIGNMENT centroids
     //     themselves, unnested to (cell, sp, p, dec4 m) — with the Lloyd
     //     flip the residual μ and the coarse quantizer are one table, so
@@ -2616,13 +2593,6 @@ object LlmOps extends QueryModule {
       .groupBy(col("vec_id"), col("cell_label"))
       .agg(sum(col("xq") * col("m")).as("qmu"))
       .select(col("vec_id").as("query_id"), col("cell_label"), col("qmu"))
-    // --- LUT: RAW query × residual codebook ---
-    val qlut = long.filter(col("vec_id") < 10)
-      .join(broadcast(rbook), Seq("sp", "p"))
-      .groupBy(col("vec_id"), col("sp"), col("cell"))
-      .agg(sum(col("xq") * col("c")).as("ip"))
-      .select(col("vec_id").as("query_id"), col("sp"),
-        col("cell").as("cw"), col("ip"))
     // --- ADC scan: q·μ + Σ_sp LUT, over the probed cells ---
     val cand = broadcast(probes).join(
       cells.select(col("vec_id").as("neighbor_id"), col("vn").as("cn"),
@@ -2630,7 +2600,8 @@ object LlmOps extends QueryModule {
       col("pcell") === col("cell_label") && col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"), col("cn"), col("cell_label"))
     val adc = cand.join(rcode, Seq("neighbor_id"))
-      .join(broadcast(qlut), Seq("query_id", "sp", "cw"))
+      // LUT: RAW query × residual codebook
+      .join(broadcast(queryLut(long, rbook)), Seq("query_id", "sp", "cw"))
       .groupBy(col("query_id"), col("neighbor_id"), col("cn"), col("cell_label"))
       .agg(sum(col("ip")).as("lutsum"))
       .join(broadcast(qmu), Seq("query_id", "cell_label"))
@@ -2638,23 +2609,7 @@ object LlmOps extends QueryModule {
       .join(broadcast(qv.select(col("query_id"), col("qn"))), Seq("query_id"))
       .withColumn("adc_raw",
         (col("qmu") + col("lutsum")).cast("double") / (col("qn") * col("cn")))
-    val wAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_raw").desc, col("neighbor_id").asc)
-    val short = pool
-      .withColumn("srn", row_number().over(wAdc))
-      .filter(col("srn") <= shortlist)
-    val wFin = Window.partitionBy(col("query_id"))
-      .orderBy(col("score_raw").desc, col("neighbor_id").asc)
-    short
-      .join(cells.select(col("vec_id").as("neighbor_id"), col("e").as("ce2"),
-        col("vn").as("cn2")), Seq("neighbor_id"))
-      .join(broadcast(qv.select(col("query_id"), col("qe"))), Seq("query_id"))
-      .withColumn("score_raw",
-        dot_product(col("qe"), col("ce2")) / (col("qn") * col("cn2")))
-      .withColumn("rn", row_number().over(wFin))
-      .filter(col("rn") <= 3)
-      .select(col("query_id"), col("rn"), col("neighbor_id"),
-        col("adc_raw"), col("score_raw"))
+    adcShortlistRerank(pool, qv, rerank, shortlist)
   }
 
   val all: Map[String, Q] = Map(
@@ -2750,20 +2705,11 @@ object LlmOps extends QueryModule {
 
     // ---- SIM-1: brute-force cosine top-k (query set broadcast over corpus) ----
     "sim1" -> ((s, d) => {
-      val emb = load(s, d, "embeddings")
-      val dbl = transform(col("embedding"), x => x.cast("double"))
-      val base = emb.select(col("vec_id"), dbl.as("e"),
-        sqrt(dot_product(dbl, dbl)).as("nrm"))
+      val base = normedVecs(s, d)
       val q = base.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("e").as("qe"), col("nrm").as("qn"))
       val c = base.select(col("vec_id").as("neighbor_id"), col("e").as("ce"), col("nrm").as("cn"))
-      val dot = dot_product(col("qe"), col("ce"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("score_raw").desc, col("neighbor_id").asc)
-      ordered(broadcast(q).join(c, col("query_id") =!= col("neighbor_id"))
-        .withColumn("score_raw", dot / (col("qn") * col("cn")))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 5)
+      ordered(cosineTopK(q, c, 5)
         .select(col("query_id"), col("rn"), col("neighbor_id"),
           dec4S(col("score_raw")).as("score")))
     }),
@@ -2779,14 +2725,11 @@ object LlmOps extends QueryModule {
     //      per-table equi-joins + distinct. Exact cosine + per-query
     //      top-k over the candidate set. ----
     "sim1_lsh_multi" -> ((s, d) => {
-      val emb = load(s, d, "embeddings")
-      val dbl = transform(col("embedding"), x => x.cast("double"))
       def signBucket(d1: Int, d2: Int, d3: Int) =
         (when(element_at(col("e"), d1) > 0.0, 4).otherwise(0) +
           when(element_at(col("e"), d2) > 0.0, 2).otherwise(0) +
           when(element_at(col("e"), d3) > 0.0, 1).otherwise(0)).cast("int")
-      val base = emb.select(col("vec_id"), dbl.as("e"),
-        sqrt(dot_product(dbl, dbl)).as("nrm"))
+      val base = normedVecs(s, d)
         .withColumn("b1", signBucket(1, 2, 3))
         .withColumn("b2", signBucket(4, 5, 6))
       val q = base.filter(col("vec_id") < 10)
@@ -2794,16 +2737,8 @@ object LlmOps extends QueryModule {
           col("nrm").as("qn"), col("b1").as("qb1"), col("b2").as("qb2"))
       val c = base.select(col("vec_id").as("neighbor_id"), col("e").as("ce"),
         col("nrm").as("cn"), col("b1").as("cb1"), col("b2").as("cb2"))
-      val cand = broadcast(q).join(c,
-        (col("qb1") === col("cb1") || col("qb2") === col("cb2")) &&
-          col("query_id") =!= col("neighbor_id"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("score_raw").desc, col("neighbor_id").asc)
-      ordered(cand
-        .withColumn("score_raw",
-          dot_product(col("qe"), col("ce")) / (col("qn") * col("cn")))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
+      ordered(cosineTopK(q, c, 3,
+          col("qb1") === col("cb1") || col("qb2") === col("cb2"))
         .select(col("query_id"), col("rn"), col("neighbor_id"),
           dec4S(col("score_raw")).as("score")))
     }),
@@ -2921,10 +2856,10 @@ object LlmOps extends QueryModule {
     //      stated band of full-train recall. ----
     "ivf_pq_sample_eval" -> ((s, d) =>
       ordered(recallPerQuery(bruteTruthTop3(s, d),
-        ivfPqRanked(s, d, trainPop = "sample")))),
+        ivfPqRanked(s, d, pop = Sample)))),
     "ivf_sq_sample_eval" -> ((s, d) =>
       ordered(recallPerQuery(bruteTruthTop3(s, d),
-        ivfSqRanked(s, d, trainPop = "sample")))),
+        ivfSqRanked(s, d, pop = Sample)))),
 
     // ---- SIM-CAP: FIXED-SIZE-capped quantizer recall audits
     //      (`ivf_pq_cap_eval`, `ivf_sq_cap_eval`) — SIM-SAMPLE's
@@ -2942,10 +2877,10 @@ object LlmOps extends QueryModule {
     //      grows (the sample row's −61% becomes ~constant). ----
     "ivf_pq_cap_eval" -> ((s, d) =>
       ordered(recallPerQuery(bruteTruthTop3(s, d),
-        ivfPqRanked(s, d, trainPop = "cap")))),
+        ivfPqRanked(s, d, pop = Cap)))),
     "ivf_sq_cap_eval" -> ((s, d) =>
       ordered(recallPerQuery(bruteTruthTop3(s, d),
-        ivfSqRanked(s, d, trainPop = "cap")))),
+        ivfSqRanked(s, d, pop = Cap)))),
 
     // ---- STR-IVF-SQ-SEARCH: search the STREAMED SQ store
     //      (`ivf_sq_stream`) — ivf_pq_stream's parity gate applied to
@@ -3005,13 +2940,10 @@ object LlmOps extends QueryModule {
     //      sample-able like ddp_eval's); the approx leg is the index's
     //      own bucket-pruned cost; metrics are |queries|-row arithmetic. ----
     "ann_ndcg" -> ((s, d) => {
-      val emb = load(s, d, "embeddings")
-      val dbl = transform(col("embedding"), x => x.cast("double"))
       def bucket = (when(element_at(col("e"), 1) > 0.0, 4).otherwise(0) +
         when(element_at(col("e"), 2) > 0.0, 2).otherwise(0) +
         when(element_at(col("e"), 3) > 0.0, 1).otherwise(0)).cast("int")
-      val base = emb.select(col("vec_id"), dbl.as("e"),
-          sqrt(dot_product(dbl, dbl)).as("nrm"))
+      val base = normedVecs(s, d)
         .withColumn("bucket", bucket)
         .pinned // read by the query spine, the truth leg, and the approx leg
       val q = base.filter(col("vec_id") < 10)
@@ -3019,17 +2951,9 @@ object LlmOps extends QueryModule {
           col("nrm").as("qn"), col("bucket").as("qb"))
       val c = base.select(col("vec_id").as("neighbor_id"), col("e").as("ce"),
         col("nrm").as("cn"), col("bucket").as("cb"))
-      val dot = dot_product(col("qe"), col("ce"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("score_raw").desc, col("neighbor_id").asc)
-      val truth = broadcast(q).join(c, col("query_id") =!= col("neighbor_id"))
-        .withColumn("score_raw", dot / (col("qn") * col("cn")))
-        .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
+      val truth = cosineTopK(q, c, 3)
         .select(col("query_id").as("tq"), col("neighbor_id").as("tn"))
-      val approx = broadcast(q).join(c,
-          col("qb") === col("cb") && col("query_id") =!= col("neighbor_id"))
-        .withColumn("score_raw", dot / (col("qn") * col("cn")))
-        .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
+      val approx = cosineTopK(q, c, 3, col("qb") === col("cb"))
         .select(col("query_id"), col("rn"), col("neighbor_id"))
       val disc = when(col("rn") === 1, lit(1.0))
         .when(col("rn") === 2, lit(0.6309297535714574)).otherwise(lit(0.5))
@@ -3071,36 +2995,10 @@ object LlmOps extends QueryModule {
       val dbl = transform(col("embedding"), x => x.cast("double"))
       val base = emb.select(col("vec_id"), dbl.as("e"))
         .pinned // read by the truth leg and all four truncation legs
-      val wTop = Window.partitionBy(col("query_id"))
-        .orderBy(col("cs").desc, col("neighbor_id").asc)
-      def top3(w: Int) = {
-        val q = base.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("query_id"), slice(col("e"), 1, w).as("qe"))
-        val c = base.select(col("vec_id").as("neighbor_id"),
-          slice(col("e"), 1, w).as("ce"))
-        broadcast(q).join(c, col("query_id") =!= col("neighbor_id"))
-          .withColumn("cs", dot_product(col("qe"), col("ce")) /
-            (sqrt(dot_product(col("qe"), col("qe"))) *
-              sqrt(dot_product(col("ce"), col("ce")))))
-          .withColumn("rn", row_number().over(wTop)).filter(col("rn") <= 3)
-          .select(col("query_id"), col("rn"), col("neighbor_id"))
-      }
-      val truth = top3(64)
+      val truth = prefixTop3(base, "e", 64)
         .select(col("query_id").as("tq"), col("neighbor_id").as("tn"))
         .pinned // probed by every width
-      ordered(Seq(8, 16, 32, 64).map { w =>
-        val a = top3(w)
-        a.join(truth, col("query_id") === col("tq") &&
-            col("neighbor_id") === col("tn"), "left")
-          .groupBy(col("query_id")).agg(
-            count(col("tn")).as("nh"),
-            min(when(col("tn").isNotNull, col("rn"))).as("frank"))
-          .agg(sum(col("nh")).as("n_hits"),
-            dec4S(sum(col("nh")).cast("double") / lit(30.0)).as("recall"),
-            dec4S(sum(dec4(coalesce(lit(1.0) / col("frank"), lit(0.0))))
-              .cast("double") / lit(10.0)).as("mrr"))
-          .select(lit(w).as("width"), col("n_hits"), col("recall"), col("mrr"))
-      }.reduce(_ unionByName _))
+      ordered(widthCurve(base, "e", Seq(8, 16, 32, 64), truth))
     }),
 
     // ---- SIM-JL: random-projection recall curve (`vec_jl`) — the
@@ -3148,38 +3046,12 @@ object LlmOps extends QueryModule {
         .select(col("vec_id"), transform(col("pp"),
           p => p.getField("yj").cast("double")).as("p"))
         .pinned // read by all three width legs
-      val wTop = Window.partitionBy(col("query_id"))
-        .orderBy(col("cs").desc, col("neighbor_id").asc)
-      def top3(w: Int) = {
-        val q = proj.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("query_id"), slice(col("p"), 1, w).as("qe"))
-        val c = proj.select(col("vec_id").as("neighbor_id"),
-          slice(col("p"), 1, w).as("ce"))
-        broadcast(q).join(c, col("query_id") =!= col("neighbor_id"))
-          .withColumn("cs", dot_product(col("qe"), col("ce")) /
-            (sqrt(dot_product(col("qe"), col("qe"))) *
-              sqrt(dot_product(col("ce"), col("ce")))))
-          .withColumn("rn", row_number().over(wTop)).filter(col("rn") <= 3)
-          .select(col("query_id"), col("rn"), col("neighbor_id"))
-      }
       // Truth = the RAW 64-d cosine top-3 (the shared audit rule): JL is
       // judged against the original space, not against itself.
       val truth = bruteTruthTop3(s, d)
         .select(col("query_id").as("tq"), col("neighbor_id").as("tn"))
         .pinned // probed by every width
-      ordered(Seq(8, 16, 32).map { w =>
-        val a = top3(w)
-        a.join(truth, col("query_id") === col("tq") &&
-            col("neighbor_id") === col("tn"), "left")
-          .groupBy(col("query_id")).agg(
-            count(col("tn")).as("nh"),
-            min(when(col("tn").isNotNull, col("rn"))).as("frank"))
-          .agg(sum(col("nh")).as("n_hits"),
-            dec4S(sum(col("nh")).cast("double") / lit(30.0)).as("recall"),
-            dec4S(sum(dec4(coalesce(lit(1.0) / col("frank"), lit(0.0))))
-              .cast("double") / lit(10.0)).as("mrr"))
-          .select(lit(w).as("width"), col("n_hits"), col("recall"), col("mrr"))
-      }.reduce(_ unionByName _))
+      ordered(widthCurve(proj, "p", Seq(8, 16, 32), truth))
     }),
 
     // ---- KM-2: two Lloyd rounds + the monotone certificate
@@ -3258,26 +3130,13 @@ object LlmOps extends QueryModule {
       // Re-rank inputs (query vectors + corpus vectors with norms) — the
       // truth leg is the shared bruteTruthTop3; only the per-shortlist
       // exact re-rank needs the raw vectors here.
-      val emb = load(s, d, "embeddings")
-      val dbl = transform(col("embedding"), x => x.cast("double"))
-      val base = emb.select(col("vec_id"), dbl.as("e"),
-        sqrt(dot_product(dbl, dbl)).as("nrm"))
+      val base = normedVecs(s, d)
       val q = base.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("e").as("qe"), col("nrm").as("qn"))
-      val cc = base.select(col("vec_id").as("neighbor_id"), col("e").as("ce"),
+      val rerank = base.select(col("vec_id").as("neighbor_id"), col("e").as("ce2"),
         col("nrm").as("cn2"))
-      val wAdc = Window.partitionBy(col("query_id"))
-        .orderBy(col("adc_raw").desc, col("neighbor_id").asc)
       val rows = Seq(4, 8, 16).map { ln =>
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("score_raw").desc, col("neighbor_id").asc)
-        val reranked = pool
-          .withColumn("srn", row_number().over(wAdc)).filter(col("srn") <= ln)
-          .join(cc, Seq("neighbor_id"))
-          .join(broadcast(q.select(col("query_id"), col("qe"))), Seq("query_id"))
-          .withColumn("score_raw",
-            dot_product(col("qe"), col("ce")) / (col("qn") * col("cn2")))
-          .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
+        val reranked = adcShortlistRerank(pool, q, rerank, ln)
           .select(col("query_id").as("iq"), col("neighbor_id").as("in_"))
         truth.join(reranked,
             col("query_id") === col("iq") && col("neighbor_id") === col("in_"),
@@ -3371,27 +3230,17 @@ object LlmOps extends QueryModule {
     // ---- SIM-1b: LSH-bucketed ANN (sign-bit coarse quantization) —
     //      the 100 TB path: candidates only within the same bucket ----
     "sim1_lsh" -> ((s, d) => {
-      val emb = load(s, d, "embeddings")
-      val dbl = transform(col("embedding"), x => x.cast("double"))
       def bucket = (when(element_at(col("e"), 1) > 0.0, 4).otherwise(0) +
         when(element_at(col("e"), 2) > 0.0, 2).otherwise(0) +
         when(element_at(col("e"), 3) > 0.0, 1).otherwise(0)).cast("int")
-      val base = emb.select(col("vec_id"), dbl.as("e"),
-        sqrt(dot_product(dbl, dbl)).as("nrm"))
+      val base = normedVecs(s, d)
         .withColumn("bucket", bucket)
       val q = base.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("e").as("qe"),
           col("nrm").as("qn"), col("bucket").as("qb"))
       val c = base.select(col("vec_id").as("neighbor_id"), col("e").as("ce"),
         col("nrm").as("cn"), col("bucket").as("cb"))
-      val dot = dot_product(col("qe"), col("ce"))
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("score_raw").desc, col("neighbor_id").asc)
-      ordered(broadcast(q).join(c,
-        col("qb") === col("cb") && col("query_id") =!= col("neighbor_id"))
-        .withColumn("score_raw", dot / (col("qn") * col("cn")))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 3)
+      ordered(cosineTopK(q, c, 3, col("qb") === col("cb"))
         .select(col("query_id"), col("rn"), col("neighbor_id"),
           dec4S(col("score_raw")).as("score")))
     }),
@@ -3935,14 +3784,11 @@ object LlmOps extends QueryModule {
     //      (same-bucket AND cos ≥ τ) stay oracle-exact either way; the
     //      multi-table recall ladder is ddp_embed_multi below. ----
     "ddp_embed" -> ((s, d) => {
-      val emb = load(s, d, "embeddings")
-      val dbl = transform(col("embedding"), x => x.cast("double"))
       def bucket = (when(element_at(col("e"), 1) > 0.0, 8).otherwise(0) +
         when(element_at(col("e"), 2) > 0.0, 4).otherwise(0) +
         when(element_at(col("e"), 3) > 0.0, 2).otherwise(0) +
         when(element_at(col("e"), 4) > 0.0, 1).otherwise(0)).cast("int")
-      val base = emb.select(col("vec_id"), dbl.as("e"),
-        sqrt(dot_product(dbl, dbl)).as("nrm"))
+      val base = normedVecs(s, d)
         .withColumn("bucket", bucket)
       val a = base.select(col("vec_id").as("v1"), col("e").as("e1"),
         col("nrm").as("n1"), col("bucket").as("b1"))
@@ -3968,15 +3814,12 @@ object LlmOps extends QueryModule {
     //      localCheckpoint'ed once and reused by all L probes + the final
     //      cosine rejoin. ----
     "ddp_embed_multi" -> ((s, d) => {
-      val emb = load(s, d, "embeddings")
-      val dbl = transform(col("embedding"), x => x.cast("double"))
       def table(i: Int) =
         (when(element_at(col("e"), 4 * i + 1) > 0.0, 8).otherwise(0) +
           when(element_at(col("e"), 4 * i + 2) > 0.0, 4).otherwise(0) +
           when(element_at(col("e"), 4 * i + 3) > 0.0, 2).otherwise(0) +
           when(element_at(col("e"), 4 * i + 4) > 0.0, 1).otherwise(0)).cast("int")
-      val base = emb.select(col("vec_id"), dbl.as("e"),
-          sqrt(dot_product(dbl, dbl)).as("nrm"))
+      val base = normedVecs(s, d)
         .withColumn("b0", table(0)).withColumn("b1", table(1))
         .withColumn("b2", table(2)).withColumn("b3", table(3))
         .pinned
@@ -4891,10 +4734,7 @@ object LlmOps extends QueryModule {
       val top10 = recall.withColumn("bm25_rank", row_number().over(wb))
         .filter(col("bm25_rank") <= 10)
         .select(col("q_id"), col("doc_id"), col("bm25_rank"))
-      val emb = load(s, d, "embeddings")
-      val dbl = transform(col("embedding"), x => x.cast("double"))
-      val base = emb.select(col("vec_id"), dbl.as("e"),
-        sqrt(dot_product(dbl, dbl)).as("nrm"))
+      val base = normedVecs(s, d)
       // Only query-id embeddings can match top10's q_id — filter before
       // broadcasting (the sim1 pattern) so the query-side broadcast ships
       // ~1% of the table, not all of it.
@@ -5086,7 +4926,7 @@ object LlmOps extends QueryModule {
     //      stand-in for "yesterday's model vs today's"): a re-trained or
     //      mis-scaled encoder shifts the norm profile long before recall
     //      metrics notice, and KS reads it distribution-free. DRIFT-2's
-    //      exact distributed machinery verbatim: collapse to one row per
+    //      exact distributed tail ([[Analytics.ksDrift]]): collapse to one row per
     //      distinct norm (bit-equal doubles — the left-fold + sqrt is the
     //      same IEEE program in both engines), GlobalRank's two-pass
     //      exclusive prefix recovers both ECDFs with no single-task sort,
@@ -5101,26 +4941,7 @@ object LlmOps extends QueryModule {
           when(col("vec_id") % 2 === 0, 1L).otherwise(0L).as("ia"))
         .groupBy(col("value"))
         .agg(sum(col("ia")).as("ca"), sum(lit(1L) - col("ia")).as("cb"))
-      val withP = graft.operators.GlobalRank.attach(perV,
-        Seq(col("value").asc), None, Seq("ca" -> "pa", "cb" -> "pb"))
-      val tot = withP.agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"))
-      def nz(c: Column): Column = when(c === 0L, lit(null)).otherwise(c)
-      val diff = abs(
-        (col("pa") + col("ca")).cast("double") / nz(col("na")).cast("double") -
-        (col("pb") + col("cb")).cast("double") / nz(col("nb")).cast("double"))
-      val scored = withP.crossJoin(broadcast(tot)).withColumn("diff", diff)
-      val dmax = scored.agg(max(col("diff")).as("dmax"))
-      val thr = lit(1.3581) * sqrt(
-        (col("na") + col("nb")).cast("double") /
-          (col("na").cast("double") * col("nb").cast("double")))
-      ordered(scored.crossJoin(broadcast(dmax))
-        .filter(col("diff") === col("dmax"))
-        .groupBy(col("na"), col("nb"), col("dmax"))
-        .agg(min(col("value")).as("atv"))
-        .select(col("na").as("n_a"), col("nb").as("n_b"),
-          dec4S(col("dmax")).as("ks_d"),
-          dec4S(col("atv")).as("at_norm"),
-          (dec4(col("dmax")) > dec4(thr)).as("reject")))
+      ordered(Analytics.ksDrift(perV, "at_norm"))
     }),
 
     // ---- VQ-1: int8 vector quantization + reconstruction error — the
@@ -8636,12 +8457,12 @@ object LlmOps extends QueryModule {
   override val prebuilds: Seq[(String, (SparkSession, String) => Unit)] = Seq(
     "gram_buckets" -> ((s, d) => { gramBucketsOnce(s, d); () }),
     "lr_model" -> ((s, d) => { lrTrain(s, d); () }),
-    "ivf_centroids" -> ((s, d) => { centroidsOnce(s, d); () }),
-    "pq_book_xq" -> ((s, d) => { pqBookOnce(s, d); () }),
-    "ivf_centroids_sample" -> ((s, d) => { centroidsSampleOnce(s, d); () }),
-    "pq_book_xq_sample" -> ((s, d) => { pqBookSampleOnce(s, d); () }),
-    "ivf_centroids_cap" -> ((s, d) => { centroidsCapOnce(s, d); () }),
-    "pq_book_xq_cap" -> ((s, d) => { pqBookCapOnce(s, d); () }),
+    "ivf_centroids" -> ((s, d) => { centroidsFor(s, d, Full); () }),
+    "pq_book_xq" -> ((s, d) => { pqBookFor(s, d, Full); () }),
+    "ivf_centroids_sample" -> ((s, d) => { centroidsFor(s, d, Sample); () }),
+    "pq_book_xq_sample" -> ((s, d) => { pqBookFor(s, d, Sample); () }),
+    "ivf_centroids_cap" -> ((s, d) => { centroidsFor(s, d, Cap); () }),
+    "pq_book_xq_cap" -> ((s, d) => { pqBookFor(s, d, Cap); () }),
     "pq_book_res" -> ((s, d) => { resBookOnce(s, d); () }),
     "ivfadc_stream" -> ((s, d) => { ivfPqStreamStoreRoot(s, d); () }),
     "ivfsq_stream" -> ((s, d) => { ivfSqStreamStoreRoot(s, d); () }))

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, DataFrameReader, DataFrameWriter, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import graft.streaming.StatusListener
 
@@ -36,45 +36,35 @@ object Ingest {
   /** Abort the job on the first malformed row. */
   case object FailFast extends ParsePolicy("FAILFAST")
 
+  /** A reader under `policy`: `schema`, the `mode` option and, when
+    * PERMISSIVE, the corrupt-record column (added to the schema unless
+    * already there) named by `columnNameOfCorruptRecord`. */
+  private def policyReader(spark: SparkSession, schema: StructType,
+                           policy: ParsePolicy): DataFrameReader = {
+    val r = spark.read.option("mode", policy.mode)
+    policy match {
+      case Permissive(c) =>
+        r.schema(if (schema.fieldNames.contains(c)) schema
+                 else schema.add(c, StringType, nullable = true))
+          .option("columnNameOfCorruptRecord", c)
+      case _ => r.schema(schema)
+    }
+  }
+
   /** Schema'd CSV scan with explicit bad-record policy. RFC-4180 quoting
     * (`""` escapes a quote inside a quoted field) so partner files written
     * by standard tooling parse identically everywhere. */
   def readCsv(spark: SparkSession, path: String, schema: StructType,
-              policy: ParsePolicy = Permissive(), header: Boolean = true): DataFrame = {
-    val withCorrupt = policy match {
-      case Permissive(c) if !schema.fieldNames.contains(c) =>
-        schema.add(c, org.apache.spark.sql.types.StringType, nullable = true)
-      case _ => schema
-    }
-    val r = spark.read
-      .schema(withCorrupt)
+              policy: ParsePolicy = Permissive(), header: Boolean = true): DataFrame =
+    policyReader(spark, schema, policy)
       .option("header", header)
-      .option("mode", policy.mode)
       .option("escape", "\"")
-    val r2 = policy match {
-      case Permissive(c) => r.option("columnNameOfCorruptRecord", c)
-      case _ => r
-    }
-    r2.csv(path)
-  }
+      .csv(path)
 
   /** Schema'd newline-delimited JSON scan with the same policy surface. */
   def readJson(spark: SparkSession, path: String, schema: StructType,
-               policy: ParsePolicy = Permissive()): DataFrame = {
-    val withCorrupt = policy match {
-      case Permissive(c) if !schema.fieldNames.contains(c) =>
-        schema.add(c, org.apache.spark.sql.types.StringType, nullable = true)
-      case _ => schema
-    }
-    val r = spark.read
-      .schema(withCorrupt)
-      .option("mode", policy.mode)
-    val r2 = policy match {
-      case Permissive(c) => r.option("columnNameOfCorruptRecord", c)
-      case _ => r
-    }
-    r2.json(path)
-  }
+               policy: ParsePolicy = Permissive()): DataFrame =
+    policyReader(spark, schema, policy).json(path)
 
   /** Partitioned parquet "warehouse" sink — the offline stand-in for the
     * [REF] warehouse load; partition columns give downstream scans

@@ -239,6 +239,29 @@ class EdgeCorpusSpec extends AnyFunSuite {
     assert(oneHalf.isEmpty, "undefined KS must degrade to empty")
   }
 
+  test("vec_norm_drift: equal norms in both parity halves read D=0/no-reject; one-half corpus is empty, not a throw") {
+    import spark.implicits._
+    def embeddings(rows: Seq[(Long, Seq[Float])]): String = {
+      val d = Files.createTempDirectory("ks_norm_edge").toString
+      rows.toDF("vec_id", "embedding")
+        .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
+      d
+    }
+    // Every vector has norm exactly 5, two in each vec_id parity half: one
+    // distinct value, both ECDFs step 0→1 together — D is exactly 0.
+    val const = SparkEntry.queries("vec_norm_drift")(spark, embeddings(Seq(
+      (1L, Seq(3.0f, 4.0f)), (2L, Seq(4.0f, 3.0f)),
+      (3L, Seq(0.0f, 5.0f)), (4L, Seq(5.0f, 0.0f))))).head
+    assert(const.getLong(0) == 2L && const.getLong(1) == 2L, s"got $const")
+    assert(const.getString(2) == "0.0000" && !const.getBoolean(4), s"got $const")
+    // Only even vec_ids: the odd half is empty and its ECDF undefined — the
+    // NULLIF guard must yield the empty result, not an ANSI
+    // Infinity→decimal throw.
+    val oneHalf = SparkEntry.queries("vec_norm_drift")(spark, embeddings(Seq(
+      (2L, Seq(1.0f, 0.0f)), (4L, Seq(0.0f, 2.0f)))))
+    assert(oneHalf.isEmpty, "undefined KS must degrade to empty")
+  }
+
   test("lm_buckets: a single-doc language lands in head; sub-bigram docs are silent") {
     val out = SparkEntry.queries("lm_buckets")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(4)))
