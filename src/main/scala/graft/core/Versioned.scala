@@ -5,8 +5,8 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{FileSystemException, Files, Paths, StandardCopyOption => Copy,
   StandardOpenOption => Open}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, FileStatus, FileSystem, Options,
-  Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, FileStatus, FileSystem, FileUtil,
+  Options, Path}
 
 /** One versioned table on the Hadoop `FileSystem`, the commit layer of
   * §2.1's load-then-signal contract: `<root>/v=N/` version directories and
@@ -27,6 +27,12 @@ import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, FileStatus, FileSy
   * `FileContext.rename(Rename.NONE)`, atomic on HDFS. An object store
   * would replace exactly this pair and the pointer's overwrite rename with
   * conditional PUTs (If-None-Match / If-Match).
+  *
+  * A third scheme-branched step, [[carry]], moves files a new version
+  * keeps unchanged from an old one into its staging directory: a hard link
+  * on `file:` (checksum sidecar included), a copy elsewhere. The old
+  * version's files keep their path, length and mtime, so its listing does
+  * not change.
   *
   * Small files bypass a checksummed file system (the local FS): its `.crc`
   * sidecar would not follow a `java.nio` move, and it cannot append. */
@@ -109,6 +115,17 @@ final class Versioned private (val root: Path, val fs: FileSystem) {
     try out.write(content.getBytes(UTF_8)) finally out.close()
   }
 
+  /** Carry each of `files` (below `from`) to the same relative path below
+    * `to` without rewriting it ([[carryFile]]). */
+  def carry(files: Seq[Path], from: Path, to: Path): Unit = {
+    val base = fs.makeQualified(from).toUri.getPath.stripSuffix("/") + "/"
+    files.foreach { f =>
+      val path = fs.makeQualified(f).toUri.getPath
+      require(path.startsWith(base), s"carry: $f is not below $from")
+      carryFile(fs, f, new Path(to, path.stripPrefix(base)))
+    }
+  }
+
   /** Append to `p`, creating it when absent. */
   def append(p: Path, content: String): Unit = if (!createIfAbsent(p, content)) {
     val out = fs.append(p)
@@ -179,5 +196,20 @@ object Versioned {
       case None =>
         try { rename(fs, src, dst, Options.Rename.NONE); true }
         catch { case _: IOException if fs.exists(dst) => false }
+    }
+
+  /** Put `src`'s bytes at the new path `dst`, leaving `src` as it is: on
+    * `file:` a hard link (and one for the `.crc` sidecar when there is
+    * one), so no byte is read or written; elsewhere a `FileUtil.copy`. */
+  private def carryFile(fs: FileSystem, src: Path, dst: Path): Unit =
+    (localPath(fs, src), localPath(fs, dst)) match {
+      case (Some(s), Some(d)) =>
+        Files.createDirectories(d.getParent)
+        Files.createLink(d, s)
+        val crc = s.resolveSibling(s".${s.getFileName}.crc")
+        if (Files.exists(crc)) Files.createLink(d.resolveSibling(s".${d.getFileName}.crc"), crc)
+      case _ =>
+        if (!FileUtil.copy(fs, src, fs, dst, false, fs.getConf))
+          throw new IOException(s"carry: cannot copy $src to $dst")
     }
 }

@@ -485,12 +485,26 @@ object StreamOps {
     * Retention: the immediately-previous version is kept (grace for
     * readers that resolved it just before the swap — and a free O(1)
     * rollback target); versions older than it are dropped on the next
-    * successful pass. At 100 TB this is the standard periodic
-    * maintenance job: shuffle ∝ store size by key, ONE window pass that
-    * both elects the survivor and carries the convergence check, no data²
-    * anywhere. */
+    * successful pass.
+    *
+    * Partial rewrite: a pass rewrites only the `_src` partitions it must
+    * (`partSpec` must start with `_src`). One aggregate reads only the key
+    * columns of v and finds the keys with more than one row, across
+    * partitions or inside one; when there are any, a null-safe semi-join
+    * names the partition directories holding their rows, the touched set.
+    * The election window (with the convergence check) runs over the
+    * touched partitions only; they hold every row of every repeated key,
+    * so the result equals a pass over all of v. Every other partition goes
+    * into the new version file by file ([[graft.core.Versioned.carry]]: a
+    * hard link on `file:`), exactly as L0 listed it, and v's listing does
+    * not change. At 100 TB a pass costs a scan of the key columns plus a
+    * rewrite of the partitions that received residue since the last pass,
+    * not a shuffle of the whole store. A pass still publishes a new
+    * version when nothing is touched. */
   def compactStore(spark: SparkSession, storeDir: String,
       keyCols: Seq[String], partSpec: Seq[String]): Unit = {
+    require(partSpec.headOption.contains("_src"),
+      s"compactStore: partSpec must start with _src, got ${partSpec.mkString(", ")}")
     val t = storeTable(spark, storeDir)
     val sentinel = compactionSentinel(t.root)
     // SENTINEL FIRST (review r13): a present sentinel means a pass is
@@ -556,32 +570,58 @@ object StreamOps {
         .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toSet
     val before = listing()
     val curDf = spark.read.parquet(cur.toString)
-    // Convergence check, riding the election window: every key must carry
-    // ONE distinct non-_src row, or the min-_src election would pick an
-    // arbitrary (possibly stale) survivor among genuinely different
-    // states. The observation sits below the _rn filter, so it counts
-    // every row of the store.
-    val state = struct(curDf.columns.filter(_ != "_src").map(col).toIndexedSeq: _*)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCols.map(col): _*).orderBy(col("_src").asc)
-    val obs = new org.apache.spark.sql.Observation()
-    val kept = curDf
-      .withColumn("_rn", row_number().over(w))
-      .withColumn("_diverged", !(state <=> first(state).over(w)))
-      .observe(obs, count_if(col("_diverged")).as("diverged"))
-      .filter(col("_rn") === 1).drop("_rn", "_diverged")
+    // The touched partitions: every _src directory holding a file with a
+    // row of a key that has a second row anywhere in v, across partitions
+    // or inside one. The aggregate reads only the key columns; the files
+    // come from a null-safe semi-join on the (usually absent) repeated keys.
+    val dupKeys = curDf.groupBy(keyCols.map(col): _*).count()
+      .filter(col("count") > 1).select(keyCols.map(k => col(k).as(s"_dup_$k")): _*)
+    // A file's partition: the first directory below v on its path.
+    val base = fs.makeQualified(cur).toUri.getPath + "/"
+    def partition(p: Path): String = p.toUri.getPath.stripPrefix(base).takeWhile(_ != '/')
+    val touched: Set[String] =
+      if (dupKeys.isEmpty) Set.empty
+      else curDf.select((keyCols.map(col) :+ col("_metadata.file_path").as("_file")): _*)
+        .join(dupKeys, keyCols.map(k => col(k) <=> col(s"_dup_$k")).reduce(_ && _), "left_semi")
+        .select(col("_file")).distinct().collect()
+        .map(r => partition(new Path(new java.net.URI(r.getString(0))))).toSet
     val staging = t.fresh(".compact-staging-")
-    kept.write.partitionBy(partSpec: _*).mode("overwrite")
-      .parquet(staging.toString)
-    val diverged = obs.get("diverged").asInstanceOf[Long]
-    if (diverged > 0) {
-      t.fs.delete(staging, true)
-      throw new java.io.IOException(
-        s"compactStore: $diverged row(s) carry state that differs from " +
-          "their key's row in another _src partition (duplicate-named " +
-          "delivery spanning a republish?) — re-ingest from a fresh " +
-          "checkpoint before compacting")
+    if (touched.isEmpty) t.fs.mkdirs(staging)
+    else {
+      // Convergence check, riding the election window: every key must
+      // carry ONE distinct non-_src row, or the min-_src election would
+      // pick an arbitrary (possibly stale) survivor among genuinely
+      // different states. The observation sits below the _rn filter, so
+      // it counts every row of the touched partitions, which hold every
+      // row of every repeated key.
+      val touchedDf = spark.read.schema(curDf.schema).option("basePath", cur.toString)
+        .parquet(touched.toSeq.map(new Path(cur, _).toString): _*)
+      val state = struct(touchedDf.columns.filter(_ != "_src").map(col).toIndexedSeq: _*)
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(keyCols.map(col): _*).orderBy(col("_src").asc)
+      val obs = new org.apache.spark.sql.Observation()
+      touchedDf
+        .withColumn("_rn", row_number().over(w))
+        .withColumn("_diverged", !(state <=> first(state).over(w)))
+        .observe(obs, count_if(col("_diverged")).as("diverged"))
+        .filter(col("_rn") === 1).drop("_rn", "_diverged")
+        .write.partitionBy(partSpec: _*).mode("overwrite").parquet(staging.toString)
+      val diverged = obs.get("diverged").asInstanceOf[Long]
+      if (diverged > 0) {
+        t.fs.delete(staging, true)
+        throw new java.io.IOException(
+          s"compactStore: $diverged row(s) carry state that differs from " +
+            "their key's row in another _src partition (duplicate-named " +
+            "delivery spanning a republish?) — re-ingest from a fresh " +
+            "checkpoint before compacting")
+      }
     }
+    // Every other _src partition goes into the new version file by file,
+    // exactly as L0 listed it, unread and unrewritten.
+    t.carry(before.toSeq.map(f => new Path(f._1)).filter { p =>
+      val part = partition(p)
+      part.startsWith("_src=") && !touched(part)
+    }, cur, staging)
     // L1, pre-swap re-check: anything landed since the snapshot → abort
     // with the pointer untouched (the racing append is in v, still
     // served; the next pass will include it).

@@ -1471,6 +1471,117 @@ class StreamingSpec extends AnyFunSuite {
       (2L, 3.0, Some("w"), "srcA"), (2L, 3.0, Some("w"), "srcB"))))
   }
 
+  // ---- The partial rewrite: only the _src partitions holding a repeated
+  // key are rewritten; every other partition is carried into v+1 as is.
+
+  /** A versioned `_src`-keyed store at `root`: `df` as `v=1`, and the
+    * pointer naming it. */
+  private def versionedStore(root: String, df: DataFrame): Unit = {
+    df.write.partitionBy("_src").parquet(s"$root/v=1")
+    graft.core.Versioned(new org.apache.hadoop.fs.Path(root),
+      spark.sparkContext.hadoopConfiguration).swap(1L)
+  }
+
+  /** Every file below `dir` as (path relative to `dir`, length, mtime). */
+  private def storeFiles(dir: String): Set[(String, Long, Long)] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val base = fs.makeQualified(p).toUri.getPath + "/"
+    graft.core.Versioned.leafFiles(fs, p).map(f =>
+      (f.getPath.toUri.getPath.stripPrefix(base), f.getLen, f.getModificationTime)).toSet
+  }
+
+  /** Three `_src` partitions of 40 ids each, plus `src0` repeating ids
+    * 40-49 of `srcB` with the same state: residue in one partition, whose
+    * key collides with a second. */
+  private def residueStore: DataFrame = {
+    val rows = (0L until 120L).map(i => (i, i * 1.5, s"t$i", Seq("srcA", "srcB", "srcC")((i / 40).toInt)))
+    (rows ++ rows.slice(40, 50).map(_.copy(_4 = "src0"))).toDF("id", "x", "tag", "_src")
+  }
+
+  /** The full pass's result: per key, the row from the smallest `_src`. */
+  private def fullPass(df: DataFrame): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("id")).orderBy(col("_src"))
+    df.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
+  }
+
+  test("compactStore rewrites only the partitions holding a repeated key and carries the rest into v+1") {
+    val out = tempDir("partial_store").toString
+    val df = residueStore
+    versionedStore(out, df)
+    val v1 = storeFiles(s"$out/v=1")
+    StreamOps.compactStore(spark, out, Seq("id"), Seq("_src"))
+    assert(StreamOps.storeDataDir(spark, out).endsWith("v=2"))
+    assertSameRows(StreamOps.readStore(spark, out).select("id", "x", "tag", "_src"),
+      fullPass(df), "partial pass vs the full pass's election")
+    assert(storeFiles(s"$out/v=1") == v1, "the old version's listing must not change")
+    val v2 = storeFiles(s"$out/v=2").map(f => (f._1, f._2))
+    def in(part: String, fs: Set[(String, Long)]) = fs.filter(_._1.startsWith(s"_src=$part/"))
+    val v1Named = v1.map(f => (f._1, f._2))
+    for (part <- Seq("srcA", "srcC")) {
+      assert(in(part, v1Named).nonEmpty && in(part, v2) == in(part, v1Named),
+        s"untouched partition $part must be carried under the same names and lengths")
+    }
+    for (part <- Seq("src0", "srcB")) {
+      assert(in(part, v2).map(_._1).intersect(in(part, v1Named).map(_._1)).isEmpty,
+        s"touched partition $part must be rewritten")
+    }
+    // A second pass finds no repeated key: everything is carried.
+    StreamOps.compactStore(spark, out, Seq("id"), Seq("_src"))
+    assert(storeFiles(s"$out/v=3").map(f => (f._1, f._2)) ==
+      v2.filter(_._1.startsWith("_src=")), "a pass with no repeated key carries every file")
+  }
+
+  test("compactStore: a key repeated inside one _src compacts when identical, refuses when it differs") {
+    val other = (10L until 20L).map(i => (i, i * 0.5, "b", "srcB"))
+    val same = tempDir("within_same").toString
+    val sameDf = (Seq((1L, 1.5, "a", "srcA"), (1L, 1.5, "a", "srcA"), (2L, 2.5, "a", "srcA")) ++ other)
+      .toDF("id", "x", "tag", "_src")
+    versionedStore(same, sameDf)
+    StreamOps.compactStore(spark, same, Seq("id"), Seq("_src"))
+    assertSameRows(StreamOps.readStore(spark, same).select("id", "x", "tag", "_src"),
+      sameDf.distinct(), "an identical duplicate inside one _src compacts to one row")
+    val diff = tempDir("within_diff").toString
+    val diffDf = (Seq((1L, 1.5, "a", "srcA"), (1L, 9.5, "a", "srcA"), (2L, 2.5, "a", "srcA")) ++ other)
+      .toDF("id", "x", "tag", "_src")
+    versionedStore(diff, diffDf)
+    val v1 = storeFiles(s"$diff/v=1")
+    val ex = intercept[java.io.IOException] {
+      StreamOps.compactStore(spark, diff, Seq("id"), Seq("_src"))
+    }
+    assert(ex.getMessage.contains("carry state that differs"), ex.getMessage)
+    assert(StreamOps.storeDataDir(spark, diff).endsWith("v=1"), "a refusal must not move the pointer")
+    assert(storeFiles(s"$diff/v=1") == v1, "a refusal must leave the store untouched")
+    assert(!new java.io.File(diff).list().exists(_.startsWith(".compact-staging-")),
+      "a refusal must leave no staging behind")
+  }
+
+  test("compactStore on a non-file: scheme copies the carried partitions and gives the same rows") {
+    GraftLocalFileSystem.register(spark.sparkContext.hadoopConfiguration)
+    val df = residueStore
+    val onFile = tempDir("carry_file").toString
+    val localDir = tempDir("carry_graftlocal").toString
+    val onGraft = s"${GraftLocalFileSystem.Scheme}:$localDir"
+    for (root <- Seq(onFile, onGraft)) {
+      versionedStore(root, df)
+      StreamOps.compactStore(spark, root, Seq("id"), Seq("_src"))
+    }
+    assertSameRows(StreamOps.readStore(spark, onGraft), StreamOps.readStore(spark, onFile),
+      "graftlocal: vs file: compaction")
+    // A carried file is a second link to v=1's file on file:, and its own
+    // copy elsewhere.
+    def links(root: String): Set[Int] = {
+      import scala.jdk.CollectionConverters._
+      val part = java.nio.file.Paths.get(root, "v=2", "_src=srcA")
+      val kids = java.nio.file.Files.list(part)
+      try kids.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet"))
+        .map(p => java.nio.file.Files.getAttribute(p, "unix:nlink").asInstanceOf[Int]).toSet
+      finally kids.close()
+    }
+    assert(links(onFile) == Set(2), "file: carries by hard link")
+    assert(links(localDir) == Set(1), "graftlocal: carries by copy")
+  }
+
   test("STR-COMPACT2 gated ivf_pq_stream: compacted read path matches batch ivf_pq with DISTINCT removed") {
     // End-to-end on the REAL gated store (the one `ivf_pq_stream`
     // searches, Lloyd centroids + refined codebook): inject residue as a
