@@ -115,16 +115,12 @@ final class Versioned private (val root: Path, val fs: FileSystem) {
     try out.write(content.getBytes(UTF_8)) finally out.close()
   }
 
-  /** Carry each of `files` (below `from`) to the same relative path below
-    * `to` without rewriting it ([[carryFile]]). */
-  def carry(files: Seq[Path], from: Path, to: Path): Unit = {
-    val base = fs.makeQualified(from).toUri.getPath.stripSuffix("/") + "/"
-    files.foreach { f =>
-      val path = fs.makeQualified(f).toUri.getPath
-      require(path.startsWith(base), s"carry: $f is not below $from")
-      carryFile(fs, f, new Path(to, path.stripPrefix(base)))
-    }
-  }
+  /** Carry the file at each relative path of `names` below `from` to the
+    * same relative path below `to` without rewriting it ([[carryFile]]).
+    * A file gone from `from` throws `FileNotFoundException` or
+    * `java.nio.file.NoSuchFileException`. */
+  def carry(names: Seq[String], from: Path, to: Path): Unit =
+    names.foreach(n => carryFile(fs, new Path(from, n), new Path(to, n)))
 
   /** Append to `p`, creating it when absent. */
   def append(p: Path, content: String): Unit = if (!createIfAbsent(p, content)) {

@@ -414,9 +414,10 @@ object StreamOps {
   }
 
   // Test-only fault injection (StreamingSpec's race tests drive the
-  // protocol's two interesting instants deterministically; production
+  // protocol's interesting instants deterministically; production
   // no-ops). Reset to no-op in a finally by every test that sets them.
   private[graft] var compactPreSwapHook: () => Unit = () => ()
+  private[graft] var compactPreCarryHook: () => Unit = () => ()
   private[graft] var ingestPostAppendHook: () => Unit = () => ()
 
   /** Streamed-store COMPACTION (r12, the r11 verdict's task 4) — the
@@ -497,9 +498,14 @@ object StreamOps {
     * so the result equals a pass over all of v. Every other partition goes
     * into the new version file by file ([[graft.core.Versioned.carry]]: a
     * hard link on `file:`), exactly as L0 listed it, and v's listing does
-    * not change. At 100 TB a pass costs a scan of the key columns plus a
-    * rewrite of the partitions that received residue since the last pass,
-    * not a shuffle of the whole store. A pass still publishes a new
+    * not change; a listed file gone before its carry fails the pass with
+    * L1's message. Cost: a pass with no repeated key is the key-only
+    * aggregate plus the carry. A pass with residue adds a scan of the key
+    * columns and file names for the semi-join, then rewrites the touched
+    * partitions, so it pays off when residue sits in few partitions. When
+    * residue touches every partition (a full replay under new names) the
+    * detection comes on top of the whole rewrite, and the pass costs more
+    * than the old single window pass over v. A pass still publishes a new
     * version when nothing is touched. */
   def compactStore(spark: SparkSession, storeDir: String,
       keyCols: Seq[String], partSpec: Seq[String]): Unit = {
@@ -574,17 +580,22 @@ object StreamOps {
     // row of a key that has a second row anywhere in v, across partitions
     // or inside one. The aggregate reads only the key columns; the files
     // come from a null-safe semi-join on the (usually absent) repeated keys.
+    // It is persisted, so the emptiness check and the semi-join share one
+    // run of it.
     val dupKeys = curDf.groupBy(keyCols.map(col): _*).count()
       .filter(col("count") > 1).select(keyCols.map(k => col(k).as(s"_dup_$k")): _*)
-    // A file's partition: the first directory below v on its path.
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    // A file's path below v, and its partition: the first directory on it.
     val base = fs.makeQualified(cur).toUri.getPath + "/"
-    def partition(p: Path): String = p.toUri.getPath.stripPrefix(base).takeWhile(_ != '/')
-    val touched: Set[String] =
+    def below(p: Path): String = p.toUri.getPath.stripPrefix(base)
+    def partition(name: String): String = name.takeWhile(_ != '/')
+    val touched: Set[String] = try {
       if (dupKeys.isEmpty) Set.empty
       else curDf.select((keyCols.map(col) :+ col("_metadata.file_path").as("_file")): _*)
         .join(dupKeys, keyCols.map(k => col(k) <=> col(s"_dup_$k")).reduce(_ && _), "left_semi")
         .select(col("_file")).distinct().collect()
-        .map(r => partition(new Path(new java.net.URI(r.getString(0))))).toSet
+        .map(r => partition(below(new Path(new java.net.URI(r.getString(0)))))).toSet
+    } finally dupKeys.unpersist()
     val staging = t.fresh(".compact-staging-")
     if (touched.isEmpty) t.fs.mkdirs(staging)
     else {
@@ -616,20 +627,29 @@ object StreamOps {
             "checkpoint before compacting")
       }
     }
+    def changed() = new java.io.IOException(
+      s"compactStore: $cur changed during compaction — the racing " +
+        "append is preserved in the served version; rerun the pass")
     // Every other _src partition goes into the new version file by file,
-    // exactly as L0 listed it, unread and unrewritten.
-    t.carry(before.toSeq.map(f => new Path(f._1)).filter { p =>
-      val part = partition(p)
+    // exactly as L0 listed it, unread and unrewritten. A listed file gone
+    // since L0 (a notified load rewrote its partition) is L1's race.
+    val carried = before.toSeq.map(f => below(new Path(f._1))).filter { n =>
+      val part = partition(n)
       part.startsWith("_src=") && !touched(part)
-    }, cur, staging)
+    }
+    compactPreCarryHook()
+    try t.carry(carried, cur, staging)
+    catch {
+      case _: java.io.FileNotFoundException | _: java.nio.file.NoSuchFileException =>
+        t.fs.delete(staging, true)
+        throw changed()
+    }
     // L1, pre-swap re-check: anything landed since the snapshot → abort
     // with the pointer untouched (the racing append is in v, still
     // served; the next pass will include it).
     if (listing() != before) {
       t.fs.delete(staging, true)
-      throw new java.io.IOException(
-        s"compactStore: $cur changed during compaction — the racing " +
-          "append is preserved in the served version; rerun the pass")
+      throw changed()
     }
     val next = t.claim(staging)
     compactPreSwapHook()

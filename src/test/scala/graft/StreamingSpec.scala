@@ -1556,6 +1556,30 @@ class StreamingSpec extends AnyFunSuite {
       "a refusal must leave no staging behind")
   }
 
+  test("compactStore: a partition rewritten between the listing and the carry reports the race") {
+    GraftLocalFileSystem.register(spark.sparkContext.hadoopConfiguration)
+    val onFile = tempDir("carry_race_file").toString
+    val localDir = tempDir("carry_race_graftlocal").toString
+    // file: fails in the hard link, graftlocal: in the copy.
+    for ((root, dir) <- Seq(onFile -> onFile, s"${GraftLocalFileSystem.Scheme}:$localDir" -> localDir)) {
+      versionedStore(root, residueStore)
+      // A notified load re-announcing srcA's drop deletes its files.
+      val srcA = new org.apache.hadoop.fs.Path(s"$root/v=1/_src=srcA")
+      StreamOps.compactPreCarryHook = () =>
+        srcA.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(srcA, true)
+      val ex = try intercept[java.io.IOException] {
+        StreamOps.compactStore(spark, root, Seq("id"), Seq("_src"))
+      } finally StreamOps.compactPreCarryHook = () => ()
+      assert(ex.getMessage.contains("changed during compaction"), s"$root: ${ex.getMessage}")
+      assert(StreamOps.storeDataDir(spark, root).endsWith("v=1"), s"$root: the pointer must not move")
+      assert(!new java.io.File(dir).list().exists(_.startsWith(".compact-staging-")),
+        s"$root: the failed carry must leave no staging behind")
+      StreamOps.compactStore(spark, root, Seq("id"), Seq("_src"))
+      assertSameRows(StreamOps.readStore(spark, root).select("id", "x", "tag", "_src"),
+        fullPass(residueStore.filter(col("_src") =!= "srcA")), s"$root: the rerun")
+    }
+  }
+
   test("compactStore on a non-file: scheme copies the carried partitions and gives the same rows") {
     GraftLocalFileSystem.register(spark.sparkContext.hadoopConfiguration)
     val df = residueStore
