@@ -46,10 +46,7 @@ object Snapshot {
   /** The table at `root`, on the running session's Hadoop conf (where a
     * non-local scheme is registered). */
   private def table(root: String): Versioned =
-    Versioned(new Path(root), SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession)
-      .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new org.apache.hadoop.conf.Configuration()))
+    Versioned(new Path(root), Versioned.sessionConf)
 
   // ---- fsck/publish mutual exclusion (r11; the r10 verdict's task 4) ----
   //

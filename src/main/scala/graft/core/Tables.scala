@@ -78,7 +78,6 @@ object Tables {
   val dt8: DecimalType = DecimalType(38, 8)
   def dec8(c: Column): Column =
     (floor(c * lit(1.0e8) + lit(0.5)) / lit(1.0e8)).cast(dt8)
-  def dec8S(c: Column): Column = cstr(dec8(c))
 
   /** Exact decimal sum of a RAW (≤2 decimal places) measure column. */
   def dsum(c: Column): Column = sum(dec(c)).cast(dt)

@@ -138,6 +138,14 @@ object Versioned {
       case f => f
     })
 
+  /** The running session's Hadoop conf (where a non-local scheme is
+    * registered); a default one outside any session. */
+  def sessionConf: Configuration =
+    org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+      .map(_.sparkContext.hadoopConfiguration)
+      .getOrElse(new Configuration())
+
   def versionOf(name: String): Option[Long] =
     if (name.startsWith("v=")) name.drop(2).toLongOption else None
 

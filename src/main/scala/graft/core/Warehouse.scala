@@ -22,11 +22,7 @@ object Warehouse {
     * on each other's multi-minute writes, and a build that transitively
     * triggers another `once` (a derived dataset) cannot hit
     * ConcurrentHashMap's recursive-update failure mode. */
-  private final class Cell(thunk: () => String) {
-    @volatile private var builtDir: String = null
-    lazy val value: String = { val v = thunk(); builtDir = v; v }
-    def ifBuilt: Option[String] = Option(builtDir)
-  }
+  private final class Cell(thunk: () => String) { lazy val value: String = thunk() }
 
   private val built = new java.util.concurrent.ConcurrentHashMap[String, Cell]()
 
@@ -41,24 +37,14 @@ object Warehouse {
   // Every dir this process builds is deleted at JVM exit: the pid suffix
   // that isolates concurrent processes also means no other process can be
   // reading our copies, so cleanup is always safe — and without it every
-  // Bench/Verify run leaves another orders-sized copy in /tmp forever.
-  private val cleanupHook = new java.util.concurrent.atomic.AtomicBoolean(false)
-  private def registerCleanup(): Unit =
-    if (cleanupHook.compareAndSet(false, true))
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        built.values.forEach { cell =>
-          // Only fully-built dirs are deleted; a cell whose write is still
-          // in flight at JVM exit leaves its partial dir (pid-suffixed,
-          // never read by another process). fullyDelete removes a
-          // symlink without following it.
-          cell.ifBuilt.foreach(dir =>
-            try org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(dir))
-            catch { case _: Throwable => () })
-        }))
-
+  // Bench/Verify run leaves another orders-sized copy in /tmp forever. A
+  // finished build is registered with `deleteOnExit` on its path's own
+  // file system, the one its write went through; Hadoop's file-system
+  // cache closes at shutdown and deletes it. A build still being written
+  // at exit leaves its partial dir (pid-suffixed, never read by another
+  // process).
   def once(srcDir: String, name: String)(write: String => Unit): String =
     built.computeIfAbsent(s"$name|$srcDir", _ => new Cell(() => {
-      registerCleanup()
       val stem = srcDir.replaceAll("[^A-Za-z0-9]", "_").takeRight(40)
       val key = f"${srcDir.hashCode}%08x"
       val pid = ProcessHandle.current().pid()
@@ -70,6 +56,8 @@ object Warehouse {
       // term attributable when reading Bench/Prof output, and the
       // buildSecs entry lets Bench ship the cost in the board JSON.
       val secs = (System.nanoTime() - t0) / 1e9
+      val dir = new org.apache.hadoop.fs.Path(out)
+      dir.getFileSystem(Versioned.sessionConf).deleteOnExit(dir)
       buildSecs.put(name, secs)
       System.err.println(f"[warehouse] built $name in $secs%.2f s ($srcDir)")
       out

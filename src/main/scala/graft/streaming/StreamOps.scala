@@ -26,19 +26,6 @@ import java.sql.Timestamp
   */
 object StreamOps {
 
-  /** Event-schema streaming source over a directory of parquet files.
-    * `maxFilesPerTrigger=1` replays file-by-file (micro-batch per arrival),
-    * the closest local analog of the [REF] per-file Lambda trigger. */
-  def eventsFileSource(spark: SparkSession, dir: String): DataFrame = {
-    val schema = "event_id BIGINT, ts BIGINT, user_id BIGINT, " +
-      "event_type STRING, value DOUBLE, props STRING"
-    spark.readStream
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(schema))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dir)
-      .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-  }
-
   /** [REF] trigger fidelity: the Lambda-watches-S3 flow (`Untitled
     * Diagram.drawio:150-152`) over partner CSVs — a schema'd CSV file
     * source; run with `Trigger.AvailableNow` for batch-per-arrival or
@@ -89,7 +76,7 @@ object StreamOps {
       // dedup both copies land in one _src partition and the overwrite
       // commits doubled content; cross-batch duplicates converge via the
       // partition rewrite, same-batch ones must converge here.
-      val paths = batch.collect().map(_.getString(0).trim)
+      val paths = batch.collect().toSeq.map(_.getString(0).trim)
         .filter(_.nonEmpty).distinct
       if (paths.nonEmpty) appendToCurrent(spark, outDir, "notified load") { vd =>
         val reader = spark.read.schema(schema)
@@ -539,10 +526,10 @@ object StreamOps {
     finally t.fs.delete(sentinel, false)
   }
 
-  /** A LEGACY unversioned store (content at the root, no pointer)
-    * migrates in place: its entries move to a side directory, the side
-    * directory is claimed as the first version, and the pointer publishes
-    * it. */
+  /** A LEGACY unversioned store or STR-CDC snapshot (content at the root,
+    * no pointer) migrates in place: its entries move to a side directory,
+    * the side directory is claimed as the first version, and the pointer
+    * publishes it. */
   private def migrateLegacyStore(t: graft.core.Versioned): Long = {
     val side = new Path(t.root.getParent, t.root.getName +
       s".mig-${ProcessHandle.current().pid()}-${System.nanoTime()}")
@@ -550,23 +537,26 @@ object StreamOps {
     t.fs.listStatus(t.root).foreach { k =>
       if (!t.fs.rename(k.getPath, new Path(side, k.getPath.getName)))
         throw new java.io.IOException(
-          s"compactStore: legacy migration cannot move ${k.getPath}")
+          s"${t.root}: legacy migration cannot move ${k.getPath}")
     }
     val v = t.claim(side)
     t.swap(v)
     v
   }
 
+  /** Entry sweep of a single-pointer writer at version `v`: a crashed
+    * writer leaves either an orphan `staging` directory or an orphan
+    * version ABOVE the pointer (data claimed, pointer never moved — or
+    * rolled back after a detected race). Neither is ever served, so both
+    * are structural garbage. */
+  private def entrySweep(t: graft.core.Versioned, v: Long, staging: String): Unit =
+    t.sweep(n => n.startsWith(staging) || graft.core.Versioned.versionOf(n).exists(_ > v))
+
   private def compactStoreLocked(spark: SparkSession,
       keyCols: Seq[String], partSpec: Seq[String],
       t: graft.core.Versioned): Unit = {
     val v = t.current.getOrElse(migrateLegacyStore(t))
-    // Entry sweep: a crashed pass leaves either an orphan staging dir or
-    // an orphan version ABOVE the pointer (data published, pointer never
-    // moved — or rolled back after a detected race). Neither is ever
-    // served, so both are structural garbage.
-    t.sweep(n => n.startsWith(".compact-staging-") ||
-      graft.core.Versioned.versionOf(n).exists(_ > v))
+    entrySweep(t, v, ".compact-staging-")
     val cur = t.vdir(v)
     // Listed on the session's file system, which hides `.crc` sidecars
     // (the raw one under `t` would list each file twice).
@@ -1552,28 +1542,43 @@ object StreamOps {
     * State is the SNAPSHOT ITSELF, not a state store: the materialized
     * view lives on disk, so recovery = checkpointed source offsets +
     * the last committed snapshot, and snapshot size is bounded by keys,
-    * not stream length. The new snapshot is written to a temp dir and
-    * swapped in whole — the local stand-in for a table format's atomic
-    * commit (§2.1 object-store notes); at warehouse scale the same
-    * merge runs as MERGE INTO / the staged DELETE+INSERT of
+    * not stream length.
+    *
+    * The snapshot is a [[graft.core.Versioned]] table, the `_src` store's
+    * `v=N` + `_CURRENT` layout: each batch writes the merge into a staging
+    * directory while the current version is read, claims it as the next
+    * version and commits by the pointer swap, on any Hadoop file system.
+    * Retention keeps the previous version (grace for a reader that
+    * resolved it just before the swap) and drops older ones. A crash
+    * leaves an orphan staging directory or a claimed version above the
+    * pointer; the next batch's entry sweep deletes both, and the pointer
+    * always names the last committed snapshot. One writer per checkpoint,
+    * so there is no listing re-check or sentinel: a redelivered batch
+    * re-applies idempotently (latest op per key). A cold start bootstraps
+    * an empty `v=1`; a root holding a plain parquet snapshot and no
+    * pointer migrates into the first version. A root that is absent while
+    * `<root>.prev` exists is the crash state of the rename-aside swap this
+    * layout replaced: the batch refuses rather than restart from an empty
+    * view. Readers resolve the pointer ([[readStore]]). At warehouse scale
+    * the same merge runs as MERGE INTO / the staged DELETE+INSERT of
     * [[graft.sources.Ingest.JdbcUpsertWriter]], which STR-WH2 proves. */
   def runChangelogApply(changelog: DataFrame, snapshotDir: String,
                         checkpointDir: String): Unit =
     drainBatches(changelog, checkpointDir) { (batch, _) =>
       if (!batch.isEmpty) {
         val s = batch.sparkSession
-        val curDir = new java.io.File(snapshotDir)
-        val prevDir = new java.io.File(snapshotDir + ".prev")
-        // CRASH RECOVERY before reading: a death between the two renames
-        // below leaves the last committed snapshot parked at `.prev` and
-        // no live dir — restore it, never fall through to "empty". The
-        // empty fallback is reserved for a TRUE cold start (neither dir
-        // exists); reaching it with a parked .prev present would silently
-        // rebuild the view from one batch.
-        if (!curDir.exists() && prevDir.exists() &&
-            !prevDir.renameTo(curDir))
-          throw new java.io.IOException(
-            s"snapshot recovery failed: $prevDir -> $snapshotDir")
+        val t = storeTable(s, snapshotDir)
+        val v = t.current.getOrElse {
+          val parked = new Path(t.root.getParent, t.root.getName + ".prev")
+          if (t.names.nonEmpty) migrateLegacyStore(t)
+          else if (t.fs.exists(parked))
+            throw new java.io.IOException(
+              s"STR-CDC: $snapshotDir is absent but $parked holds a snapshot " +
+                "parked by a crashed rename-aside swap — move it back to " +
+                s"$snapshotDir and rerun (an empty restart would drop its keys)")
+          else t.bootstrap()
+        }
+        entrySweep(t, v, ".staging-")
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("k")).orderBy(col("seq").desc)
         val latest = batch
@@ -1587,51 +1592,33 @@ object StreamOps {
             org.apache.spark.sql.types.DecimalType(38, 4)),
           org.apache.spark.sql.types.StructField("status",
             org.apache.spark.sql.types.StringType)))
-        // Always read with the EXPLICIT schema: a legal all-delete batch
-        // leaves a snapshot dir with zero part files, and schema
-        // inference on it throws on every subsequent batch — bricking
+        // Always read with the EXPLICIT schema: a cold start's `v=1` and a
+        // legal all-delete batch's version hold no rows, and schema
+        // inference on them throws on every subsequent batch — bricking
         // the pipeline right after the one batch that emptied the view.
-        val cur =
-          if (curDir.exists()) s.read.schema(snapSchema).parquet(snapshotDir)
-          else s.createDataFrame(
-            s.sparkContext.emptyRDD[org.apache.spark.sql.Row], snapSchema)
+        val cur = s.read.schema(snapSchema).parquet(t.vdir(v).toString)
         val merged = cur.join(latest, col("k") === col("ck"), "full_outer")
           .filter(col("op").isNull || col("op") =!= "D")
           .select(coalesce(col("k"), col("ck")).as("k"),
             coalesce(col("cp"), col("price")).cast(
               org.apache.spark.sql.types.DecimalType(38, 4)).as("price"),
             coalesce(col("cst"), col("status")).as("status"))
-        // Write the next version FIRST (the current snapshot is still
-        // being read lazily during this write), then swap by RENAME-ASIDE
-        // (cur -> .prev, next -> cur, drop .prev): the last committed
-        // snapshot exists on disk at every instant, so a crash anywhere
-        // in the sequence recovers — either cur survives untouched, or
-        // the recovery block above restores it from .prev. A delete-
-        // before-rename swap would instead have a window where NO
-        // snapshot exists and recovery silently restarts empty.
-        val tmp = snapshotDir + ".next"
-        merged.write.mode("overwrite").parquet(tmp)
-        org.apache.hadoop.fs.FileUtil.fullyDelete(prevDir)
-        if (curDir.exists() && !curDir.renameTo(prevDir))
-          throw new java.io.IOException(
-            s"snapshot swap failed: $snapshotDir -> $prevDir")
-        if (!new java.io.File(tmp).renameTo(curDir)) {
-          prevDir.renameTo(curDir) // best-effort restore before failing
-          throw new java.io.IOException(s"snapshot swap failed: $tmp -> $snapshotDir")
-        }
-        org.apache.hadoop.fs.FileUtil.fullyDelete(prevDir)
+        val staging = t.fresh(".staging-")
+        merged.write.parquet(staging.toString)
+        t.swap(t.claim(staging))
+        t.dropBelow(v)
       }
     }
 
-  /** STR-SNAP: streaming atomic versioned publish — STR-CDC's swap
-    * upgraded to the full [[graft.core.Snapshot]] pointer store. Each
+  /** STR-SNAP: streaming atomic versioned publish — STR-CDC's pointer
+    * commit with the full [[graft.core.Snapshot]] store on top. Each
     * non-empty epoch of a Complete-mode aggregate is published as the
     * next immutable `v=N` version; concurrent readers resolve `_CURRENT`
     * and can never observe a half-written epoch, and every historical
     * epoch stays time-travel-readable (the audit trail STR-CDC's
-    * single-version swap discards). Exactly-once at the sink: foreachBatch
-    * is at-least-once (a crash between the publish and the checkpoint
-    * commit redelivers the epoch), so each version's `_META` carries the
+    * keep-previous retention discards). Exactly-once at the sink:
+    * foreachBatch is at-least-once (a crash between the publish and the
+    * checkpoint commit redelivers the epoch), so each version's `_META` carries the
     * epoch id that produced it and a redelivered epoch ≤ the current
     * version's is SKIPPED — the guard state lives in the store itself,
     * not in sink memory, so it survives restarts by construction.
@@ -1666,7 +1653,6 @@ object StreamOps {
   def runDriftMonitor(values: DataFrame, reference: DataFrame,
                       logDir: String, checkpointDir: String,
                       alarmAt: Double = 0.25): Unit = {
-    val spark = reference.sparkSession
     // One job computes the profile bounds AND size; fail with an
     // actionable message on an empty/all-null reference instead of an
     // NPE out of getDouble — a monitor with no training profile cannot

@@ -107,29 +107,6 @@ class ExpressionSpec extends AnyFunSuite {
     assert(bad == 0, "UDAF signature must be bit-identical to the builtin-min sketch")
   }
 
-  test("CentroidAggregator (typed Aggregator) equals the per-dimension avg") {
-    import spark.implicits._
-    val emb = Tables.load(spark, sfDir, "embeddings")
-      .join(Tables.load(spark, sfDir, "documents"),
-        col("vec_id") === col("doc_id"))
-      .select(col("lang"), col("embedding").as("e"))
-      .as[(String, Array[Float])]
-    val centroid = new graft.functions.CentroidAggregator(64).toColumn
-    val viaAgg = emb.groupByKey(_._1).mapValues(_._2).agg(centroid.name("c"))
-      .collect().toMap.view.mapValues(_.toSeq).toMap
-    // Reference: builtin per-dimension average of the same vectors.
-    val avgCols = (1 to 64).map(i =>
-      avg(element_at(col("e"), i).cast("double")).as(s"d$i"))
-    val viaAvg = emb.toDF("lang", "e")
-      .groupBy("lang")
-      .agg(avgCols.head, avgCols.tail: _*)
-      .collect().map(r => r.getString(0) -> (1 to 64).map(i => r.getDouble(i))).toMap
-    assert(viaAgg.keySet == viaAvg.keySet)
-    for (k <- viaAgg.keySet; i <- 0 until 64)
-      assert(math.abs(viaAgg(k)(i) - viaAvg(k)(i)) < 1e-9,
-        s"centroid mismatch for $k dim $i")
-  }
-
   test("SQL registration via SparkSessionExtensions") {
     val r = spark.sql(
       "SELECT graft_poly_hash('abc') AS h, graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d, " +

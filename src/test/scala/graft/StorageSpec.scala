@@ -135,4 +135,13 @@ class StorageSpec extends AnyFunSuite {
     assert(readCk(dStats) >= dStats.length - 1,
       s"date-sorted layout unexpectedly localized custkey: ${readCk(dStats)}/${dStats.length}")
   }
+
+  test("Warehouse.once registers each build for deletion on its own file system") {
+    // orders_orc is a registered prebuild, so CartesianGuardSpec's census
+    // of Warehouse builds stays exact whichever suite builds it first.
+    val out = new org.apache.hadoop.fs.Path(graft.queries.Ingestion.orcOrders(spark, sfDir))
+    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.cancelDeleteOnExit(out), s"$out is not registered for deletion at exit")
+    fs.deleteOnExit(out)
+  }
 }

@@ -1772,7 +1772,7 @@ class StreamingSpec extends AnyFunSuite {
     // Sequential per-generation apply must equal the batch query's global
     // latest-op-wins (each generation is key-unique — the declared
     // precondition); compare on the snapshot columns.
-    val streamed = spark.read.parquet(snapDir)
+    val streamed = StreamOps.readStore(spark, snapDir)
       .select(col("k").as("o_orderkey"),
         col("price").cast("string").as("price"), col("status"))
     val batch = SparkEntry.queries("cdc_apply")(spark, sfDir)
@@ -1787,41 +1787,77 @@ class StreamingSpec extends AnyFunSuite {
       spark.readStream.schema(g1.schema).option("maxFilesPerTrigger", 1)
         .parquet(logDir.toString),
       snapDir, tempDir("cdc_ckpt2").toString)
-    val replayed = spark.read.parquet(snapDir)
+    val replayed = StreamOps.readStore(spark, snapDir)
       .select(col("k").as("o_orderkey"),
         col("price").cast("string").as("price"), col("status"))
     assertSameRows(replayed, batch, "STR-CDC re-replay idempotence")
   }
 
-  test("STR-CDC swap crash window: a snapshot parked at .prev is restored, not restarted empty") {
-    import graft.queries.Events
-    val orders = Tables.load(spark, sfDir, "orders")
-    val (base, g1, g2) = Events.cdcGenerations(orders)
-    val snapDir = tempDir("cdc_crash").resolve("snapshot").toString
-    base.write.mode("overwrite").parquet(snapDir)
-    // Simulate a death between the two swap renames: the committed
-    // snapshot sits at .prev and no live dir exists.
-    assert(new java.io.File(snapDir).renameTo(new java.io.File(snapDir + ".prev")))
-    val logDir = tempDir("cdc_crash_log")
-    val t0 = 1700000000000L
-    writeSlice(g1, logDir, "gen_1", t0)
-    writeSlice(g2, logDir, "gen_2", t0 + 60000)
+  // STR-CDC's disk cases: the convergence test's base snapshot and its
+  // two changelog generations, streamed as ordered file arrivals.
+  private lazy val cdcGens = Events.cdcGenerations(Tables.load(spark, sfDir, "orders"))
+
+  private def applyCdc(snapDir: String, tag: String): Unit = {
+    val (_, g1, g2) = cdcGens
+    val logDir = tempDir(s"${tag}_log")
+    writeSlice(g1, logDir, "gen_1", 1700000000000L)
+    writeSlice(g2, logDir, "gen_2", 1700000060000L)
     StreamOps.runChangelogApply(
       spark.readStream.schema(g1.schema).option("maxFilesPerTrigger", 1)
         .parquet(logDir.toString),
-      snapDir, tempDir("cdc_crash_ckpt").toString)
-    // Recovery must have restored the base before applying — the final
-    // snapshot equals the batch apply over base + both generations, and
-    // in particular contains the untouched base keys an empty restart
-    // would have dropped.
-    val streamed = spark.read.parquet(snapDir)
-      .select(col("k").as("o_orderkey"),
-        col("price").cast("string").as("price"), col("status"))
-    val batch = SparkEntry.queries("cdc_apply")(spark, sfDir)
-      .select(col("o_orderkey"), col("price"), col("status"))
-    assertSameRows(streamed, batch, "STR-CDC recovery from parked .prev")
-    assert(!new java.io.File(snapDir + ".prev").exists(),
-      "the parked dir must be consumed by the swap")
+      snapDir, tempDir(s"${tag}_ckpt").toString)
+  }
+
+  private def assertCdcConverged(snapDir: String, hint: String): Unit =
+    assertSameRows(
+      StreamOps.readStore(spark, snapDir).select(col("k").as("o_orderkey"),
+        col("price").cast("string").as("price"), col("status")),
+      SparkEntry.queries("cdc_apply")(spark, sfDir)
+        .select(col("o_orderkey"), col("price"), col("status")),
+      hint)
+
+  test("STR-CDC on a non-file: scheme converges to the batch cdc_apply snapshot") {
+    GraftLocalFileSystem.register(spark.sparkContext.hadoopConfiguration)
+    val localDir = tempDir("cdc_graftlocal").resolve("snapshot")
+    val snapDir = s"${GraftLocalFileSystem.Scheme}:$localDir"
+    cdcGens._1.write.parquet(snapDir)
+    applyCdc(snapDir, "cdc_graftlocal")
+    assertCdcConverged(snapDir, "STR-CDC on graftlocal: vs batch cdc_apply")
+    assert(java.nio.file.Files.exists(localDir.resolve("_CURRENT")),
+      "the snapshot must be committed through the version pointer")
+  }
+
+  test("STR-CDC crash states: orphans are swept and the pointer's version is served") {
+    val snapDir = tempDir("cdc_crash").resolve("snapshot").toString
+    val t = graft.core.Versioned(new org.apache.hadoop.fs.Path(snapDir),
+      spark.sparkContext.hadoopConfiguration)
+    val base = cdcGens._1
+    val wrong = base.withColumn("status", lit("X"))
+    // A crash after the swap, before retention: two committed versions,
+    // the pointer at the second.
+    wrong.write.parquet(t.vdir(1L).toString)
+    base.write.parquet(t.vdir(2L).toString)
+    t.swap(2L)
+    // A crash after the claim, before the swap: a version above the
+    // pointer. A crash during the write: an orphan staging directory.
+    wrong.write.parquet(t.vdir(3L).toString)
+    wrong.write.parquet(t.child(".staging-crashed").toString)
+    applyCdc(snapDir, "cdc_crash")
+    assertCdcConverged(snapDir, "STR-CDC after the crash states")
+    // The orphan v=3 was swept before the first batch claimed v=3; the
+    // second batch claimed v=4, and keep-previous retention kept v=3 only.
+    assert(t.current.contains(4L) && t.versions.sorted == Seq(3L, 4L), t.names)
+    assert(!t.names.exists(_.startsWith(".staging-")), t.names)
+  }
+
+  test("STR-CDC refuses an absent root while <root>.prev holds a parked snapshot") {
+    val snapDir = tempDir("cdc_parked").resolve("snapshot").toString
+    cdcGens._1.write.parquet(s"$snapDir.prev")
+    val ex = intercept[Exception](applyCdc(snapDir, "cdc_parked"))
+    val msgs = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString(" | ")
+    assert(msgs.contains(s"$snapDir.prev"), msgs)
+    assert(!new java.io.File(snapDir).exists(), "a refusal must not start an empty view")
   }
 
   test("STR-SNAP versioned publish: epochs are atomic versions, time travel reads prefixes, replay guarded") {
