@@ -56,8 +56,13 @@ object Warehouse {
       // term attributable when reading Bench/Prof output, and the
       // buildSecs entry lets Bench ship the cost in the board JSON.
       val secs = (System.nanoTime() - t0) / 1e9
+      // `deleteOnExit` registers only a path that exists, and a build may
+      // leave its dir for the caller to fill after `once` returns
+      // (bucket_tables' per-session `saveAsTable`).
       val dir = new org.apache.hadoop.fs.Path(out)
-      dir.getFileSystem(Versioned.sessionConf).deleteOnExit(dir)
+      val fs = dir.getFileSystem(Versioned.sessionConf)
+      fs.mkdirs(dir)
+      fs.deleteOnExit(dir)
       buildSecs.put(name, secs)
       System.err.println(f"[warehouse] built $name in $secs%.2f s ($srcDir)")
       out

@@ -137,11 +137,16 @@ class StorageSpec extends AnyFunSuite {
   }
 
   test("Warehouse.once registers each build for deletion on its own file system") {
-    // orders_orc is a registered prebuild, so CartesianGuardSpec's census
-    // of Warehouse builds stays exact whichever suite builds it first.
-    val out = new org.apache.hadoop.fs.Path(graft.queries.Ingestion.orcOrders(spark, sfDir))
-    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.cancelDeleteOnExit(out), s"$out is not registered for deletion at exit")
-    fs.deleteOnExit(out)
+    // Both are registered prebuilds, so CartesianGuardSpec's census of
+    // Warehouse builds stays exact whichever suite builds them first.
+    // bucket_tables' own write is empty: its caller fills the dir after
+    // `once` returns, exactly as this call leaves it.
+    val builds = Seq(graft.queries.Ingestion.orcOrders(spark, sfDir),
+      graft.core.Warehouse.once(sfDir, "bucket_tables")(_ => ()))
+    for (out <- builds.map(new org.apache.hadoop.fs.Path(_))) {
+      val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      assert(fs.cancelDeleteOnExit(out), s"$out is not registered for deletion at exit")
+      fs.deleteOnExit(out)
+    }
   }
 }
