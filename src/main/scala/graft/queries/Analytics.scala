@@ -328,10 +328,8 @@ object Analytics extends QueryModule {
     //      nothing in its own price group strictly exceeds it (equal
     //      price+size duplicates all survive — no strict dominator).
     //      The single-partition window runs over DISTINCT PRICES, not
-    //      rows; if even that outgrows one task, PACK-2's sharded
-    //      running-max decomposition (per-shard prefix + broadcast shard
-    //      offsets) applies verbatim. Frontier is tiny by nature →
-    //      broadcast joined back to the fact. ----
+    //      rows, and the price domain bounds those. Frontier is tiny by
+    //      nature → broadcast joined back to the fact. ----
     // ---- TS-EWMA: per-user exponentially-weighted moving average of
     //      event value (the smoothing baseline behind alerting and trend
     //      lines), α=0.3, ADJUSTED form (pandas ewm adjust=True):
@@ -581,21 +579,12 @@ object Analytics extends QueryModule {
       val p = load(s, d, "part")
       val g = p.groupBy(col("p_retailprice").as("price"))
         .agg(max(col("p_size")).as("gmax"))
-      // The prefix max runs over the GROUPED (distinct-price) relation —
-      // domain-bounded here, so the single-partition window is fine until
-      // the value domain is data-sized. The declared PACK-2 fallback is
-      // the sharded running max (operators/PrefixMax: range-shard →
-      // per-shard running max → n-row carry offsets), config-FLIPPED like
-      // ddp_ngram's prefilter: `spark.graft.skyline.shardedPrefixMax=true`
-      // — result-identical (AnalyticsSpec pins hash equality of the two
-      // paths; PlanGuardSpec pins no unpartitioned window on the gated
-      // path), ready before a continuous-price corpus makes the domain
-      // grow with the data.
-      val g2 = if (s.conf.getOption("spark.graft.skyline.shardedPrefixMax")
-          .exists(_.toBoolean))
-        graft.operators.PrefixMax.attach(g, Seq(col("price").asc),
-          "gmax", "prevmax")
-      else g.withColumn("prevmax", max(col("gmax")).over(
+      // The prefix max runs over the GROUPED (distinct-price) relation,
+      // which the price domain bounds: 1,000 rows at every testdata scale,
+      // and TPC-H's retail-price formula keeps prices in [900.00, 2099.00],
+      // so at most ~120k cent values at any scale factor. The
+      // single-partition window therefore never sees a fact-sized input.
+      val g2 = g.withColumn("prevmax", max(col("gmax")).over(
         Window.orderBy(col("price")).rowsBetween(Window.unboundedPreceding, -1)))
       ordered(p.join(broadcast(g2), p("p_retailprice") === g2("price"))
         .filter((col("prevmax").isNull || col("prevmax") < col("p_size")) &&

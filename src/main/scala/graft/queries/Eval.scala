@@ -44,6 +44,26 @@ object Eval extends QueryModule {
       when(col("lang") === "en", 1L).otherwise(0L).as("pos"))
   }
 
+  /** The tie-averaged rank-sum AUC over (score DOUBLE, pos LONG ∈ {0,1})
+    * rows, shared by `auc_roc` and `lr_eval`: the one-row aggregate
+    * holding `n_pos` and `n_neg`, plus the exact int64 2U and the AUC
+    * (NULL for single-class input) as columns over it. Rows collapse to
+    * one per distinct score; GlobalRank's two-pass prefix ranks those. */
+  private[graft] def rankSumAuc(scored: DataFrame): (DataFrame, Column, Column) = {
+    val perS = scored.groupBy(col("score")).agg(
+      count(lit(1)).as("ct"), sum(col("pos")).as("cpos"))
+    val withP = graft.operators.GlobalRank.attach(perS,
+      Seq(col("score").asc), None, Seq("ct" -> "cbefore"))
+    val one = withP.agg(
+      sum(col("cpos")).as("n_pos"),
+      sum(col("ct") - col("cpos")).as("n_neg"),
+      sum(col("cpos") * (lit(2L) * col("cbefore") + col("ct") + lit(1L)))
+        .as("r2pos"))
+    val u2 = col("r2pos") - col("n_pos") * (col("n_pos") + 1L) // = 2U, exact
+    val den = lit(2.0) * col("n_pos").cast("double") * col("n_neg").cast("double")
+    (one, u2, u2.cast("double") / when(den === 0.0, lit(null)).otherwise(den))
+  }
+
   val all: Map[String, Q] = Map(
     // ---- EVAL-1: exact ROC AUC (`auc_roc`) — threshold-free
     //      discrimination of the stopword score for English: AUC =
@@ -59,18 +79,7 @@ object Eval extends QueryModule {
     //      (no single-task sort at any width — gini/mann_whitney/
     //      drift_ks's machinery, fourth consumer); rollup is 1 row. ----
     "auc_roc" -> ((s, d) => {
-      val perS = scored(s, d).groupBy(col("score")).agg(
-        count(lit(1)).as("ct"), sum(col("pos")).as("cpos"))
-      val withP = graft.operators.GlobalRank.attach(perS,
-        Seq(col("score").asc), None, Seq("ct" -> "cbefore"))
-      val one = withP.agg(
-        sum(col("cpos")).as("n_pos"),
-        sum(col("ct") - col("cpos")).as("n_neg"),
-        sum(col("cpos") * (lit(2L) * col("cbefore") + col("ct") + lit(1L)))
-          .as("r2pos"))
-      val u2 = col("r2pos") - col("n_pos") * (col("n_pos") + 1L) // = 2U, exact
-      val den = lit(2.0) * col("n_pos").cast("double") * col("n_neg").cast("double")
-      val auc = u2.cast("double") / when(den === 0.0, lit(null)).otherwise(den)
+      val (one, u2, auc) = rankSumAuc(scored(s, d))
       ordered(one.select(col("n_pos"), col("n_neg"),
         dec4S(u2.cast("double") / lit(2.0)).as("u_stat"),
         dec4S(auc).as("auc"),
@@ -92,31 +101,8 @@ object Eval extends QueryModule {
     //      n=0 — DQ-3's absent-digit convention). Scale: ONE map-side-
     //      combined 10-group aggregate over the scan; everything after
     //      lives on ≤10 rows. ----
-    "calibration_bins" -> ((s, d) => {
-      val binned = scored(s, d).withColumn("bin",
-        least(floor(col("score") * lit(10.0)).cast("int"), lit(9)))
-      val agg = binned.groupBy(col("bin")).agg(
-        count(lit(1)).as("n"), sum(col("pos")).as("n_pos"),
-        sum(dec4(col("score"))).cast(dt).as("ssc"))
-      val withRates = agg
-        .withColumn("conf", col("ssc").cast("double") / col("n").cast("double"))
-        .withColumn("acc", col("n_pos").cast("double") / col("n").cast("double"))
-      val tot = withRates.agg(
-        sum(col("n")).as("nn"),
-        sum((dec4(abs(col("acc") - col("conf"))) * col("n")).cast(dt))
-          .cast(dt).as("we"))
-      val ece = tot.select(
-        dec4S(col("we").cast("double") / col("nn").cast("double")).as("ece"))
-      val spine = s.range(0, 10).select(col("id").cast("int").as("bin"))
-      ordered(spine.join(withRates, Seq("bin"), "left")
-        .crossJoin(broadcast(ece))
-        .select(col("bin"),
-          coalesce(col("n"), lit(0L)).as("n"),
-          coalesce(col("n_pos"), lit(0L)).as("n_pos"),
-          dec4S(col("conf")).as("conf"),
-          dec4S(col("acc")).as("acc"),
-          col("ece")))
-    }),
+    "calibration_bins" -> ((s, d) =>
+      ordered(LlmOps.reliabilityTable(s, scored(s, d)))),
 
     // ---- EVAL-6: Brier score + Murphy decomposition (`brier_decomp`) —
     //      calibration_bins' scalar summary with the standard additive

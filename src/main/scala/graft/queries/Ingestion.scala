@@ -81,11 +81,7 @@ object Ingestion extends QueryModule {
     //      (values, timestamps under the UTC session, row count). ----
     "ingest_orc" -> ((s, d) => {
       val dir = orcOrders(s, d)
-      ordered(s.read.orc(dir)
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n_orders"),
-          dsumS(col("o_totalprice")).as("sum_price"),
-          max(col("o_orderdate")).as("last_order")))
+      statusRollup(s.read.orc(dir))
     }),
 
     // ---- Avro sink + scan: the row-oriented interchange format of the
@@ -100,11 +96,7 @@ object Ingestion extends QueryModule {
     //      class instead of the "avro" short name. ----
     "ingest_avro" -> ((s, d) => {
       val dir = avroOrders(s, d)
-      ordered(s.read.format(avroFormat).load(dir)
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n_orders"),
-          dsumS(col("o_totalprice")).as("sum_price"),
-          max(col("o_orderdate")).as("last_order")))
+      statusRollup(s.read.format(avroFormat).load(dir))
     }),
 
     // ---- XML sink + scan: the document-structured partner-feed format
@@ -120,13 +112,9 @@ object Ingestion extends QueryModule {
     //      session. ----
     "ingest_xml" -> ((s, d) => {
       val dir = xmlOrders(s, d)
-      ordered(s.read.format("xml").option("rowTag", "order")
+      statusRollup(s.read.format("xml").option("rowTag", "order")
         .schema(load(s, d, "orders").schema)
-        .load(dir)
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n_orders"),
-          dsumS(col("o_totalprice")).as("sum_price"),
-          max(col("o_orderdate")).as("last_order")))
+        .load(dir))
     }),
 
     // ---- JDBC sink + read-back ([REF] dual relational sinks, Redshift
@@ -144,11 +132,7 @@ object Ingestion extends QueryModule {
     //      the control-plane edge. ----
     "ingest_jdbc" -> ((s, d) => {
       val t = jdbcOrders(s, d)
-      ordered(Ingest.jdbcRead(s, t).load()
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n_orders"),
-          dsumS(col("o_totalprice")).as("sum_price"),
-          max(col("o_orderdate")).as("last_order")))
+      statusRollup(Ingest.jdbcRead(s, t).load())
     }),
 
     // ---- JDBC staged UPSERT ([REF] incremental warehouse load): base
@@ -163,11 +147,7 @@ object Ingestion extends QueryModule {
     //      new rows landed, and untouched rows survived. ----
     "ingest_upsert" -> ((s, d) => {
       val t = upsertOrders(s, d)
-      ordered(Ingest.jdbcRead(s, t).load()
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n_orders"),
-          dsumS(col("o_totalprice")).as("sum_price"),
-          max(col("o_orderdate")).as("last_order")))
+      statusRollup(Ingest.jdbcRead(s, t).load())
     }),
 
     // ---- Schema-evolution scan: a table whose schema GREW between
@@ -309,6 +289,15 @@ object Ingestion extends QueryModule {
           dec4S(col("p2")).as("price_after")))
     })
   )
+
+  /** The per-status rollup every orders round-trip (ORC, Avro, XML, JDBC,
+    * JDBC upsert) ends in; each oracle computes the same aggregate from
+    * the original parquet. */
+  private def statusRollup(orders: DataFrame): DataFrame =
+    ordered(orders.groupBy(col("o_orderstatus"))
+      .agg(count(lit(1)).as("n_orders"),
+        dsumS(col("o_totalprice")).as("sum_price"),
+        max(col("o_orderdate")).as("last_order")))
 
   /** Two-generation orders layout for the schema-evolution scan, built
     * once per (process, sfDir): v1 = even keys WITHOUT o_orderstatus

@@ -324,13 +324,13 @@ object LlmOps extends QueryModule {
     u
   }
 
-  /** The 10-bin reliability block shared by `lr_calibration` and
-    * `lr_temp`: over (score DOUBLE ∈ [0,1], pos LONG ∈ {0,1}) rows,
-    * per-bin count / positives / mean dec4 confidence / accuracy, every
-    * bin kept on a 0..9 spine, plus the ECE scalar attached to every
-    * row. All cross-row sums are exact decimal folds (calibration_bins'
-    * design — see the `lr_calibration` query doc). */
-  private def reliabilityTable(s: SparkSession, scored: DataFrame): DataFrame = {
+  /** The 10-bin reliability block shared by `calibration_bins`,
+    * `lr_calibration` and `lr_temp`: over (score DOUBLE ∈ [0,1],
+    * pos LONG ∈ {0,1}) rows, per-bin count / positives / mean dec4
+    * confidence / accuracy, every bin kept on a 0..9 spine, plus the
+    * ECE scalar attached to every row. All cross-row sums are exact
+    * decimal folds (see the `lr_calibration` query doc). */
+  private[graft] def reliabilityTable(s: SparkSession, scored: DataFrame): DataFrame = {
     val dt4 = DecimalType(38, 4)
     val binned = scored.withColumn("bin",
       least(floor(col("score") * lit(10.0)).cast("int"), lit(9)))
@@ -697,15 +697,11 @@ object LlmOps extends QueryModule {
       .withColumn("h", polyHash(col("tok")))
     val sigs =
       if (useUdaf) {
-        // TypedImperativeAggregate plans as ObjectHashAggregate, which by
-        // default abandons its hash map for sort-based aggregation after
-        // 128 distinct groups — and this groupBy has one group PER DOC.
-        // The buffer is a fixed 64 bytes, so even millions of in-flight
-        // groups are a few hundred MB per task at most: raise the
-        // threshold so the sketch aggregates hash-style like its builtin
-        // twin instead of paying a full sort of the token stream.
-        doc.sparkSession.conf.set(
-          "spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
+        // TypedImperativeAggregate plans as ObjectHashAggregate, which
+        // falls back to sort-based aggregation after Spark's default 128
+        // distinct groups per task — and this groupBy has one group PER
+        // DOC. The builder leaves that session conf alone: raising it here
+        // would leak into every later query of the session.
         tok.groupBy(col("doc_id"))
           .agg(graft.functions.MinHashSketch.minhash_sketch(col("h")).as("sig"))
           .select(col("doc_id") +: (0 until As.size).map(i =>
@@ -1780,31 +1776,6 @@ object LlmOps extends QueryModule {
       |    COUNT(1) AS n_terms
       |  FROM term GROUP BY 1, 2)""".stripMargin
 
-  /** The certified SIM-1 IVF pipeline (label-centroid cells, 2-probe
-    * search), shared verbatim by `sim1_ivf` (rounded/rendered output) and
-    * `ivf_eval` (the recall audit joins its raw (query, neighbor) pairs
-    * against brute-force truth). Returns the per-query top-3 as
-    * (query_id, rn, neighbor_id, score_raw). */
-  /** Lloyd-TRAINED coarse quantizer for the IVF family (r11, the r10
-    * verdict's task 2): two Lloyd rounds over the embeddings — k = 10
-    * deterministic seeds (vec_id < 10), squared-L2 assignment with the
-    * (dist asc, cid asc) tie-break, per-dim dec4-quantized exact-decimal
-    * mean updates — `kmeans_iter`'s certified discipline verbatim, so
-    * both engines hold bit-identical centroids at every round. Returns
-    * the round-2 centroid table (cell_label, ce: array<double>).
-    *
-    * This REPLACES the label-mean centroids the family trained on through
-    * r10: document labels explain almost no variance on this corpus, so
-    * label-mean cells measured recall@3 0.43 (IVF) / 0.37 (IVF-PQ) at
-    * nprobe=2 — the trained cells measure 0.93+ at the same probe budget
-    * (the audits `ivf_eval`/`ivf_pq_eval` now read the lift). Scale: each
-    * Lloyd round is one vectors × broadcast-k cross (the whitelisted
-    * assignment shape, argmin via a per-vector WindowGroupLimit) plus one
-    * 64-column map-side-combined aggregate — exactly two extra linear
-    * passes at any corpus size; at 100 TB retraining stays this batch job
-    * (republished via Snapshot) while STR-IVF maintains the lists
-    * between retrains. An empty cell (a seed losing every member) drops
-    * out of the group-by on both engines identically. */
   /** The bounded deterministic TRAINING sample of an embeddings table —
     * the quantizer family's 100 TB lever (r12 verdict task 1, the Faiss
     * train-on-sample story): quantizer metadata (Lloyd cells, PQ
@@ -1987,9 +1958,30 @@ object LlmOps extends QueryModule {
     s.read.parquet(dir)
   }
 
-  /** The Lloyd trainer over a caller-supplied TRAINING embeddings
-    * frame — a [[Population]]'s slice ([[centroidsFor]]); the full
-    * corpus is assigned against the trained table by [[ivfAssigned]]. */
+  /** Lloyd-TRAINED coarse quantizer for the IVF family (r11, the r10
+    * verdict's task 2): two Lloyd rounds over the training frame — k = 10
+    * deterministic seeds (vec_id < 10), squared-L2 assignment with the
+    * (dist asc, cid asc) tie-break, per-dim dec4-quantized exact-decimal
+    * mean updates — `kmeans_iter`'s certified discipline verbatim, so
+    * both engines hold bit-identical centroids at every round. Returns
+    * the round-2 centroid table (cell_label, ce: array<double>).
+    *
+    * This REPLACES the label-mean centroids the family trained on through
+    * r10: document labels explain almost no variance on this corpus, so
+    * label-mean cells measured recall@3 0.43 (IVF) / 0.37 (IVF-PQ) at
+    * nprobe=2 — the trained cells measure 0.93+ at the same probe budget
+    * (the audits `ivf_eval`/`ivf_pq_eval` now read the lift). Scale: each
+    * Lloyd round is one vectors × broadcast-k cross (the whitelisted
+    * assignment shape, argmin as a per-vector min(struct) aggregate)
+    * plus one 64-column map-side-combined aggregate — exactly two extra
+    * linear passes at any corpus size; at 100 TB retraining stays this
+    * batch job (republished via Snapshot) while STR-IVF maintains the
+    * lists between retrains. An empty cell (a seed losing every member)
+    * drops out of the group-by on both engines identically.
+    *
+    * The training frame is caller-supplied — a [[Population]]'s slice
+    * ([[centroidsFor]]); the full corpus is assigned against the trained
+    * table by [[ivfAssigned]]. */
   private def ivfKmeansCentroidsFrom(emb: DataFrame): DataFrame = {
     val dbl = transform(col("embedding"), x => x.cast("double"))
     val base = spread(emb, "vec_id").select(col("vec_id"), dbl.as("v"),
@@ -2044,9 +2036,12 @@ object LlmOps extends QueryModule {
     graft.operators.IvfAssign.ranked(vecs, cent)
   }
 
-  /** The certified SIM-1d IVF pipeline. `maxProbe` widens the probed-cell
-    * set; `raw = true` returns the SCORED candidate pool with its
-    * probe_rank (before the per-query top-k) — SIM-CURVE's input. */
+  /** The certified SIM-1d IVF pipeline (Lloyd-trained cells, 2-probe
+    * search), shared by `sim1_ivf`, `ivf_eval` and `ivf_curve`. Returns
+    * the per-query top-3 as (query_id, rn, neighbor_id, score_raw).
+    * `maxProbe` widens the probed-cell set; `raw = true` returns the
+    * SCORED candidate pool with its probe_rank (before the per-query
+    * top-k) — SIM-CURVE's input. */
   private def ivfRanked(s: SparkSession, d: String,
       maxProbe: Int = 2, raw: Boolean = false): DataFrame = {
     val assigned = ivfAssigned(s, d, centroidsFor(s, d, Full))
@@ -3455,8 +3450,9 @@ object LlmOps extends QueryModule {
     "ddp_minhash" -> ((s, d) => minhashNearDup(load(s, d, "documents"), useUdaf = false)),
 
     // Same declared query, signature built by the MinHashSketch
-    // TypedImperativeAggregate (SURVEY §2.6) — one mutable 8-slot buffer per
-    // doc instead of 8 builtin min aggregates. Identical oracle SQL.
+    // TypedImperativeAggregate (SURVEY §2.6), its only query — one mutable
+    // 8-slot buffer per doc instead of 8 builtin min aggregates. Identical
+    // oracle SQL.
     "ddp_minhash_udaf" -> ((s, d) => minhashNearDup(load(s, d, "documents"), useUdaf = true)),
 
     // ---- DDP-INCR: incremental near-dup admission — dedup a NEW batch
@@ -3508,7 +3504,7 @@ object LlmOps extends QueryModule {
     // near-dup graph + keeper election (see clusterAssign).
     "ddp_cluster" -> ((s, d) => {
       val doc = load(s, d, "documents")
-      clusterAssign(doc, minhashPairs(doc, useUdaf = true, capBuckets = true))
+      clusterAssign(doc, minhashPairs(doc, useUdaf = false, capBuckets = true))
     }),
 
     // ---- DDP-KEEPER: cross-source keeper election (`ddp_keeper_src`) —
@@ -3560,7 +3556,7 @@ object LlmOps extends QueryModule {
     // win — wrong trade.
     "pipeline_clean" -> ((s, d) => {
       val doc = load(s, d, "documents")
-      val clusters = clusterAssign(doc, minhashPairs(doc, useUdaf = true))
+      val clusters = clusterAssign(doc, minhashPairs(doc, useUdaf = false))
         .select(col("doc_id"), col("cluster_id"))
       val quality = doc.filter(col("n_chars") >= 100 &&
           size(split(col("text"), " ")) >= 20)
@@ -3641,18 +3637,6 @@ object LlmOps extends QueryModule {
       // Materialized once for both sides of the postings self-join;
       // inherits `spread`'s partitioning, so the join probe emitting the
       // 7M-row fan-out and the per-pair partial counts run wide.
-      // A df>=2 gram prefilter (singleton grams cannot form a pair, so a
-      // map-side-combined count + left-semi on (lang, gram) is result-
-      // identical) is the standard open-web move — on Zipf text most
-      // bigrams are singletons and the self-join inputs collapse. Measured
-      // HERE and rejected as the DEFAULT: this synthetic corpus has only
-      // 4,617 distinct bigrams and 99.98% of postings are df>=2, so the
-      // extra agg + semi-join + materialization bought nothing and cost 8%
-      // (8.8s vs 8.2s steady at sf0.1). The 100 TB reinstate is a CONFIG
-      // FLIP, not a rewrite: `spark.graft.ddp.ngram.dfPrefilter=true`
-      // routes through the filter (result-identity certified in
-      // PipelineOpsSpec — same pairs, same jaccards, both paths measured:
-      // flag off 8.2 s / on 8.8 s steady sf0.1).
       // NO explicit repartition around this checkpoint — measured both
       // placements and rejected both (steady sf0.1: plain 8.0 s, before
       // the checkpoint 7.9 s, after it 9.0 s). At this SF one posting
@@ -3666,13 +3650,7 @@ object LlmOps extends QueryModule {
       // (OptimizeSkewedJoin requires ENSURE_REQUIREMENTS shuffles), and
       // hot grams are THE hazard of a posting self-join on Zipf text —
       // plan-guarded in PlanGuardSpec with broadcast disabled.
-      val g0 = t.select(col("doc_id"), col("lang"), col("ng"), explode(col("grams")).as("gram"))
-      val g = (if (s.conf.getOption("spark.graft.ddp.ngram.dfPrefilter").exists(_.toBoolean))
-          g0.join(g0.groupBy(col("lang"), col("gram"))
-              .agg(count(lit(1)).as("df")).filter(col("df") >= 2)
-              .select(col("lang"), col("gram")),
-            Seq("lang", "gram"), "left_semi")
-        else g0)
+      val g = t.select(col("doc_id"), col("lang"), col("ng"), explode(col("grams")).as("gram"))
         .pinned
       val a = g.select(col("doc_id").as("d1"), col("lang").as("l1"),
         col("ng").as("n1"), col("gram").as("gr1"))
@@ -3708,9 +3686,8 @@ object LlmOps extends QueryModule {
     //      in both engines), minima compare lexicographically, so the
     //      fingerprint sets are engine-identical. Scale: postings are
     //      winnow-SPARSIFIED (~0.4× the gram postings feeding ddp_ngram)
-    //      and the join is the same AQE-skew-splittable shuffle shape;
-    //      the df-prefilter knob composes here exactly as there. The
-    //      per-doc window is position-ordered WITHIN doc (partitioned,
+    //      and the join is the same AQE-skew-splittable shuffle shape.
+    //      The per-doc window is position-ordered WITHIN doc (partitioned,
     //      frame-bounded) — no global sort anywhere. ----
     "ddp_winnow" -> ((s, d) => {
       val W = 4
@@ -3727,25 +3704,11 @@ object LlmOps extends QueryModule {
         .withColumnRenamed("pos", "p").withColumnRenamed("col", "h")
       val wd = Window.partitionBy(col("doc_id")).orderBy(col("p"))
         .rowsBetween(-(W - 1), 0)
-      val fps0 = g.withColumn("wmin", min(col("h")).over(wd))
+      val fps = g.withColumn("wmin", min(col("h")).over(wd))
         // full windows only — plus the last (partial) window of short docs
         .filter(col("p") >= W - 1 || col("p") === col("ng") - 1)
         .select(col("doc_id"), col("lang"), col("wmin")).distinct()
         .withColumn("nf", count(lit(1)).over(Window.partitionBy(col("doc_id"))))
-      // ddp_ngram's df>=2 prefilter, one level up: a fingerprint held by a
-      // single doc cannot form a pair, so a left-semi against the df>=2
-      // fingerprint set is result-identical (PipelineOpsSpec pins it) —
-      // `nf` is computed BEFORE the prune (jaccard denominators use the
-      // full fingerprint sets, exactly as the unfiltered join sees them).
-      // Same config flip, same rationale: pays off on open-web Zipf
-      // fingerprint postings, not on this synthetic corpus.
-      val fps = (if (s.conf.getOption("spark.graft.ddp.winnow.dfPrefilter")
-          .exists(_.toBoolean))
-        fps0.join(fps0.groupBy(col("lang"), col("wmin"))
-            .agg(count(lit(1)).as("df")).filter(col("df") >= 2)
-            .select(col("lang"), col("wmin")),
-          Seq("lang", "wmin"), "left_semi")
-      else fps0)
         .pinned
       val fa = fps.select(col("doc_id").as("d1"), col("lang").as("l1"),
         col("nf").as("f1"), col("wmin").as("w1"))
@@ -5369,20 +5332,7 @@ object LlmOps extends QueryModule {
           .as("score"),
         (col("lang") === "en").cast("long").as("pos"))
       def aucOf(scored: DataFrame, mdl: String): DataFrame = {
-        val perS = scored.groupBy(col("score")).agg(
-          count(lit(1)).as("ct"), sum(col("pos")).as("cpos"))
-        val withP = graft.operators.GlobalRank.attach(perS,
-          Seq(col("score").asc), None, Seq("ct" -> "cbefore"))
-        val one = withP.agg(
-          sum(col("cpos")).as("n_pos"),
-          sum(col("ct") - col("cpos")).as("n_neg"),
-          sum(col("cpos") * (lit(2L) * col("cbefore") + col("ct") + lit(1L)))
-            .as("r2pos"))
-        val u2 = col("r2pos") - col("n_pos") * (col("n_pos") + 1L)
-        val den = lit(2.0) * col("n_pos").cast("double") *
-          col("n_neg").cast("double")
-        val auc = u2.cast("double") /
-          when(den === 0.0, lit(null)).otherwise(den)
+        val (one, _, auc) = Eval.rankSumAuc(scored)
         one.select(lit(mdl).as("model"), col("n_pos"), col("n_neg"),
           dec4S(auc).as("auc"))
       }

@@ -12,7 +12,7 @@ class AnalyticsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("graph_triangles: oriented wedge count equals the naive 3-way join; census is consistent") {
-    val r = graft.queries.Analytics.all("graph_triangles")(spark, TestSpark.sfDir).head
+    val r = graft.queries.Analytics.all("graph_triangles")(spark, TestSpark.sfDir).head()
     val (nodes, edges, wedges, tris) =
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
     // naive recount: canonical a<b<c triangle join over the same edge set
@@ -82,7 +82,7 @@ class AnalyticsSpec extends AnyFunSuite {
     }
     // and on the real corpus the statistic is a finite non-negative number
     val real = graft.queries.Analytics.all("drift_psi")(spark, TestSpark.sfDir)
-      .head.getString(5).toDouble
+      .head().getString(5).toDouble
     assert(real >= 0.0 && real < 2.0)
   }
 
@@ -516,28 +516,5 @@ class AnalyticsSpec extends AnyFunSuite {
     p.filterNot(x => gotKeys.contains(x._1)).foreach { x =>
       assert(p.exists(q => dom(q, x)), s"non-member $x undominated")
     }
-  }
-
-  test("skyline: the sharded-prefix-max flag is result-identical (the data-sized-domain reinstate)") {
-    // SKY-1's declared scale fallback: when the price domain grows with
-    // the data, the distinct-price prefix max must shard (PACK-2's
-    // decomposition via operators/PrefixMax) instead of funneling through
-    // one task. The flag must change the PLAN only — identical frontier.
-    val key = "spark.graft.skyline.shardedPrefixMax"
-    def run() = SparkEntry.queries("skyline")(spark, TestSpark.sfDir)
-    val off = run()
-    spark.conf.set(key, "true")
-    try {
-      val on = run()
-      TestSpark.assertSameRows(off, on, "skyline sharded-prefix-max equivalence")
-      // Plan guard on the gated path: no unpartitioned logical Window
-      // survives — the PrefixMax locals are keyed by range-partition id.
-      val global = on.queryExecution.optimizedPlan.collect {
-        case w: org.apache.spark.sql.catalyst.plans.logical.Window
-          if w.partitionSpec.isEmpty => w
-      }
-      assert(global.isEmpty,
-        s"sharded skyline still has ${global.size} unpartitioned Window node(s)")
-    } finally spark.conf.unset(key)
   }
 }

@@ -229,7 +229,7 @@ class EdgeCorpusSpec extends AnyFunSuite {
     // ECDFs step 0→1 together — D is exactly 0 and the test cannot reject.
     val const = SparkEntry.queries("drift_ks")(spark, events(Seq(
       (1L, "2024-01-01 01:00:00", 5.0), (2L, "2024-01-01 02:00:00", 5.0),
-      (3L, "2024-01-01 03:00:00", 5.0)))).head
+      (3L, "2024-01-01 03:00:00", 5.0)))).head()
     assert(const.getString(2) == "0.0000" && !const.getBoolean(4), s"got $const")
     // ≤1µs span: mid == min ts, half A is empty, the ECDF is undefined —
     // the NULLIF guard must yield the engine-consistent empty result, not
@@ -251,7 +251,7 @@ class EdgeCorpusSpec extends AnyFunSuite {
     // distinct value, both ECDFs step 0→1 together — D is exactly 0.
     val const = SparkEntry.queries("vec_norm_drift")(spark, embeddings(Seq(
       (1L, Seq(3.0f, 4.0f)), (2L, Seq(4.0f, 3.0f)),
-      (3L, Seq(0.0f, 5.0f)), (4L, Seq(5.0f, 0.0f))))).head
+      (3L, Seq(0.0f, 5.0f)), (4L, Seq(5.0f, 0.0f))))).head()
     assert(const.getLong(0) == 2L && const.getLong(1) == 2L, s"got $const")
     assert(const.getString(2) == "0.0000" && !const.getBoolean(4), s"got $const")
     // Only even vec_ids: the odd half is empty and its ECDF undefined — the
@@ -295,7 +295,7 @@ class EdgeCorpusSpec extends AnyFunSuite {
         "l_quantity", "l_extendedprice", "l_discount", "l_tax",
         "l_returnflag", "l_linestatus", "l_shipdate")
       .write.mode("overwrite").parquet(s"$d/lineitem.parquet")
-    val r = SparkEntry.queries("graph_triangles")(spark, d).head
+    val r = SparkEntry.queries("graph_triangles")(spark, d).head()
     assert((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)) == ((0L, 0L, 0L, 0L)))
     // the same empty fact table must not crash the ANSI-division stats:
     // dq_benford keeps its 9-row spine with NULL frequencies (total is a
@@ -318,7 +318,7 @@ class EdgeCorpusSpec extends AnyFunSuite {
       .drop("ts_s")
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$d/events.parquet")
-    val r = SparkEntry.queries("ab_lift")(spark, d).head
+    val r = SparkEntry.queries("ab_lift")(spark, d).head()
     // both users are even -> treatment arm (parity 1) is empty
     assert(r.getLong(0) == 2 && r.getLong(2) == 0)
     assert(r.isNullAt(5) && r.isNullAt(6) && r.isNullAt(7), s"got $r")

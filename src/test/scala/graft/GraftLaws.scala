@@ -283,24 +283,6 @@ object GraftLaws extends Properties("graft.laws") {
   private val intervalGen = Gen.listOfN(30,
     Gen.zip(Gen.choose(0L, 60L), Gen.choose(0L, 25L)))
 
-  property("PrefixMax equals the single-window exclusive running max") =
-    forAll(intervalGen) { ivs =>
-      import org.apache.spark.sql.expressions.Window
-      val df = ivs.zipWithIndex.map { case ((k, v), i) =>
-        (i.toLong, k, v) }.toDF("id", "k", "v")
-      val sort = Seq(col("k").asc, col("id").asc)
-      val dist = graft.operators.PrefixMax
-        .attach(df, sort, "v", "pm", numParts = 5)
-        .select("id", "pm").collect()
-        .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
-      val ref = df.withColumn("pm", max(col("v"))
-          .over(Window.orderBy(sort: _*)
-            .rowsBetween(Window.unboundedPreceding, -1)))
-        .select("id", "pm").collect()
-        .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
-      dist == ref
-    }
-
   property("IslandMerge island ids equal the single-window labeling") =
     forAll(intervalGen) { ivs =>
       import org.apache.spark.sql.expressions.Window

@@ -73,7 +73,7 @@ class PipelineOpsSpec extends AnyFunSuite {
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     val totalTokens = graft.core.Tables.load(spark, sfDir, "documents")
       .select(size(split(col("text"), " ")).cast("long").as("n"))
-      .agg(sum(col("n"))).head.getLong(0)
+      .agg(sum(col("n"))).head().getLong(0)
     assert(rows.map(_._4).sum == totalTokens, "tokens lost or duplicated in packing")
     for ((g, bins) <- rows.groupBy(_._1)) {
       val ids = bins.map(_._2).sorted.toSeq
@@ -217,6 +217,20 @@ class PipelineOpsSpec extends AnyFunSuite {
       assert(clusters.select(col("cluster_id")).distinct().count() == 1,
         "the clique must collapse to one component under star edges")
     } finally spark.conf.unset("spark.graft.dedup.bucketCap")
+  }
+
+  test("query builders leave the session conf alone: ddp_minhash_udaf, ddp_cluster, pipeline_clean") {
+    // A conf a builder writes outlives its query: every later query of the
+    // Verify, Bench or test session would run under it.
+    val before = spark.conf.getAll
+    Seq("ddp_minhash_udaf", "ddp_cluster", "pipeline_clean").foreach { q =>
+      assert(SparkEntry.queries(q)(spark, sfDir).collect().nonEmpty, s"$q is empty")
+      val after = spark.conf.getAll
+      val set = after.toSet -- before.toSet
+      val unset = before.keySet -- after.keySet
+      assert(set.isEmpty && unset.isEmpty,
+        s"$q changed the session conf: set $set, unset $unset")
+    }
   }
 
   test("ivf_pq: shipped exact scores equal brute-force cosine; ADC is a true approximation") {
@@ -755,7 +769,7 @@ class PipelineOpsSpec extends AnyFunSuite {
     val corpus = graft.core.Tables.load(spark, sfDir, "documents")
     val nGrams = corpus
       .select(greatest(size(split(col("text"), " ")) - 2, lit(0)).as("ng"))
-      .agg(sum(col("ng"))).head.getLong(0)
+      .agg(sum(col("ng"))).head().getLong(0)
     val tC = corpus.select(col("doc_id"), split(col("text"), " ").as("ws"))
       .withColumn("nw", size(col("ws"))).filter(col("nw") >= 3)
       .withColumn("ng", col("nw") - 2)
@@ -771,32 +785,6 @@ class PipelineOpsSpec extends AnyFunSuite {
       s"winnowing must sparsify: $nFps fingerprints vs $nGrams grams")
     assert(SparkEntry.queries("ddp_winnow")(spark, sfDir).collect().nonEmpty,
       "gated ddp_winnow must produce pairs on the corpus")
-  }
-
-  test("ddp_winnow: the df>=2 fingerprint prefilter flag is result-identical") {
-    // Singleton fingerprints cannot form a pair; the left-semi prune must
-    // change the PLAN only — same pairs, same shared counts, same
-    // jaccards (nf is computed before the prune, so denominators match).
-    val key = "spark.graft.ddp.winnow.dfPrefilter"
-    def run() = SparkEntry.queries("ddp_winnow")(spark, sfDir)
-    val off = run()
-    spark.conf.set(key, "true")
-    try assertSameRows(off, run(), "ddp_winnow df-prefilter equivalence")
-    finally spark.conf.unset(key)
-  }
-
-  test("ddp_ngram: the df>=2 prefilter flag is result-identical (the 100 TB reinstate)") {
-    // Singleton (lang, gram) postings cannot form a cross-doc pair, so the
-    // config-gated left-semi prune (`spark.graft.ddp.ngram.dfPrefilter`)
-    // must change the PLAN only: same pairs, same shared-gram counts, same
-    // jaccards. This is what makes the measured-and-rejected-at-this-SF
-    // optimization a config flip at open-web scale instead of a rewrite.
-    val key = "spark.graft.ddp.ngram.dfPrefilter"
-    def run() = SparkEntry.queries("ddp_ngram")(spark, sfDir)
-    val off = run()
-    spark.conf.set(key, "true")
-    try assertSameRows(off, run(), "ddp_ngram df-prefilter equivalence")
-    finally spark.conf.unset(key)
   }
 
   test("pipeline_corpus: census equals a stage replay grounded in the certified pieces") {

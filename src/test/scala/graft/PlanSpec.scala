@@ -16,8 +16,8 @@ class PlanSpec extends AnyFunSuite {
     val execs = df.queryExecution.executedPlan.collect { case g: GraftSequenceExec => g }
     assert(execs.nonEmpty, df.queryExecution.executedPlan.toString)
     assert(df.count() == 1000)
-    val expected = spark.range(5, 1005).agg(sum(col("id"))).head.getLong(0)
-    assert(df.agg(sum(col("id"))).head.getLong(0) == expected)
+    val expected = spark.range(5, 1005).agg(sum(col("id"))).head().getLong(0)
+    assert(df.agg(sum(col("id"))).head().getLong(0) == expected)
   }
 
   test("PushFilterIntoGraftSequence folds id bounds into the leaf") {

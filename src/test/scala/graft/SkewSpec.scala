@@ -19,10 +19,10 @@ class SkewSpec extends AnyFunSuite {
     assertSameRows(salted, direct, "salted vs direct aggregation")
     // The partial stage really fans the hot key out across salt groups.
     val partialGroups = e
-      .withColumn("_salt", pmod(hash(struct(e.columns.map(col): _*)), lit(16)))
+      .withColumn("_salt", pmod(hash(struct(e.columns.toSeq.map(col): _*)), lit(16)))
       .groupBy(col("event_type"), col("_salt")).count()
       .groupBy(col("event_type")).count()
-      .agg(min(col("count"))).head.getLong(0)
+      .agg(min(col("count"))).head().getLong(0)
     assert(partialGroups > 1, "each key should split across multiple salt buckets")
   }
 

@@ -22,7 +22,7 @@ class StatsSpec extends AnyFunSuite {
       // statistic. The query's output is tie-safe rounded to 4 decimals,
       // so the bound is the half-ulp of that rounding (5e-5) plus algebra
       // slack — anything structurally wrong is off by far more.
-      val ref = li.agg(corr(col(a), col(b))).head.getDouble(0)
+      val ref = li.agg(corr(col(a), col(b))).head().getDouble(0)
       assert(math.abs(c - ref) < 6e-5, s"($a,$b): $c vs builtin $ref")
       assert(math.abs(c) <= 1.0 + 1e-9)
     }
@@ -176,7 +176,7 @@ class StatsSpec extends AnyFunSuite {
   }
 
   test("ab_lift: z-score reconstructs from the reported counts") {
-    val r = graft.queries.Stats.all("ab_lift")(spark, TestSpark.sfDir).head
+    val r = graft.queries.Stats.all("ab_lift")(spark, TestSpark.sfDir).head()
     val (n0, c0, n1, c1) = (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
     assert(n0 > 0 && n1 > 0 && c0 <= n0 && c1 <= n1)
     val (r0, r1) = (c0.toDouble / n0, c1.toDouble / n1)
@@ -221,7 +221,7 @@ class StatsSpec extends AnyFunSuite {
     val slack = 5e-5 * n + 1e-6
     rows.foreach { case (v, (mean, std, zs, zz)) =>
       val Array(bMean, bStd) = li.agg(avg(col(v)), stddev(col(v)))
-        .head.toSeq.map(_.asInstanceOf[Double]).toArray
+        .head().toSeq.map(_.asInstanceOf[Double]).toArray
       assert(math.abs(mean - bMean) < 6e-5, s"$v mean $mean vs $bMean")
       assert(math.abs(std - bStd) < 6e-5, s"$v std $std vs $bStd")
       assert(math.abs(zs) <= slack, s"$v sum(z) = $zs")

@@ -91,7 +91,7 @@ class StorageSpec extends AnyFunSuite {
     val dayRaw = datediff(col("o_orderdate"), lit("1992-01-01").cast("timestamp")).cast("long")
     val (ckLo, ckHi, dLo, dHi) = {
       val r = orders.agg(min(col("o_custkey")), max(col("o_custkey")),
-        min(dayRaw), max(dayRaw)).head
+        min(dayRaw), max(dayRaw)).head()
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
     }
     def norm8(c: org.apache.spark.sql.Column, lo: Long, hi: Long) =

@@ -141,7 +141,7 @@ class StreamingSpec extends AnyFunSuite {
     // The batch twin (no watermark) sees all 4 events: 3 in the 10:00 window.
     val batchN = StreamOps.tumbling(spark.read.parquet(d.toString))
       .filter(col("window_start") === lit(Timestamp.valueOf("2024-06-01 10:00:00")))
-      .select("n_events").head.getLong(0)
+      .select("n_events").head().getLong(0)
     assert(batchN == 3L, "batch (no watermark) must include the late event")
   }
 
@@ -186,7 +186,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed.select("event_id").distinct().count() == 3L)
     // First-seen row wins: event 2 keeps its original 10:01 stamp.
     val t2 = streamed.filter(col("event_id") === 2L)
-      .head.getTimestamp(1).toString
+      .head().getTimestamp(1).toString
     assert(t2.startsWith("2024-06-01 10:01"), s"kept wrong copy: $t2")
   }
 
@@ -340,7 +340,7 @@ class StreamingSpec extends AnyFunSuite {
         1700000000000L + i * 60000)
     }
     val sentinelTs = new java.sql.Timestamp(
-      eventsBatch.agg(max(col("ts"))).head.getTimestamp(0).getTime + 3 * 3600 * 1000L)
+      eventsBatch.agg(max(col("ts"))).head().getTimestamp(0).getTime + 3 * 3600 * 1000L)
     writeSlice(ev((999999L, sentinelTs.toString.substring(0, 19), 999999L, "c", 0.0)),
       d, "slice_99", 1700000300000L)
     val stream = spark.readStream.schema(eventsBatch.schema)
@@ -371,7 +371,7 @@ class StreamingSpec extends AnyFunSuite {
         1700000000000L + i * 60000)
     }
     val sentinelTs = new java.sql.Timestamp(
-      eventsBatch.agg(max(col("ts"))).head.getTimestamp(0).getTime + 3 * 3600 * 1000L)
+      eventsBatch.agg(max(col("ts"))).head().getTimestamp(0).getTime + 3 * 3600 * 1000L)
     writeSlice(ev((999999L, sentinelTs.toString.substring(0, 19), 999999L, "c", 0.0)),
       d, "slice_99", 1700000300000L)
     def stream = spark.readStream.schema(eventsBatch.schema)
@@ -686,7 +686,7 @@ class StreamingSpec extends AnyFunSuite {
     // indistinguishable from having streamed everything.
     val mid = eventsBatch.agg(
       percentile_approx(unix_micros(col("ts")), lit(0.5), lit(10000)))
-      .head.getLong(0)
+      .head().getLong(0)
     val firstHalf = eventsBatch.filter(unix_micros(col("ts")) <= mid)
     val rest = eventsBatch.filter(unix_micros(col("ts")) > mid)
     assert(firstHalf.count() > 0 && rest.count() > 0)
@@ -1716,7 +1716,7 @@ class StreamingSpec extends AnyFunSuite {
       java.nio.file.Files.writeString(queue.resolve(name),
         lines.mkString("\n") + "\n")
     val cols = eventsBatch.columns.map(col)
-    def loaded() = StreamOps.readStore(spark, out).select(cols: _*)
+    def loaded() = StreamOps.readStore(spark, out).select(cols.toSeq: _*)
 
     // Arrival wave 1: two manifests (one micro-batch each, slices 0/1).
     notify("n0.txt", s"$replayDir/slice_00.parquet")
@@ -1748,7 +1748,7 @@ class StreamingSpec extends AnyFunSuite {
     // Batch-equivalence with the LIST-polling source over the same files.
     val polled = StreamOps.drainToMemory(replayStream, "ntfy_polled",
       org.apache.spark.sql.streaming.OutputMode.Append)
-    assertSameRows(loaded(), polled.select(cols: _*),
+    assertSameRows(loaded(), polled.select(cols.toSeq: _*),
       "notification-driven load vs LIST-polling file source")
   }
 
@@ -2045,7 +2045,7 @@ class StreamingSpec extends AnyFunSuite {
       "the compaction must have published a new version")
     StreamOps.runNotifiedLoad(spark, queue.toString, eventsBatch.schema, out, ckpt)
     assertSameRows(
-      StreamOps.readStore(spark, out).select(eventsBatch.columns.map(col): _*),
+      StreamOps.readStore(spark, out).select(eventsBatch.columns.toSeq.map(col): _*),
       eventsBatch.filter(col("event_id") % 4 < 2),
       "every announced row exactly once after the redelivery")
   }
